@@ -242,6 +242,20 @@ def test_partitions_for_size_rule():
     assert _partitions_for_size((1 << 59), floor) == 1 << 20  # hard cap
 
 
+def test_coerce_fails_loudly_on_uncoercible_column():
+    from pyspark.sql import types as T
+
+    from tgist_features_spark.operators.asof import _coerce
+
+    fields = [T.StructField("n", T.LongType()), T.StructField("x", T.DoubleType())]
+    ok = _coerce(pd.DataFrame({"n": [1.0, np.nan], "x": [1, 2]}), fields)
+    assert str(ok["n"].dtype) == "Int64" and ok["n"].isna().tolist() == [False, True]
+    assert str(ok["x"].dtype) == "float64"
+    bad = pd.DataFrame({"n": ["seven", "8"], "x": [1.0, 2.0]})
+    with pytest.raises(TypeError, match=r"'n'.*Int64"):
+        _coerce(bad, fields)
+
+
 def test_asof_num_partitions_rejects_bad_string(spark, tiny_pdf):
     import pytest as _pytest
 

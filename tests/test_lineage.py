@@ -143,3 +143,122 @@ def test_stale_partition_cleared_for_zero_input_bucket(spark, tiny_pdf, io):
     b3 = m[(m["snapshot_id"] == "snap-s2") & (m["bucket"] == 3)]
     assert len(b3) == 1 and int(b3["rows_out"].iloc[0]) == 0
     assert int(b3["rows_in"].iloc[0]) == 0
+
+
+def _jobs_in_group(spark, group: str, fn) -> int:
+    """Run ``fn`` with its Spark jobs tagged ``group``; return the job count."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_job_budget_and_observed_figures_match_disk(spark, tiny_pdf, io):
+    """crash -> resume -> rerun runs one manifest read, one feature write
+    (range sampling + shuffle map + write) and one manifest append each;
+    the manifest's observed figures equal a read-back of what is on disk."""
+    from pyspark.sql import functions as F
+
+    from tgist_features_spark.functions.timeu import us
+
+    df = transcripts_df(spark, tiny_pdf)
+    snap = "snap-jobs"
+    budget = {"crash": (3, 4), "resume": (None, 5), "rerun": (None, 1)}
+    for name, (fail, max_jobs) in budget.items():
+        n_jobs = _jobs_in_group(
+            spark, f"lineage-{name}",
+            lambda: run_incremental(spark, io, df, snap, run_id=name,
+                                    n_buckets=8, fail_after_buckets=fail),
+        )
+        assert n_jobs <= max_jobs, f"{name}: {n_jobs} jobs > {max_jobs}"
+
+    m = spark.read.parquet(io.path("manifest")).toPandas()
+    assert sorted(m["bucket"]) == list(range(8))
+    disk = {
+        r["bucket"]: (r["n"], r["wm"])
+        for r in read_features(io)
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("n"), F.max(us("ts")).alias("wm"))
+        .collect()
+    }
+    for r in m.itertuples():
+        n, wm = disk.get(r.bucket, (0, None))
+        assert (r.rows_in, r.rows_out) == (n, n), f"bucket {r.bucket}"
+        if n:
+            assert r.watermark_us == wm, f"bucket {r.bucket}"
+        else:
+            assert np.isnan(r.watermark_us), f"bucket {r.bucket}"
+    assert m["rows_out"].sum() == len(tiny_pdf)
+
+
+def test_session_overwrite_mode_untouched(spark, tiny_pdf, io):
+    """The dynamic overwrite is a per-write option: a session set to static
+    stays static, and no library code sets the session-wide mode."""
+    import pathlib
+
+    import tgist_features_spark
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    try:
+        df = transcripts_df(spark, tiny_pdf)
+        run_incremental(spark, io, df, "snap-conf", run_id="r1",
+                        n_buckets=4, fail_after_buckets=2)
+        run_incremental(spark, io, df, "snap-conf", run_id="r2", n_buckets=4)
+        assert spark.conf.get(key).lower() == "static"
+        # the resume kept the crash run's buckets: the overwrite was dynamic
+        assert read_features(io).count() == len(tiny_pdf)
+    finally:
+        spark.conf.unset(key)
+    pkg = pathlib.Path(tgist_features_spark.__file__).parent
+    setters = [
+        f"{p}:{i}"
+        for p in pkg.rglob("*.py")
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if f'conf.set("{key}"' in line
+    ]
+    assert setters == []
+
+
+def test_manifest_layout(spark, tiny_pdf, io):
+    """One part file per append; a zero-row bucket's null watermark
+    round-trips; done_buckets returns only the asked snapshot's buckets,
+    sorted and unique."""
+    import glob
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    df = transcripts_df(spark, tiny_pdf)
+
+    def parts():
+        return sorted(glob.glob(io.path("manifest") + "/part-*.parquet"))
+
+    n_buckets = 64  # far more buckets than conversations -> some are empty
+    run_incremental(spark, io, df, "snap-x", run_id="r1",
+                    n_buckets=n_buckets, fail_after_buckets=40)
+    assert len(parts()) == 1
+    run_incremental(spark, io, df, "snap-x", run_id="r2", n_buckets=n_buckets)
+    assert len(parts()) == 2
+    run_incremental(spark, io, df, "snap-x", run_id="r3", n_buckets=n_buckets)
+    assert len(parts()) == 2, "a no-op rerun appends nothing"
+
+    t = pq.read_table(parts())
+    assert t.schema.field("watermark_us").type == "int64"
+    m = t.to_pandas()
+    empties = m[m["rows_out"] == 0]
+    assert len(empties) > 0, "fixture should leave some buckets empty"
+    assert empties["watermark_us"].isna().all()
+    assert m.loc[m["rows_out"] > 0, "watermark_us"].notna().all()
+
+    run_incremental(spark, io, df, "snap-y", run_id="r4",
+                    n_buckets=4, fail_after_buckets=2)
+    # overlapping runs can record a bucket twice: dedupe on read
+    shutil.copy(parts()[0], io.path("manifest") + "/part-dup.parquet")
+    assert done_buckets(io, "snap-x") == list(range(n_buckets))
+    assert done_buckets(io, "snap-y") == [0, 1]
+    assert done_buckets(io, "snap-none") == []

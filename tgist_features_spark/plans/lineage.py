@@ -18,13 +18,26 @@ Failure model: a crash mid-bucket leaves parquet part-files without a
 manifest row; the rerun overwrites that bucket's directory (dynamic
 partition overwrite) before re-appending — at-least-once write, exactly-
 once visibility through the manifest.
-"""
 
+Cost model: one run is one manifest read, one feature write and one
+manifest append — nothing else launches a Spark job. The per-bucket
+manifest figures are ``Observation`` metrics of the feature write itself
+(no count over the input, no read-back of the written partitions). The
+observation sits on the frame being written, ABOVE the range exchange of
+``canonical_order``: there it runs in the write's result stage, where
+Spark applies each partition's metric update exactly once. Observed on
+the input instead, it counts every row twice — the ``repartitionByRange``
+sampling job re-runs everything below the exchange and the accumulator
+adds both runs. ``tests/test_lineage.py`` pins the job budget and checks
+the observed figures against a read-back of the written partitions.
+"""
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from tgist_features_spark.functions.timeu import us
 from tgist_features_spark.plans.backfill import turn_features
@@ -40,6 +53,7 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("watermark_us", T.LongType(), True),
     ]
 )
+_MANIFEST_ARROW = to_arrow_schema(MANIFEST_SCHEMA)
 
 FEATURES_TABLE = "features"
 MANIFEST_TABLE = "manifest"
@@ -50,16 +64,29 @@ def bucket_of(col: str, n_buckets: int):
 
 
 def done_buckets(io: TableIO, snapshot_id: str) -> list[int]:
+    """Sorted, unique buckets the manifest records for ``snapshot_id``.
+    One job: the manifest holds at most n_buckets rows per snapshot, so
+    the dedupe runs on the driver instead of behind a shuffle."""
     if not io.exists(MANIFEST_TABLE):
         return []
-    m = io.spark.read.parquet(io.path(MANIFEST_TABLE))
     rows = (
-        m.filter(F.col("snapshot_id") == snapshot_id)
+        io.spark.read.schema(MANIFEST_SCHEMA)
+        .parquet(io.path(MANIFEST_TABLE))
+        .filter(F.col("snapshot_id") == snapshot_id)
         .select("bucket")
-        .distinct()
         .collect()
     )
-    return sorted(r["bucket"] for r in rows)
+    return sorted({r["bucket"] for r in rows})
+
+
+def _bucket_metrics(pending: list[int]) -> list:
+    """Per pending bucket: its row count and max event time (epoch us)."""
+    metrics = []
+    for b in pending:
+        in_b = F.col("bucket") == F.lit(b)
+        metrics.append(F.count_if(in_b).alias(f"n_{b}"))
+        metrics.append(F.max(F.when(in_b, us("ts"))).alias(f"wm_{b}"))
+    return metrics
 
 
 def run_incremental(
@@ -75,12 +102,16 @@ def run_incremental(
     """Compute + sink per-turn features for every bucket not yet in the
     manifest for this input snapshot. Returns a small summary dict.
 
+    Each bucket's ``rows_out`` and ``watermark_us`` come from one
+    ``Observation`` on the written frame. ``turn_features`` emits exactly
+    one row per input turn, so ``rows_in == rows_out`` by construction and
+    the manifest takes both from that same observed count.
+
     ``fail_after_buckets`` (tests only) simulates a crash by processing
     just the first K pending buckets — manifest rows exist only for them,
     exactly like a mid-run kill between bucket commits.
     """
     done = set(done_buckets(io, snapshot_id))
-    src = transcripts.withColumn("bucket", bucket_of("conv_id", n_buckets))
     pending = sorted(set(range(n_buckets)) - done)
     if fail_after_buckets is not None:
         pending = pending[:fail_after_buckets]
@@ -88,80 +119,58 @@ def run_incremental(
         return {"snapshot_id": snapshot_id, "buckets_done": sorted(done),
                 "buckets_run": [], "rows_out": 0}
 
-    todo = src.filter(F.col("bucket").isin([int(b) for b in pending]))
-    rows_in_by_bucket = {
-        r["bucket"]: r["n"]
-        for r in todo.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    feats = turn_features(todo.drop("bucket"), gap_s=gap_s).withColumn(
-        "bucket", bucket_of("conv_id", n_buckets)
+    todo = transcripts.filter(bucket_of("conv_id", n_buckets).isin(pending))
+    obs = Observation()
+    feats = (
+        turn_features(todo, gap_s=gap_s)
+        .withColumn("bucket", bucket_of("conv_id", n_buckets))
+        .observe(obs, *_bucket_metrics(pending))
     )
-
     # overwrite exactly the pending bucket partitions (crash-safe rerun),
-    # leaving completed buckets untouched; restore the session-level mode
-    # afterwards so other writers keep static-overwrite semantics
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        feats.write.mode("overwrite").partitionBy("bucket").parquet(
-            io.path(FEATURES_TABLE)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    # leaving completed buckets untouched; a per-write option, so other
+    # writers on the session keep their own overwrite mode
+    (
+        feats.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(io.path(FEATURES_TABLE))
+    )
+    seen = obs.get
+    rows_out = {b: int(seen[f"n_{b}"]) for b in pending}
 
-    # a pending bucket with ZERO input rows is never touched by the dynamic
+    # a pending bucket with ZERO rows is never touched by the dynamic
     # partition overwrite, so a PRIOR snapshot's data could linger in its
-    # directory and pollute both read_features and the read-back stats —
-    # clear such directories explicitly (the Iceberg form of this is the
-    # REPLACE semantics of the snapshot commit)
-    pending_with_rows = [b for b in pending if rows_in_by_bucket.get(b, 0) > 0]
+    # directory and pollute read_features — clear such directories
+    # explicitly (the Iceberg form of this is the REPLACE semantics of the
+    # snapshot commit)
     for b in pending:
-        if b not in rows_in_by_bucket:
-            io.delete_partition(FEATURES_TABLE, f"bucket={int(b)}")
+        if rows_out[b] == 0:
+            io.delete_partition(FEATURES_TABLE, f"bucket={b}")
 
-    # manifest stats come from READING BACK the bucket partitions just
-    # written (partition-pruned scan), not from re-running the feature plan:
-    # the expensive plan executes exactly once (the sink write above), and
-    # the manifest records what is actually on disk — no drift window.
-    # explicit schema: when every pending bucket had zero input rows the
-    # write produced no part files, and schema inference would fail
-    stat_rows: dict = {}
-    if pending_with_rows:
-        written = (
-            io.spark.read.schema(feats.schema)
-            .parquet(io.path(FEATURES_TABLE))
-            .filter(F.col("bucket").isin([int(b) for b in pending_with_rows]))
-        )
-        stat_rows = {
-            int(r["bucket"]): r
-            for r in written.groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("rows_out"),
-                F.max(us("ts")).alias("watermark_us"),
-            )
-            .collect()
-        }
-    # every pending bucket gets a manifest row — including zero-input
+    # every pending bucket gets a manifest row — including zero-row
     # buckets (rows_out=0, watermark NULL), which otherwise would be
     # re-selected as pending on every resume forever
-    manifest_rows = [
-        (
-            run_id,
-            snapshot_id,
-            int(b),
-            int(rows_in_by_bucket.get(b, 0)),
-            int(stat_rows[b]["rows_out"]) if b in stat_rows else 0,
-            stat_rows[b]["watermark_us"] if b in stat_rows else None,
-        )
-        for b in pending
-    ]
-    stats = spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA)
-    stats.write.mode("append").parquet(io.path(MANIFEST_TABLE))
+    manifest = pa.table(
+        {
+            "run_id": [run_id] * len(pending),
+            "snapshot_id": [snapshot_id] * len(pending),
+            "bucket": pending,
+            "rows_in": [rows_out[b] for b in pending],
+            "rows_out": [rows_out[b] for b in pending],
+            "watermark_us": [seen[f"wm_{b}"] for b in pending],
+        },
+        schema=_MANIFEST_ARROW,
+    )
+    # one part file per append; an Arrow table needs no per-row Python
+    # conversion
+    spark.createDataFrame(manifest).coalesce(1).write.mode("append").parquet(
+        io.path(MANIFEST_TABLE)
+    )
     return {
         "snapshot_id": snapshot_id,
         "buckets_done": sorted(done),
-        "buckets_run": sorted(pending),
-        "rows_out": sum(r[4] for r in manifest_rows),
+        "buckets_run": pending,
+        "rows_out": sum(rows_out.values()),
     }
 
 
