@@ -176,9 +176,7 @@ def _wait_for_quiet_host(threshold: float = 3.0, max_wait_s: int = 300) -> float
 
 
 def _backfill(master: str) -> dict:
-    env = dict(os.environ)
-    env["SPARK_GRAFT_CPUS"] = master.split("[")[1].rstrip("]")
-    cores = int(env["SPARK_GRAFT_CPUS"])
+    cores = int(master.split("[")[1].rstrip("]"))
     res = subprocess.run(
         [sys.executable, os.path.join(REPO, "jobs", "backfill_features.py"),
          "--input", os.path.join(CORPUS_DIR, "transcripts"),
@@ -186,21 +184,21 @@ def _backfill(master: str) -> dict:
          "--master", master,
          "--shuffle-partitions", str(2 * cores),
          "--repeat", "5"],
-        check=True, capture_output=True, text=True, env=env,
+        check=True, capture_output=True, text=True,
     )
     return json.loads(res.stdout.strip().splitlines()[-1])
 
 
 def _skew_asof(spark) -> dict:
-    """Plain merge-scan vs skew-adaptive asof on a DELIBERATELY skewed
+    """Plain merge-scan vs ``asof_join_auto`` on a DELIBERATELY skewed
     corpus: THREE QUARTERS of the bench conversations are collapsed into
-    ONE hot conversation (~2.5M build rows at the default corpus size —
-    ~1.5x the plain path's ~64 MB/task budget, clearly inside the regime
-    the salted path exists for; at exactly 1x budget the two paths tie by
-    design of the threshold). Both variants run on identical inputs; walls
-    are second-pass (steady). The auto router sends only the hot entity
-    through time-slicing, so auto <= plain is the acceptance bar
-    (measured ~2.2x: plain 17.2s vs auto 7.8s)."""
+    ONE hot conversation (~2.5M build rows at the default corpus size).
+    Its rows carry ~15 B of payload (conv_id, ts, turn_idx), ~37 MB in
+    all, under one task's budget (``ASOF_TASK_BYTES``, 64 MB): at this
+    size ``asof_join_auto`` slices nothing and the section measures its
+    routing overhead; a larger corpus or wider rows cross the budget.
+    Both variants run on identical inputs; walls are second-pass
+    (steady)."""
     from pyspark.sql import functions as F  # noqa: PLC0415
 
     from tgist_features_spark.operators.asof import (  # noqa: PLC0415

@@ -3,7 +3,7 @@
 
     spark-submit --master local[32] --py-files tgist_features_spark.zip \
         jobs/backfill_features.py --input /path/transcripts_parquet \
-        --queries /path/queries_parquet --output /path/out --salted
+        --queries /path/queries_parquet --output /path/out
 
 Reads the transcript table, computes the leakage-free per-turn feature
 vectors, as-of backfills the probe side, writes the result (parquet or the
@@ -33,13 +33,6 @@ def main() -> None:
     ap.add_argument("--output", default="noop", help="output path or 'noop'")
     ap.add_argument("--master", default=None)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
-    ap.add_argument("--salted", action="store_true",
-                    help="skew-adaptive as-of (salt hot conversations)")
-    ap.add_argument("--hot-threshold", type=int, default=2_000_000,
-                    help="rows-per-conversation above which the salted "
-                         "time-sliced path kicks in (≈ a partition budget; "
-                         "the plain merge-scan handles anything smaller)")
-    ap.add_argument("--slice-width-s", type=int, default=3600)
     ap.add_argument("--gap-s", type=float, default=1800.0)
     ap.add_argument("--repeat", type=int, default=1,
                     help="time N passes, report the best of the warm ones")
@@ -68,12 +61,7 @@ def main() -> None:
             # equivalent: sink the features table, then scan it) — also
             # required by the skew-adaptive path's multiple consumers
             feats = feats.persist()
-            out = backfill_features(
-                feats,
-                probes,
-                slice_width_s=args.slice_width_s,
-                hot_threshold=args.hot_threshold if args.salted else None,
-            )
+            out = backfill_features(feats, probes)
         else:
             out = feats
         if args.output == "noop":
@@ -95,11 +83,11 @@ def main() -> None:
             {
                 "job": "backfill_features",
                 "master": spark.sparkContext.master,
+                "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
                 "turns": n_turns,
                 "wall_s": round(wall, 3),
                 "turns_per_sec": round(n_turns / wall, 1),
                 "walls_all": [round(w, 3) for w in walls],
-                "salted": args.salted,
             }
         )
     )

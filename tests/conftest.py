@@ -1,13 +1,9 @@
 from __future__ import annotations
 
-import os
-
 import pytest
 
-os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-
-from tgist_features_spark import get_spark  # noqa: E402
-from tgist_features_spark.sources.corpus import (  # noqa: E402
+from tgist_features_spark import get_spark
+from tgist_features_spark.sources.corpus import (
     generate_queries_pdf,
     generate_transcripts_pdf,
 )
@@ -34,3 +30,19 @@ def small_pdf():
 @pytest.fixture(scope="session")
 def queries_pdf(small_pdf):
     return generate_queries_pdf(small_pdf, n_queries=400, seed=43)
+
+
+@pytest.fixture
+def hot_above(monkeypatch):
+    """``hot_above(build, rows)`` budgets one as-of merge-scan task at
+    ``rows`` rows of ``build`` (all of one payload width), so that entities
+    with more than ``rows`` build rows are hot in ``asof_join_auto``."""
+    from tgist_features_spark.operators import asof
+
+    def apply(build, rows):
+        widths = build.select(asof._row_bytes(build).alias("w")).distinct().collect()
+        assert len(widths) == 1, widths
+        monkeypatch.setattr(asof, "ASOF_TASK_BYTES", rows * widths[0]["w"])
+        return build
+
+    return apply

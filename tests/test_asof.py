@@ -1,14 +1,18 @@
 """As-of join: engine vs pandas.merge_asof oracle vs DuckDB ASOF JOIN,
-plain and salted, all directions/variants, edge cases."""
+plain and skew-safe (``asof_join_auto``), all directions/variants, edge
+cases, and the skew-safe path's plan shape, job budget and slice sizes."""
 
 from __future__ import annotations
+
+import re
 
 import duckdb
 import numpy as np
 import pandas as pd
 import pytest
 
-from tgist_features_spark.operators.asof import asof_join, asof_join_salted
+import tgist_features_spark.operators.asof as asof_ops
+from tgist_features_spark.operators.asof import asof_join, asof_join_auto
 from tgist_features_spark.oracle.pandas_oracle import oracle_backfill
 from tgist_features_spark.plans.backfill import backfill_features, turn_features
 from tgist_features_spark.sources.corpus import queries_df, transcripts_df
@@ -48,12 +52,27 @@ def test_backward(spark, feats, oracle_feats, queries_pdf):
     _check(backfill_features(feats, q).toPandas(), oracle_backfill(oracle_feats, queries_pdf))
 
 
-def test_backward_salted_equals_plain(spark, feats, oracle_feats, queries_pdf):
+@pytest.fixture
+def hot20(hot_above, small_pdf):
+    """``hot20(build)``: conversations with more than 20 build rows are hot;
+    ``small_pdf`` holds both hot and cold ones, so they share one
+    exchange."""
+    sizes = small_pdf.groupby("conv_id").size()
+    assert (sizes > 20).any() and (sizes <= 20).any()
+    return lambda build: hot_above(build, 20)
+
+
+def _is_sliced(df) -> bool:
+    """Did ``asof_join_auto`` take the time-sliced path (not plain)?"""
+    return "__slice" in df._jdf.queryExecution().analyzed().toString()
+
+
+def test_backward_salted_equals_plain(spark, feats, oracle_feats, queries_pdf, hot20):
     q = queries_df(spark, queries_pdf)
-    _check(
-        backfill_features(feats, q, salted=True, slice_width_s=600).toPandas(),
-        oracle_backfill(oracle_feats, queries_pdf),
-    )
+    hot20(feats.select("conv_id", "ts", "turn_idx", "feature_vec"))
+    out = backfill_features(feats, q)
+    assert _is_sliced(out)
+    _check(out.toPandas(), oracle_backfill(oracle_feats, queries_pdf))
 
 
 @pytest.mark.parametrize("direction", ["forward"])
@@ -71,18 +90,19 @@ def test_forward(spark, feats, oracle_feats, queries_pdf, direction):
     _check(got, oracle_backfill(oracle_feats, queries_pdf, direction=direction))
 
 
-def test_forward_salted(spark, feats, oracle_feats, queries_pdf):
-    got = asof_join_salted(
+def test_forward_salted(spark, feats, oracle_feats, queries_pdf, hot20):
+    got = asof_join_auto(
         queries_df(spark, queries_pdf),
-        feats.select("conv_id", "ts", "turn_idx", "feature_vec"),
+        hot20(feats.select("conv_id", "ts", "turn_idx", "feature_vec")),
         by="conv_id",
         left_on="query_ts",
         right_on="ts",
         direction="forward",
         value_cols=["ts", "turn_idx", "feature_vec"],
-        slice_width_s=600,
-    ).toPandas()
-    _check(got, oracle_backfill(oracle_feats, queries_pdf, direction="forward"))
+    )
+    assert _is_sliced(got)
+    _check(got.toPandas(),
+           oracle_backfill(oracle_feats, queries_pdf, direction="forward"))
 
 
 @pytest.mark.parametrize("tol", [60.0, 3600.0])
@@ -185,21 +205,19 @@ def test_duplicate_ts_tiebreak(spark):
     assert set(fwd["v"]) == {12.0}
 
 
-def test_auto_skew_split_equals_plain(spark, feats, oracle_feats, queries_pdf):
-    """asof_join_auto: hot entities salted, cold plain — same results."""
-    from tgist_features_spark.operators.asof import asof_join_auto
-
+def test_auto_skew_split_equals_plain(spark, feats, oracle_feats, queries_pdf, hot20):
+    """asof_join_auto: hot entities time-sliced, cold ones in slice 0, one
+    exchange — same results as the oracle."""
     got = asof_join_auto(
         queries_df(spark, queries_pdf),
-        feats.select("conv_id", "ts", "turn_idx", "feature_vec"),
+        hot20(feats.select("conv_id", "ts", "turn_idx", "feature_vec")),
         by="conv_id",
         left_on="query_ts",
         right_on="ts",
         value_cols=["ts", "turn_idx", "feature_vec"],
-        hot_threshold=20,   # low threshold so both paths are exercised
-        slice_width_s=600,
-    ).toPandas()
-    _check(got, oracle_backfill(oracle_feats, queries_pdf))
+    )
+    assert _is_sliced(got)
+    _check(got.toPandas(), oracle_backfill(oracle_feats, queries_pdf))
 
 
 def test_asof_auto_partitions_equals_plain(spark, tiny_pdf):
@@ -288,13 +306,10 @@ def test_nearest(spark, feats, oracle_feats, queries_pdf, direction):
     _check(got, oracle_backfill(oracle_feats, queries_pdf, direction=direction))
 
 
-def test_nearest_supported_by_salted(spark, feats, queries_pdf):
-    """Round 5: 'nearest' is no longer rejected by the salted path — it
-    composes the two directional passes; on the golden corpus it must
-    equal the plain merge-scan (the dedicated tie/slice test exercises
-    the hard cases)."""
-    from tgist_features_spark.operators.asof import asof_join, asof_join_salted
-
+def test_nearest_supported_by_salted(spark, feats, queries_pdf, hot20):
+    """'nearest' through the skew-safe path (one merge over each slice plus
+    both of its carries) must equal the plain merge-scan on the golden
+    corpus (the dedicated tie/slice test exercises the hard cases)."""
     q = queries_df(spark, queries_pdf)
     kw = dict(by="conv_id", left_on="query_ts", right_on="ts",
               direction="nearest", value_cols=["ts", "turn_idx"])
@@ -302,28 +317,21 @@ def test_nearest_supported_by_salted(spark, feats, queries_pdf):
         asof_join(q, feats.select("conv_id", "ts", "turn_idx"), **kw)
         .toPandas().sort_values("query_id").reset_index(drop=True)
     )
-    salted = (
-        asof_join_salted(q, feats.select("conv_id", "ts", "turn_idx"), **kw)
-        .toPandas().sort_values("query_id").reset_index(drop=True)
-    )
-    import pandas as pd
-
+    auto = asof_join_auto(q, hot20(feats.select("conv_id", "ts", "turn_idx")), **kw)
+    assert _is_sliced(auto)
+    salted = auto.toPandas().sort_values("query_id").reset_index(drop=True)
     for c in ["ts", "turn_idx"]:
         a, b = plain[c].to_numpy(), salted[c].to_numpy()
         assert ((pd.isna(a) & pd.isna(b)) | (a == b)).all(), c
 
 
-def test_salted_probe_only_slice_gets_carry(spark):
+def test_salted_probe_only_slice_gets_carry(spark, hot_above):
     """A probe whose time slice contains NO build rows must still match
     the last build row from an earlier slice. This is exactly what the
     probe tag in the fused carry aggregation buys: a build-only
     aggregation would never emit a row for the probe's slice, so no carry
     would exist and the probe would wrongly return null (the faster
     tag-free variant measured in round 4 fails this case)."""
-    import pandas as pd
-
-    from tgist_features_spark.operators.asof import asof_join, asof_join_salted
-
     build = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -333,8 +341,8 @@ def test_salted_probe_only_slice_gets_carry(spark):
             }
         )
     )
-    # probe sits 5 hours later: its 1h slice (and the 4 before it) hold no
-    # build rows at all
+    # probe sits 5 hours later: with ~667 s slices, its slice (and the 22
+    # before it) hold no build rows at all
     probe = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -347,22 +355,25 @@ def test_salted_probe_only_slice_gets_carry(spark):
         by="conv_id", left_on="query_ts", right_on="ts",
         direction="backward", value_cols=["ts", "turn_idx"],
     )
+    hot_above(build, 1)
+    hot = asof_ops._hot_slices(build, ["conv_id"], "ts")
+    b_slices = {r["__slice"] for r in
+                asof_ops._tag_slices(build, hot, ["conv_id"], "ts").collect()}
+    p_slice = asof_ops._tag_slices(probe, hot, ["conv_id"], "query_ts").first()["__slice"]
+    assert p_slice > max(b_slices), (p_slice, b_slices)
     plain = asof_join(probe, build, **kw).toPandas()
-    salted = asof_join_salted(probe, build, slice_width_s=3600, **kw).toPandas()
+    auto = asof_join_auto(probe, build, **kw)
+    assert _is_sliced(auto)
+    salted = auto.toPandas()
     assert salted["turn_idx"].tolist() == plain["turn_idx"].tolist() == [2]
 
 
-def test_salted_nearest_matches_plain_with_ties_and_slices(spark):
-    """Salted 'nearest' (round 5 — the last asof direction gap) must equal
-    the plain merge-scan on a frame engineered to exercise everything the
-    composition can get wrong: exact-distance ties (backward must win),
-    matches that live in NEIGHBORING slices on either side, probe-only
-    slices, tolerance rejection, and null probe timestamps."""
-    import numpy as np
-    import pandas as pd
-
-    from tgist_features_spark.operators.asof import asof_join, asof_join_salted
-
+def test_salted_nearest_matches_plain_with_ties_and_slices(spark, hot_above):
+    """Skew-safe 'nearest' must equal the plain merge-scan on a frame
+    engineered to exercise everything the carries can get wrong:
+    exact-distance ties (backward must win), matches that live in
+    NEIGHBORING slices on either side, probe-only slices, tolerance
+    rejection, and null probe timestamps."""
     base = pd.Timestamp("2024-01-01")
     rows = []
     # entity e0: build events every 100s; probes sit exactly between two
@@ -380,10 +391,35 @@ def test_salted_nearest_matches_plain_with_ties_and_slices(spark):
     probes.append(("e1", base, 100))
     rows.append(("e2", base, 999))
     probes.append(("e2", base + pd.Timedelta(seconds=5000), 101))
+    # e3: two bursts 10000 s apart (~500 s slices); probes in the gap sit in
+    # probe-only slices and match a carry from either side — backward
+    # nearer (200), an exact tie between the two carries (201), forward
+    # nearer (202)
+    for i in range(10):
+        rows.append(("e3", base + pd.Timedelta(seconds=i), i))
+        rows.append(("e3", base + pd.Timedelta(seconds=10_000 + i), 10 + i))
+    for qid, off in [(200, 5000.0), (201, 5004.5), (202, 6000.0)]:
+        probes.append(("e3", base + pd.Timedelta(seconds=off), qid))
     probe = pd.DataFrame(probes, columns=["conv_id", "query_ts", "query_id"])
     build = pd.DataFrame(rows, columns=["conv_id", "ts", "turn_idx"])
     b = spark.createDataFrame(build, schema="conv_id string, ts timestamp, turn_idx int")
     p = spark.createDataFrame(probe, schema="conv_id string, query_ts timestamp, query_id long")
+    # every entity with 2+ rows is hot; slices are ~span/n wide
+    hot_above(b, 1)
+
+    # the slicing really forces neighbour-slice carries: query 0's forward
+    # match (100 s) lies in the next slice, and each e3 gap probe's slice
+    # holds no build row, with build slices on both sides
+    hot = asof_ops._hot_slices(b, ["conv_id"], "ts")
+    b_sl = asof_ops._tag_slices(b, hot, ["conv_id"], "ts").toPandas()
+    p_sl = asof_ops._tag_slices(p, hot, ["conv_id"], "query_ts").toPandas()
+    slice_of = dict(zip(zip(b_sl["conv_id"], b_sl["turn_idx"]), b_sl["__slice"]))
+    q0 = p_sl.loc[p_sl["query_id"] == 0, "__slice"].iloc[0]
+    assert slice_of[("e0", 0)] == q0 < slice_of[("e0", 1)]
+    e3 = set(b_sl.loc[b_sl["conv_id"] == "e3", "__slice"])
+    for qid in (200, 201, 202):
+        s = p_sl.loc[p_sl["query_id"] == qid, "__slice"].iloc[0]
+        assert s not in e3 and min(e3) < s < max(e3), (qid, s, e3)
 
     for tol in [None, 60.0]:
         kw = dict(by="conv_id", left_on="query_ts", right_on="ts",
@@ -393,15 +429,120 @@ def test_salted_nearest_matches_plain_with_ties_and_slices(spark):
             asof_join(p, b, **kw)
             .toPandas().sort_values("query_id").reset_index(drop=True)
         )
-        # slice width 100s: every inter-event probe needs a neighbor-slice
-        # candidate on at least one side
-        salted = (
-            asof_join_salted(p, b, slice_width_s=100, **kw)
-            .toPandas().sort_values("query_id").reset_index(drop=True)
-        )
+        auto = asof_join_auto(p, b, **kw)
+        assert _is_sliced(auto)
+        salted = auto.toPandas().sort_values("query_id").reset_index(drop=True)
         for c in ["ts", "turn_idx"]:
             a, bb = plain[c].to_numpy(), salted[c].to_numpy()
             assert ((pd.isna(a) & pd.isna(bb)) | (a == bb)).all(), (tol, c)
         # tie at +-50s resolves BACKWARD (pandas nearest semantics)
         tie = plain[plain["query_id"] == 0]["turn_idx"].iloc[0]
         assert tie == 0
+        if tol is None:
+            gap = plain.set_index("query_id")["turn_idx"]
+            assert (gap[200], gap[201], gap[202]) == (9, 9, 10)
+
+
+def test_derived_slice_width_bounds_rows_per_slice(spark, hot_above):
+    """With evenly spaced, equally wide build rows and a task budget of B
+    rows, no hot (entity, slice) holds more than B + 1 rows, whatever the
+    spacing; an entity with exactly B rows is cold and keeps slice 0."""
+    B = 50
+    base = pd.Timestamp("2024-01-01")
+    # equal-length ids, so every row has the same payload width
+    spacing_us = {"h7s": 7_000_000, "h3u": 3, "h1u": 1, "cld": 60_000_000}
+    n_rows = {"h7s": 1000, "h3u": 997, "h1u": 700, "cld": B}
+    pdf = pd.concat([
+        pd.DataFrame({
+            "conv_id": e,
+            "ts": base + pd.to_timedelta(np.arange(n_rows[e]) * d, unit="us"),
+        })
+        for e, d in spacing_us.items()
+    ])
+    build = hot_above(
+        spark.createDataFrame(pdf, schema="conv_id string, ts timestamp"), B)
+    hot = asof_ops._hot_slices(build, ["conv_id"], "ts")
+    per_slice = (
+        asof_ops._tag_slices(build, hot, ["conv_id"], "ts")
+        .groupBy("conv_id", "__slice", "__hot").count().toPandas()
+    )
+    for e, n in n_rows.items():
+        g = per_slice[per_slice["conv_id"] == e]
+        if e == "cld":
+            assert g["__slice"].tolist() == [0] and not g["__hot"].any()
+            continue
+        assert g["__hot"].all(), e
+        assert g["count"].max() <= B + 1, (e, g["count"].max())
+        assert len(g) >= -(-n // (B + 1)), e
+
+
+def _final_plan(df) -> str:
+    """The executed (final adaptive) physical plan of ``df`` after a run."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().executedPlan().toString()
+
+
+@pytest.fixture(scope="module")
+def parquet_sides(spark, small_pdf, queries_pdf, tmp_path_factory):
+    """Build/probe read from parquet, so any RDD scan in a plan would come
+    from the operator itself (a checkpoint), not from the test data."""
+    d = tmp_path_factory.mktemp("asof_sides")
+    transcripts_df(spark, small_pdf).select("conv_id", "ts", "turn_idx").write.parquet(
+        str(d / "build"))
+    queries_df(spark, queries_pdf).write.parquet(str(d / "probe"))
+    return spark.read.parquet(str(d / "probe")), spark.read.parquet(str(d / "build"))
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
+def test_auto_plan_is_one_exchange_one_merge(parquet_sides, hot20, direction):
+    p, b = parquet_sides
+    out = asof_join_auto(p, hot20(b), direction=direction, value_cols=["ts", "turn_idx"])
+    assert _is_sliced(out)
+    plan = _final_plan(out)
+    assert plan.count("MapInPandas") == 1, plan
+    assert len(re.findall(r"Exchange rangepartitioning", plan)) == 1, plan
+    assert "ExistingRDD" not in plan, "no checkpointed (RDD-scanned) input"
+
+
+def test_auto_nearest_job_budget(spark, parquet_sides, hot20):
+    """'nearest' is the same single pass as 'backward': no extra jobs."""
+    p, b = parquet_sides
+    hot20(b)
+    sc = spark.sparkContext
+    jobs = {}
+    for direction in ("backward", "nearest"):
+        group = f"asof-auto-{direction}"
+        sc.setJobGroup(group, group)
+        try:
+            asof_join_auto(p, b, direction=direction, value_cols=["ts", "turn_idx"]) \
+                .write.mode("overwrite").format("noop").save()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[direction] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs["nearest"] <= jobs["backward"], jobs
+
+
+def test_auto_routes_small_build_to_plain(parquet_sides, monkeypatch):
+    """A build whose size estimate fits one task cannot hold a hot entity,
+    so ``asof_join_auto`` is then the plain merge-scan (no hot-set job);
+    with the budget below the estimate it takes the sliced path."""
+    p, b = parquet_sides
+    est = asof_ops._size_estimate(b)
+    assert 0 < est <= asof_ops.ASOF_TASK_BYTES
+    assert not _is_sliced(asof_join_auto(p, b, value_cols=["ts", "turn_idx"]))
+    monkeypatch.setattr(asof_ops, "ASOF_TASK_BYTES", est - 1)
+    assert _is_sliced(asof_join_auto(p, b, value_cols=["ts", "turn_idx"]))
+
+
+def test_row_bytes_measures_payload(spark):
+    """Hot detection sums per-row payload bytes: byte length for strings
+    (UTF-8), elements for arrays (0 when null), fixed widths otherwise
+    (null or not)."""
+    df = spark.createDataFrame(
+        [("abé", [1.0, 2.0], ["x", "yz"], 7, None),
+         ("", None, [], None, "q")],
+        "s string, a array<double>, sa array<string>, i int, n string",
+    )
+    got = [r[0] for r in df.select(asof_ops._row_bytes(df)).collect()]
+    assert got == [4 + 16 + 3 + 4 + 0, 0 + 0 + 0 + 4 + 1]

@@ -1,14 +1,15 @@
 """Hypothesis property tests: engine as-of == pandas.merge_asof on random
-skewed frames; salted == plain; sessionize invariants."""
+skewed frames, plain and skew-safe (one hot entity); sessionize
+invariants."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
 
-from tgist_features_spark.operators.asof import asof_join, asof_join_salted
+from tgist_features_spark.operators.asof import asof_join, asof_join_auto
 from tgist_features_spark.operators.sessionize import sessionize
 
 SPARK = None  # filled by fixture-wrapped tests below
@@ -66,19 +67,23 @@ def _oracle(build, probe, direction):
     direction=st.sampled_from(["backward", "forward", "nearest"]),
     salted=st.booleans(),
 )
-def test_asof_matches_merge_asof(spark, seed, direction, salted):
+def test_asof_matches_merge_asof(spark, hot_above, seed, direction, salted):
     build, probe = _rand_frames(seed, n_entities=5, n_build=60, n_probe=40)
     b = spark.createDataFrame(build, schema="conv_id string, ts timestamp, turn_idx int, v double")
     p = spark.createDataFrame(probe, schema="conv_id string, query_ts timestamp, query_id long")
-    fn = asof_join_salted if salted else asof_join
-    kw = {"slice_width_s": 3600 * 24} if salted else {}
-    got = (
-        fn(p, b, by="conv_id", left_on="query_ts", right_on="ts",
-           direction=direction, value_cols=["ts", "turn_idx", "v"], **kw)
-        .toPandas()
-        .sort_values("query_id")
-        .reset_index(drop=True)
-    )
+    fn = asof_join_auto if salted else asof_join
+    if salted:
+        # entity e0 (half the rows) is hot and time-sliced; the others stay
+        # cold in slice 0 of the same exchange
+        sizes = build["conv_id"].value_counts()
+        cold_max = int(sizes.drop("e0", errors="ignore").max())
+        assume(sizes.get("e0", 0) > cold_max)
+        hot_above(b, cold_max)
+    out = fn(p, b, by="conv_id", left_on="query_ts", right_on="ts",
+             direction=direction, value_cols=["ts", "turn_idx", "v"])
+    if salted:
+        assert "__slice" in out._jdf.queryExecution().analyzed().toString()
+    got = out.toPandas().sort_values("query_id").reset_index(drop=True)
     ref = _oracle(build, probe, direction)
     mt, ot = got["ts"].to_numpy(), ref["ts"].to_numpy()
     assert bool(((pd.isna(mt) & pd.isna(ot)) | (mt == ot)).all())

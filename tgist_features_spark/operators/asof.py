@@ -11,6 +11,7 @@ against the pure pandas oracle and DuckDB's ASOF JOIN):
   (``allow_exact_matches=False`` makes it strictly <) — the point-in-time /
   zero-leakage form;
 * forward: smallest ts >= query_ts;
+* nearest: the closer of the two, backward winning exact-distance ties;
 * tolerance: reject matches further than a max staleness;
 * ties on build ts resolve to the greatest tiebreak (backward) / smallest
   (forward) — deterministic under duplicate timestamps;
@@ -18,20 +19,23 @@ against the pure pandas oracle and DuckDB's ASOF JOIN):
 * null query_ts or unseen entity -> null match.
 
 Skew: a hot conversation funnels its entire probe+build volume through one
-merge-scan task. ``asof_join_salted`` time-slices both sides into
-``(entity, floor(ts / slice_width))`` sub-keys and replicates, per slice,
-exactly one *carry-in* row (the latest build row from any earlier slice —
-computed with a hash aggregation + one tiny window over slice summaries, all
-JVM-side) so every slice's lookback is self-contained. Result is provably
-identical to the unsalted join (tests/test_asof.py) while bounding the
-per-task group size — the 10^12-turn answer to hot conversations, alongside
-AQE skew splitting for the relational joins.
+merge-scan task. ``asof_join_auto`` is the skew-safe form of the same
+merge-scan. When Catalyst's size estimate of the build fits one task's
+budget (``ASOF_TASK_BYTES``) no entity can be hot, and it runs the plain
+``asof_join`` with no extra job. Otherwise an entity whose build rows hold
+more than ``ASOF_TASK_BYTES`` of payload is cut into time slices sized from
+its own bytes and time span, cold entities stay in slice 0, and each hot
+probe slice receives the carry-in rows (the latest build row of any earlier
+slice and/or the earliest of any later one) its merge needs. Hot and cold
+rows then share ONE range exchange and ONE ``mapInPandas`` keyed on
+``(entity, slice)``; results are identical to ``asof_join`` for every
+direction (tests/test_asof.py, tests/test_property_asof.py).
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -53,6 +57,27 @@ _PANDAS_NULLABLE = {
 # 2-4x expansion) comfortably inside executor memory at any input scale
 ASOF_TARGET_PARTITION_BYTES = 64 << 20
 
+# build-side payload bytes of ONE entity that one merge-scan task should
+# hold; an entity with more is hot and ``asof_join_auto`` time-slices it.
+# Bytes are summed per row (``_row_bytes``), so the row count this allows
+# follows the build's own width: backfill_features' build (conv_id, ts,
+# turn_idx, 11-double feature_vec) is 109 B/row, hot above ~616k rows.
+ASOF_TASK_BYTES = ASOF_TARGET_PARTITION_BYTES
+
+# on-wire widths of fixed-size types (see ``_value_bytes``)
+_WIDTHS = {
+    T.BooleanType: 1,
+    T.ByteType: 1,
+    T.ShortType: 2,
+    T.IntegerType: 4,
+    T.DateType: 4,
+    T.FloatType: 4,
+    T.LongType: 8,
+    T.DoubleType: 8,
+    T.TimestampType: 8,
+    T.TimestampNTZType: 8,
+}
+
 
 def _partitions_for_size(size: int, floor: int) -> int:
     """Pure sizing rule (unit-tested separately from the Py4J stats call)."""
@@ -63,15 +88,46 @@ def _partitions_for_size(size: int, floor: int) -> int:
     return max(floor, min(1 << 20, size // ASOF_TARGET_PARTITION_BYTES + 1))
 
 
+def _size_estimate(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df``'s analyzed plan in bytes — no job
+    (statistics come from file sizes / plan estimation) and no optimizer
+    pass; 0 when it is unavailable."""
+    try:
+        return int(df._jdf.logicalPlan().stats().sizeInBytes())
+    except Exception:
+        return 0
+
+
 def _auto_num_partitions(u: DataFrame) -> int:
     """Partition count from Catalyst's size estimate of the unioned input —
-    no extra jobs (statistics come from file sizes / plan estimation). Never
-    below the cluster's default parallelism."""
-    try:
-        size = int(u._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        size = 0
-    return _partitions_for_size(size, u.sparkSession.sparkContext.defaultParallelism)
+    no extra jobs. Never below the cluster's default parallelism."""
+    return _partitions_for_size(
+        _size_estimate(u), u.sparkSession.sparkContext.defaultParallelism
+    )
+
+
+def _value_bytes(c: Column, dt: T.DataType) -> Column:
+    """Payload bytes of one value: strings and binary by byte length and
+    arrays by their elements (either 0 when null); other types by their
+    fixed width (16 bytes for any type not in ``_WIDTHS``, maps and
+    structs included)."""
+    if isinstance(dt, (T.StringType, T.BinaryType)):
+        n = F.octet_length(c)
+    elif isinstance(dt, T.ArrayType):
+        w = _WIDTHS.get(type(dt.elementType))
+        n = F.size(c) * w if w else F.aggregate(
+            c, F.lit(0).cast("long"),
+            lambda acc, x: acc + _value_bytes(x, dt.elementType),
+        )
+    else:
+        return F.lit(_WIDTHS.get(type(dt), 16))
+    return F.when(c.isNull(), 0).otherwise(n)
+
+
+def _row_bytes(df: DataFrame) -> Column:
+    """Payload bytes of one row of ``df`` (the sum of its values')."""
+    return sum((_value_bytes(F.col(f.name), f.dataType) for f in df.schema.fields),
+               F.lit(0))
 
 
 def _null_dtype(spark_type: T.DataType) -> object:
@@ -154,8 +210,8 @@ def asof_join(
     size them from Catalyst's size estimate of the unioned input
     (~``ASOF_TARGET_PARTITION_BYTES`` per task — keeps the per-task pandas
     buffer bounded as inputs grow, with zero extra jobs). A single entity
-    bigger than a healthy partition is the *skew* case — route through
-    ``asof_join_auto``.
+    bigger than a healthy partition is the *skew* case: ``asof_join_auto``
+    runs this same merge-scan with hot entities time-sliced.
     """
     assert direction in ("backward", "forward", "nearest")
     by_list = [by] if isinstance(by, str) else list(by)
@@ -241,10 +297,40 @@ def asof_join(
     return u.mapInPandas(scan, schema=out_schema)
 
 
+def _hot_slices(build: DataFrame, by: list[str], right_on: str) -> DataFrame:
+    """``(*by, __lo, __w)`` for every entity whose build rows hold more than
+    ``ASOF_TASK_BYTES`` of payload: its first event time and a slice width
+    (both epoch us) that gives each slice ~``ASOF_TASK_BYTES`` when the
+    entity's bytes are spread evenly over its time span."""
+    t = us(F.col(right_on))
+    span = (F.col("__hi") - F.col("__lo") + 1).cast("double")
+    return (
+        build.groupBy(*by)
+        .agg(F.sum(_row_bytes(build)).alias("__bytes"), F.min(t).alias("__lo"),
+             F.max(t).alias("__hi"))
+        .filter(F.col("__bytes") > ASOF_TASK_BYTES)
+        .select(*by, "__lo",
+                F.ceil(span * ASOF_TASK_BYTES / F.col("__bytes")).alias("__w"))
+    )
+
+
+def _tag_slices(df: DataFrame, hot: DataFrame, by: list[str], t_col: str) -> DataFrame:
+    """``df`` plus ``__slice`` (the hot entity's time slice of ``t_col``;
+    0 for cold entities and null times) and ``__hot``. Probe and build use
+    this one expression, so equal timestamps always share a slice, and the
+    slice is non-decreasing in time within an entity."""
+    slice_ = F.floor((us(F.col(t_col)) - F.col("__lo")) / F.col("__w"))
+    return df.join(F.broadcast(hot), on=by, how="left").select(
+        *df.columns,
+        F.coalesce(slice_, F.lit(0)).alias("__slice"),
+        F.col("__w").isNotNull().alias("__hot"),
+    )
+
+
 def asof_join_auto(
     probe: DataFrame,
     build: DataFrame,
-    by: str = "conv_id",
+    by: str | list[str] = "conv_id",
     left_on: str = "query_ts",
     right_on: str = "ts",
     direction: str = "backward",
@@ -252,224 +338,98 @@ def asof_join_auto(
     allow_exact_matches: bool = True,
     value_cols: list[str] | None = None,
     tiebreak: tuple[str, ...] = ("turn_idx",),
-    hot_threshold: int = 1_000_000,
-    slice_width_s: int = 3600,
 ) -> DataFrame:
-    """Skew-adaptive as-of join: entities whose build side exceeds
-    ``hot_threshold`` rows take the salted (time-sliced) path, everything
-    else the plain merge-scan (``asof_join``); results are unioned.
+    """Skew-safe ``asof_join``: identical results, bounded per-task bytes.
 
-    This is the production entry point at the 10^12-turn design scale: the
-    per-entity count is one cheap hash aggregation, the hot set is tiny by
-    definition (skew = few heavy keys) so it broadcasts, and cold entities
-    avoid the salted path's extra carry bookkeeping entirely.
+    When Catalyst's size estimate of the build (no job) is within
+    ``ASOF_TASK_BYTES``, no entity can be hot and this is the plain
+    ``asof_join``. The estimate sizes rows from type defaults (an array
+    counts one element), so wide rows can be under-counted — the same
+    estimate Spark uses to pick broadcast joins.
 
-    The default threshold matches the plain path's per-task budget
-    (~``ASOF_TARGET_PARTITION_BYTES`` at ~40 B/row ≈ 1.6M rows): below it
-    a single merge-scan task absorbs the entity cheaply and the salted
-    bookkeeping only adds cost; above it the entity is a straggler and
-    slicing wins (measured on the skewed bench corpus: plain 19.2s vs auto
-    11.2s at a 1.6M-row hot entity; plain wins below ~1M — bench.py
-    ``skew_asof``).
+    Otherwise one aggregation over the build side finds the hot entities
+    (more than ``ASOF_TASK_BYTES`` of row payload) and their slice widths;
+    the tiny hot set is broadcast and tags both sides with ``__slice``. For
+    every hot slice that holds probes, the carry-in rows come from one
+    aggregation per hot ``(entity, slice)`` (``max_by``/``min_by`` of the
+    slice's build rows, plus a "holds probes" flag) and one window over
+    those slice rows: the latest summary of any earlier slice (backward)
+    and/or the earliest of any later slice (forward). A probe-only slice
+    still gets its carry. Build rows and carries then go through ONE
+    ``asof_join`` keyed on ``(entity, __slice)``, its partition count sized
+    from the inputs' estimates (~``ASOF_TARGET_PARTITION_BYTES`` per task).
+    Within a slice, the slice's rows plus its carries hold both global
+    candidates, so ``nearest`` is the same single merge (pandas resolves
+    exact-distance ties backward, as in ``asof_join``).
     """
-    assert direction in ("backward", "forward", "nearest")
-    counts = build.groupBy(by).agg(F.count(F.lit(1)).alias("__n"))
-    hot = counts.filter(F.col("__n") > hot_threshold).select(by)
-    kw = dict(
-        by=by, left_on=left_on, right_on=right_on, direction=direction,
-        tolerance=tolerance, allow_exact_matches=allow_exact_matches,
-        value_cols=value_cols, tiebreak=tiebreak,
-    )
-    cold_out = asof_join(
-        probe.join(F.broadcast(hot), on=by, how="left_anti"),
-        build.join(F.broadcast(hot), on=by, how="left_anti"),
-        **kw,
-    )
-    hot_out = asof_join_salted(
-        probe.join(F.broadcast(hot), on=by, how="left_semi"),
-        build.join(F.broadcast(hot), on=by, how="left_semi"),
-        slice_width_s=slice_width_s,
-        **kw,
-    )
-    return cold_out.unionByName(hot_out)
+    kw = dict(left_on=left_on, right_on=right_on, direction=direction,
+              tolerance=tolerance, allow_exact_matches=allow_exact_matches,
+              value_cols=value_cols, tiebreak=tiebreak)
+    build_bytes = _size_estimate(build)
+    if 0 < build_bytes <= ASOF_TASK_BYTES:
+        return asof_join(probe, build, by=by, **kw)
 
-
-def asof_join_salted(
-    probe: DataFrame,
-    build: DataFrame,
-    by: str = "conv_id",
-    left_on: str = "query_ts",
-    right_on: str = "ts",
-    direction: str = "backward",
-    tolerance: float | None = None,
-    allow_exact_matches: bool = True,
-    value_cols: list[str] | None = None,
-    tiebreak: tuple[str, ...] = ("turn_idx",),
-    slice_width_s: int = 3600,
-) -> DataFrame:
-    """Skew-safe as-of join: time-sliced sub-keys + carry-in replication.
-
-    Identical results to ``asof_join`` (tested). The final merge-scan range-
-    partitions on the composite (entity, slice) key, so the rows one task
-    must hold for an entity are bounded by rows-per-(entity, slice) instead
-    of rows-per-entity.
-
-    ``direction='nearest'`` (round 5 — closes the last asof gap): carries
-    from BOTH sides of every slice would double the carry bookkeeping
-    inside one pass, so nearest is instead COMPOSED from the two
-    direction-specific passes — each already exactly equal to pandas
-    merge_asof for its direction — and the closer match wins per probe
-    row, backward winning exact-distance ties (pandas 'nearest'
-    semantics, pinned by the property test). Cost: two salted passes plus
-    a probe-id equijoin; the probe side is frozen once via an eager
-    localCheckpoint so the synthetic row id is stable across both
-    branches.
-    """
-    assert direction in ("backward", "forward", "nearest")
-    if direction == "nearest":
-        return _salted_nearest(
-            probe, build, by, left_on, right_on, tolerance,
-            allow_exact_matches, value_cols, tiebreak, slice_width_s,
-        )
-    slice_col = "__slice"
-    width_us = slice_width_s * 1_000_000
-
-    by_l, value_cols, rename, carried, out_schema = _plan(
+    by_list, value_cols, _, _, _ = _plan(
         probe, build, by, left_on, right_on, value_cols
     )
-    assert len(by_l) == 1, "salted path keys on a single entity column"
-
-    p = probe.withColumn(
-        slice_col, F.floor(us(F.col(left_on)) / width_us)
-    )
-    b = build.filter(F.col(right_on).isNotNull()).withColumn(
-        slice_col, F.floor(us(F.col(right_on)) / width_us)
-    )
-
-    # ONE aggregation produces both the per-(entity, slice) build summary
-    # (the slice's extreme build row — latest for backward, earliest for
-    # forward) and the "this slice contains probes" flag: build rows and
-    # probe slice-markers go through a tagged union into a single hash agg,
-    # replacing the previous summaries-groupBy + probe-distinct + union
-    # (two shuffles and a second pass over slice rows). max_by/min_by skip
-    # null ordering keys, so probe-only slices aggregate to a null payload.
-    payload = F.struct(*[F.col(c) for c in build.columns])
-    order_key = F.struct(
-        us(F.col(right_on)),
-        *[F.col(t) for t in tiebreak if t in build.columns],
-    )
-    payload_type = T.StructType(build.schema.fields)
-    ok_type = b.select(order_key.alias("__ok")).schema["__ok"].dataType
-    b_tag = b.select(
-        F.col(by), F.col(slice_col),
-        payload.alias("__payload"), order_key.alias("__ok"),
-        F.lit(0).alias("__probe"),
-    )
-    p_tag = p.select(
-        F.col(by), F.col(slice_col),
-        F.lit(None).cast(payload_type).alias("__payload"),
-        F.lit(None).cast(ok_type).alias("__ok"),
-        F.lit(1).alias("__probe"),
-    )
-    pick = F.max_by("__payload", "__ok") if direction == "backward" else \
-        F.min_by("__payload", "__ok")
-    agg = (
-        b_tag.unionByName(p_tag)
-        .groupBy(by, slice_col)
-        .agg(pick.alias("__payload"), F.max("__probe").alias("__probe"))
+    kw["value_cols"] = value_cols
+    tb = [t for t in tiebreak if t in build.columns]
+    # only the columns the merge reads travel with the build rows and carries
+    cols = build.select(*dict.fromkeys([*by_list, right_on, *value_cols, *tb]))
+    sizes = (_size_estimate(probe), _size_estimate(cols))
+    num_partitions = _partitions_for_size(
+        sum(sizes) if min(sizes) > 0 else 0,
+        probe.sparkSession.sparkContext.defaultParallelism,
     )
 
-    # carry-in per probe slice: latest summary from any STRICTLY earlier
-    # slice (backward) / earliest from any strictly later slice (forward).
-    # With one aggregated row per slice, excluding the current row from the
-    # frame excludes exactly the same-slice summary; the window runs over
-    # slice-level rows only — tiny even for the hottest entity.
-    if direction == "backward":
-        w = (
-            Window.partitionBy(by)
-            .orderBy(slice_col)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carry_val = F.last("__payload", ignorenulls=True).over(w)
-    else:
-        w = (
-            Window.partitionBy(by)
-            .orderBy(slice_col)
-            .rowsBetween(1, Window.unboundedFollowing)
-        )
-        carry_val = F.first("__payload", ignorenulls=True).over(w)
+    b = cols.filter(F.col(right_on).isNotNull())
+    hot = _hot_slices(b, by_list, right_on)
+    p = _tag_slices(probe, hot, by_list, left_on)
+    b = _tag_slices(b, hot, by_list, right_on)
+    keys = [*by_list, "__slice"]
+
+    # ONE aggregation over hot build rows and hot probe-slice markers;
+    # max_by/min_by skip null ordering keys, so a probe-only slice
+    # aggregates to a null summary but still exists as a slice row
+    order = F.struct(us(F.col(right_on)), *[F.col(t) for t in tb])
+    marks = b.filter("__hot").select(
+        *keys, F.struct(*cols.columns).alias("__row"), order.alias("__ok"),
+        F.lit(False).alias("__probe"),
+    ).unionByName(
+        p.filter("__hot").select(*keys, F.lit(True).alias("__probe")),
+        allowMissingColumns=True,
+    )
+    summaries = []
+    if direction != "forward":
+        summaries.append(F.max_by("__row", "__ok").alias("__last"))
+    if direction != "backward":
+        summaries.append(F.min_by("__row", "__ok").alias("__first"))
+    slices = marks.groupBy(*keys).agg(*summaries, F.max("__probe").alias("__probe"))
+
+    # one window over the slice rows (tiny even for the hottest entity):
+    # excluding the current row excludes exactly the same-slice summary
+    w = Window.partitionBy(*by_list).orderBy("__slice")
+    carry = []
+    if direction != "forward":
+        before = w.rowsBetween(Window.unboundedPreceding, -1)
+        carry.append(F.last("__last", ignorenulls=True).over(before))
+    if direction != "backward":
+        after = w.rowsBetween(1, Window.unboundedFollowing)
+        carry.append(F.first("__first", ignorenulls=True).over(after))
     carries = (
-        agg.withColumn("__carry", carry_val)
-        .filter((F.col("__probe") == 1) & F.col("__carry").isNotNull())
-        .select(by, slice_col, *[F.col(f"__carry.{c}").alias(c) for c in build.columns if c != by])
+        slices.select(*keys, "__probe", F.array(*carry).alias("__carry"))
+        .filter("__probe")
+        .select(*keys, F.explode("__carry").alias("__row"))
+        .filter(F.col("__row").isNotNull())
+        .select(*keys, *[F.col("__row").getField(c).alias(c)
+                         for c in cols.columns if c not in by_list])
     )
-    b_salted = b.unionByName(carries.select(*b.columns))
 
-    # final merge: the composite (entity, slice) key routes each slice to its
-    # own range partition — hot entities split across tasks — while the
-    # merge itself stays the bulk merge-scan (no per-group Python calls)
     out = asof_join(
-        p,
-        b_salted,
-        by=[by, slice_col],
-        left_on=left_on,
-        right_on=right_on,
-        direction=direction,
-        tolerance=tolerance,
-        allow_exact_matches=allow_exact_matches,
-        value_cols=value_cols,
-        tiebreak=tiebreak,
+        p.drop("__hot"),
+        b.drop("__hot").unionByName(carries),
+        by=keys,
+        num_partitions=num_partitions,
+        **kw,
     )
-    return out.drop(slice_col)
-
-
-def _salted_nearest(
-    probe: DataFrame,
-    build: DataFrame,
-    by: str,
-    left_on: str,
-    right_on: str,
-    tolerance: float | None,
-    allow_exact_matches: bool,
-    value_cols: list[str] | None,
-    tiebreak: tuple[str, ...],
-    slice_width_s: int,
-) -> DataFrame:
-    """nearest = closer of (salted backward, salted forward) per probe
-    row; backward wins exact-distance ties (empirically pinned pandas
-    merge_asof 'nearest' behavior). See asof_join_salted's docstring."""
-    pid = "__asof_pid"
-    p_id = probe.withColumn(pid, F.monotonically_increasing_id()).localCheckpoint(
-        eager=True  # freeze the synthetic id: both branches must see ONE row identity
-    )
-    _, value_cols, rename, _, _ = _plan(
-        probe, build, by, left_on, right_on, value_cols
-    )
-    # both passes must carry the matched event time for the distance
-    # comparison even when the caller didn't ask for it
-    vc = value_cols if right_on in value_cols else [right_on, *value_cols]
-    rn = _plan(p_id, build, by, left_on, right_on, vc)[2]
-    kw = dict(
-        by=by, left_on=left_on, right_on=right_on, tolerance=tolerance,
-        allow_exact_matches=allow_exact_matches, value_cols=vc,
-        tiebreak=tiebreak, slice_width_s=slice_width_s,
-    )
-    back = asof_join_salted(p_id, build, direction="backward", **kw)
-    fwd = asof_join_salted(p_id, build, direction="forward", **kw)
-    bsel = back.select(pid, *[F.col(rn[c]).alias(f"__b_{c}") for c in vc])
-    fsel = fwd.select(pid, *[F.col(rn[c]).alias(f"__f_{c}") for c in vc])
-    combined = p_id.join(bsel, pid, "left").join(fsel, pid, "left")
-    bd = F.abs(us(F.col(f"__b_{right_on}")) - us(F.col(left_on)))
-    fd = F.abs(us(F.col(f"__f_{right_on}")) - us(F.col(left_on)))
-    use_back = F.col(f"__b_{right_on}").isNotNull() & (
-        F.col(f"__f_{right_on}").isNull() | (bd <= fd)
-    )
-    return combined.select(
-        *probe.columns,
-        *[
-            F.when(use_back, F.col(f"__b_{c}"))
-            .otherwise(F.col(f"__f_{c}"))
-            .alias(rename[c])
-            for c in value_cols
-        ],
-    )
+    return out.drop("__slice")

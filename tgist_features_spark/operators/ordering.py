@@ -16,7 +16,6 @@ def canonical_order(
     df: DataFrame,
     entity: str = "conv_id",
     order: tuple[str, ...] = ("ts", "turn_idx"),
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Range-partition by entity, sort within partitions by (entity, *order).
 
@@ -24,12 +23,7 @@ def canonical_order(
     contiguous, roughly equal-sized partitions — unlike hash partitioning it
     keeps range scans and the later per-conv window passes shuffle-free.
     """
-    cols = [entity, *order]
-    if num_partitions:
-        out = df.repartitionByRange(num_partitions, entity)
-    else:
-        out = df.repartitionByRange(entity)
-    return out.sortWithinPartitions(*cols)
+    return df.repartitionByRange(entity).sortWithinPartitions(entity, *order)
 
 
 def zorder_key(xcol: str, ycol: str, bits: int = 21):

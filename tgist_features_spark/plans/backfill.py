@@ -19,11 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tgist_features_spark.functions.text import with_ngram_features
-from tgist_features_spark.operators.asof import (
-    asof_join,
-    asof_join_auto,
-    asof_join_salted,
-)
+from tgist_features_spark.operators.asof import asof_join_auto
 from tgist_features_spark.operators.ordering import canonical_order
 
 # ordered numeric feature vector layout (allclose contract is per-position)
@@ -94,32 +90,19 @@ def turn_features(df: DataFrame, gap_s: float = 1800.0) -> DataFrame:
     return out.withColumn("feature_vec", vec)
 
 
-def backfill_features(
-    features: DataFrame,
-    queries: DataFrame,
-    salted: bool = False,
-    slice_width_s: int = 3600,
-    hot_threshold: int | None = None,
-) -> DataFrame:
+def backfill_features(features: DataFrame, queries: DataFrame) -> DataFrame:
     """Point-in-time backfill: for each (conv_id, query_ts) probe attach the
     latest feature vector with ts <= query_ts (zero leakage by construction:
     backward direction, exact matches allowed — a feature stamped at ts is
     valid AT ts).
 
-    ``hot_threshold`` switches to the skew-adaptive path (salt only hot
-    conversations); ``salted`` forces time-slicing for every entity.
+    The join is the skew-safe ``asof_join_auto``: a feature table that fits
+    one merge-scan task runs the plain merge-scan with no extra job; a
+    bigger one has its hot conversations time-sliced (same rows).
     """
     value_cols = ["ts", "turn_idx", "feature_vec"]
-    kw = dict(
-        by="conv_id", left_on="query_ts", right_on="ts", direction="backward",
-        value_cols=value_cols,
-    )
     build = features.select("conv_id", *value_cols)
-    if hot_threshold is not None:
-        return asof_join_auto(
-            queries, build, slice_width_s=slice_width_s,
-            hot_threshold=hot_threshold, **kw,
-        )
-    if salted:
-        return asof_join_salted(queries, build, slice_width_s=slice_width_s, **kw)
-    return asof_join(queries, build, **kw)
+    return asof_join_auto(
+        queries, build, by="conv_id", left_on="query_ts", right_on="ts",
+        direction="backward", value_cols=value_cols,
+    )

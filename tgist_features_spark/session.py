@@ -2,8 +2,8 @@
 
 Every knob here exists for the 100 TB design point and is harmless locally:
 AQE (runtime re-planning + skew-join splitting), Arrow for every pandas UDF
-boundary, and shuffle partitions sized to the core count rather than the
-200 default.
+boundary, and shuffle partitions sized to the live cluster's parallelism
+rather than the 200 default.
 """
 
 from __future__ import annotations
@@ -11,6 +11,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
 def get_spark(
@@ -21,23 +23,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine baseline configs.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    so the same entrypoint serves tests, bench runs and spark-submit (where
-    --master on the CLI wins and ``master=None`` must be passed).
+    ``master=None`` leaves the master to the launcher: spark-submit's
+    ``--master`` wins, and a plain ``python`` run gets Spark's own default
+    (``local[*]``). Shuffle partitions come from, in order: the caller's
+    ``shuffle_partitions``, the launcher's ``spark.sql.shuffle.partitions``,
+    else ``max(4, 2 x defaultParallelism)`` of the session just started.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if master is None:
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        n = int(cpus) if cpus.isdigit() else 32
-        shuffle_partitions = max(4, 2 * n)
-
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
@@ -48,9 +44,15 @@ def get_spark(
     )
     if master:
         builder = builder.master(master)
+    if shuffle_partitions is not None:
+        builder = builder.config(_SHUFFLE_PARTITIONS, str(shuffle_partitions))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if spark.conf.get(_SHUFFLE_PARTITIONS, None) is None:
+        n = spark.sparkContext.defaultParallelism
+        spark.conf.set(_SHUFFLE_PARTITIONS, str(max(4, 2 * n)))
+    return spark
 
 
 def warm_python_workers(spark: SparkSession, tasks: int | None = None) -> None:
