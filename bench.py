@@ -38,7 +38,6 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 CORPUS_DIR = os.environ.get("TGIST_BENCH_CORPUS", "/tmp/tgist_bench_corpus")
 N_CONVS = int(os.environ.get("TGIST_BENCH_CONVS", "30000"))
 RUN_SCALING = os.environ.get("TGIST_BENCH_SCALING", "1") != "0"
-RUN_SKEW = os.environ.get("TGIST_BENCH_SKEW", "1") != "0"
 RUN_TRAINING = os.environ.get("TGIST_BENCH_TRAINING", "1") != "0"
 
 # round-3 additions, reported in their own section (NOT in the headline
@@ -189,66 +188,6 @@ def _backfill(master: str) -> dict:
     return json.loads(res.stdout.strip().splitlines()[-1])
 
 
-def _skew_asof(spark) -> dict:
-    """Plain merge-scan vs ``asof_join_auto`` on a DELIBERATELY skewed
-    corpus: THREE QUARTERS of the bench conversations are collapsed into
-    ONE hot conversation (~2.5M build rows at the default corpus size).
-    Its rows carry ~15 B of payload (conv_id, ts, turn_idx), ~37 MB in
-    all, under one task's budget (``ASOF_TASK_BYTES``, 64 MB): at this
-    size ``asof_join_auto`` slices nothing and the section measures its
-    routing overhead; a larger corpus or wider rows cross the budget.
-    Both variants run on identical inputs; walls are second-pass
-    (steady)."""
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    from tgist_features_spark.operators.asof import (  # noqa: PLC0415
-        asof_join,
-        asof_join_auto,
-    )
-
-    remap = F.when(
-        F.pmod(F.xxhash64("conv_id"), F.lit(4)) != 3, F.lit("HOT")
-    ).otherwise(F.col("conv_id"))
-    build = (
-        spark.read.parquet(os.path.join(CORPUS_DIR, "transcripts"))
-        .select(remap.alias("conv_id"), "ts", "turn_idx")
-    )
-    probe = (
-        spark.read.parquet(os.path.join(CORPUS_DIR, "queries"))
-        .select(remap.alias("conv_id"), "query_ts")
-    )
-    hot_rows = build.filter(F.col("conv_id") == "HOT").count()
-    kw = dict(by="conv_id", left_on="query_ts", right_on="ts",
-              direction="backward", value_cols=["ts", "turn_idx"])
-
-    def run_once(mk) -> float:
-        t0 = time.perf_counter()
-        mk().write.mode("overwrite").format("noop").save()
-        return time.perf_counter() - t0
-
-    mk_plain = lambda: asof_join(probe, build, num_partitions="auto", **kw)  # noqa: E731
-    mk_auto = lambda: asof_join_auto(probe, build, **kw)  # noqa: E731
-    # warm both plans once, then INTERLEAVE the timed passes and keep the
-    # min per variant: sequential per-variant timing let a co-tenant
-    # burst land entirely on one variant and flip the comparison (seen in
-    # the round-5 run C snapshot, BASELINE.md); interleaving gives both
-    # variants the same load exposure
-    run_once(mk_plain)
-    run_once(mk_auto)
-    walls_p, walls_a = [], []
-    for _ in range(2):
-        walls_p.append(run_once(mk_plain))
-        walls_a.append(run_once(mk_auto))
-    plain = round(min(walls_p), 3)
-    auto = round(min(walls_a), 3)
-    return {
-        "hot_rows": hot_rows,
-        "plain_wall_s": plain,
-        "auto_wall_s": auto,
-        "auto_le_plain": auto <= plain,
-    }
-
-
 def main() -> None:
     spark = get_spark(master=f"local[{CPUS}]", app_name="tgist-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -307,11 +246,6 @@ def main() -> None:
                 t0 = time.perf_counter()
                 QUERIES[name](spark, SF_DIR).write.mode("overwrite").format("noop").save()
                 r6ops[name] = round(time.perf_counter() - t0, 3)
-    skew = None
-    if RUN_SKEW:
-        _ensure_corpus()
-        loadavgs["skew"] = _wait_for_quiet_host(max_wait_s=180)
-        skew = _skew_asof(spark)
     spark.stop()
 
     # compact line (driver tail-capture-safe) + full evidence file
@@ -340,10 +274,6 @@ def main() -> None:
             result[key.replace("_steady", "_total")] = round(
                 sum(section.values()), 3
             )
-    if skew is not None:
-        full["skew_asof"] = skew
-        result["skew_auto_le_plain"] = skew["auto_le_plain"]
-        result["skew_walls"] = [skew["plain_wall_s"], skew["auto_wall_s"]]
 
     if RUN_SCALING:
         _ensure_corpus()

@@ -5,9 +5,10 @@
         jobs/backfill_features.py --input /path/transcripts_parquet \
         --queries /path/queries_parquet --output /path/out
 
-Reads the transcript table, computes the leakage-free per-turn feature
-vectors, as-of backfills the probe side, writes the result (parquet or the
-'noop' sink for benchmarking), and prints one JSON line with wall time and
+Reads the transcript and probe tables and runs
+``plans.backfill.run_backfill``: the leakage-free per-turn feature vectors,
+the as-of backfill of every probe, and one write of the result (parquet, or
+the 'noop' sink for benchmarking). Prints one JSON line with wall time and
 turns/sec. Also runnable directly with python (it builds its own session).
 """
 
@@ -23,13 +24,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tgist_features_spark import get_spark  # noqa: E402
 from tgist_features_spark.session import warm_python_workers  # noqa: E402
-from tgist_features_spark.plans.backfill import backfill_features, turn_features  # noqa: E402
+from tgist_features_spark.plans.backfill import run_backfill, turn_features  # noqa: E402
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="transcripts parquet path")
-    ap.add_argument("--queries", default=None, help="probe-side parquet path")
+    ap.add_argument("--queries", required=True, help="probe-side parquet path")
     ap.add_argument("--output", default="noop", help="output path or 'noop'")
     ap.add_argument("--master", default=None)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
@@ -51,24 +52,11 @@ def main() -> None:
         "noop"
     ).save()
 
-    probes = spark.read.parquet(args.queries) if args.queries else None
+    probes = spark.read.parquet(args.queries)
 
     def one_pass() -> float:
         t0 = time.perf_counter()
-        feats = turn_features(transcripts, gap_s=args.gap_s)
-        if probes is not None:
-            # materialize the feature relation before the as-of (production
-            # equivalent: sink the features table, then scan it) — also
-            # required by the skew-adaptive path's multiple consumers
-            feats = feats.persist()
-            out = backfill_features(feats, probes)
-        else:
-            out = feats
-        if args.output == "noop":
-            out.write.mode("overwrite").format("noop").save()
-        else:
-            out.write.mode("overwrite").parquet(args.output)
-        feats.unpersist()
+        run_backfill(transcripts, probes, args.output, gap_s=args.gap_s)
         return time.perf_counter() - t0
 
     walls = [one_pass() for _ in range(max(1, args.repeat))]

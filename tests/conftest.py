@@ -36,7 +36,7 @@ def queries_pdf(small_pdf):
 def hot_above(monkeypatch):
     """``hot_above(build, rows)`` budgets one as-of merge-scan task at
     ``rows`` rows of ``build`` (all of one payload width), so that entities
-    with more than ``rows`` build rows are hot in ``asof_join_auto``."""
+    with more than ``rows`` build rows are hot in ``asof_join``."""
     from tgist_features_spark.operators import asof
 
     def apply(build, rows):

@@ -1,6 +1,7 @@
 """As-of join: engine vs pandas.merge_asof oracle vs DuckDB ASOF JOIN,
-plain and skew-safe (``asof_join_auto``), all directions/variants, edge
-cases, and the skew-safe path's plan shape, job budget and slice sizes."""
+both routes of ``asof_join`` (plain and time-sliced), all
+directions/variants, edge cases, the exchange's sizing, and the sliced
+route's plan shape, job budget and slice sizes."""
 
 from __future__ import annotations
 
@@ -12,10 +13,14 @@ import pandas as pd
 import pytest
 
 import tgist_features_spark.operators.asof as asof_ops
-from tgist_features_spark.operators.asof import asof_join, asof_join_auto
+from tgist_features_spark.operators.asof import asof_join
 from tgist_features_spark.oracle.pandas_oracle import oracle_backfill
 from tgist_features_spark.plans.backfill import backfill_features, turn_features
-from tgist_features_spark.sources.corpus import queries_df, transcripts_df
+from tgist_features_spark.sources.corpus import (
+    generate_queries_pdf,
+    queries_df,
+    transcripts_df,
+)
 
 
 def _vec_eq(a, b) -> bool:
@@ -63,7 +68,7 @@ def hot20(hot_above, small_pdf):
 
 
 def _is_sliced(df) -> bool:
-    """Did ``asof_join_auto`` take the time-sliced path (not plain)?"""
+    """Did ``asof_join`` take the time-sliced route (not plain)?"""
     return "__slice" in df._jdf.queryExecution().analyzed().toString()
 
 
@@ -91,7 +96,7 @@ def test_forward(spark, feats, oracle_feats, queries_pdf, direction):
 
 
 def test_forward_salted(spark, feats, oracle_feats, queries_pdf, hot20):
-    got = asof_join_auto(
+    got = asof_join(
         queries_df(spark, queries_pdf),
         hot20(feats.select("conv_id", "ts", "turn_idx", "feature_vec")),
         by="conv_id",
@@ -206,9 +211,9 @@ def test_duplicate_ts_tiebreak(spark):
 
 
 def test_auto_skew_split_equals_plain(spark, feats, oracle_feats, queries_pdf, hot20):
-    """asof_join_auto: hot entities time-sliced, cold ones in slice 0, one
-    exchange — same results as the oracle."""
-    got = asof_join_auto(
+    """asof_join's sliced route: hot entities time-sliced, cold ones in
+    slice 0, one exchange — same results as the oracle."""
+    got = asof_join(
         queries_df(spark, queries_pdf),
         hot20(feats.select("conv_id", "ts", "turn_idx", "feature_vec")),
         by="conv_id",
@@ -220,28 +225,41 @@ def test_auto_skew_split_equals_plain(spark, feats, oracle_feats, queries_pdf, h
     _check(got.toPandas(), oracle_backfill(oracle_feats, queries_pdf))
 
 
-def test_asof_auto_partitions_equals_plain(spark, tiny_pdf):
-    from tgist_features_spark.operators.asof import _auto_num_partitions
-    from tgist_features_spark.sources.corpus import (
-        generate_queries_pdf,
-        queries_df,
-        transcripts_df,
-    )
+def test_probe_side_sizes_the_exchange(spark, tiny_pdf, monkeypatch):
+    """The probe side sizes the exchange too. With the per-task target
+    lowered so that the probe estimate alone needs more tasks than
+    ``spark.sql.shuffle.partitions`` (and the build alone would not), the
+    range exchange gets that many partitions as a fixed count; the build
+    still fits one task's budget, so nothing is sliced."""
+    t = transcripts_df(spark, tiny_pdf).select("conv_id", "ts", "turn_idx")
+    qpdf = generate_queries_pdf(tiny_pdf, n_queries=2000)
+    q = queries_df(spark, qpdf)
+    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    probe_est, build_est = asof_ops._size_estimate(q), asof_ops._size_estimate(t)
+    target = probe_est // (2 * default)
+    assert 0 < build_est <= asof_ops.ASOF_TASK_BYTES
+    assert build_est // target + 1 <= default < probe_est // target + 1
+    monkeypatch.setattr(asof_ops, "ASOF_TARGET_PARTITION_BYTES", target)
 
-    t = transcripts_df(spark, tiny_pdf)
-    q = queries_df(spark, generate_queries_pdf(tiny_pdf, n_queries=80))
-    plain = asof_join(q, t, value_cols=["ts", "turn_idx"]).toPandas()
-    auto = asof_join(
-        q, t, value_cols=["ts", "turn_idx"], num_partitions="auto"
-    ).toPandas()
-    key = ["conv_id", "query_ts", "query_id"] if "query_id" in plain else list(plain.columns)
-    plain = plain.sort_values(list(plain.columns), kind="mergesort").reset_index(drop=True)
-    auto = auto.sort_values(list(auto.columns), kind="mergesort").reset_index(drop=True)
-    assert plain.equals(auto)
-    # the sizing itself: tiny input floors at default parallelism, and the
-    # estimate scales linearly in input bytes
-    n = _auto_num_partitions(t)
-    assert n == spark.sparkContext.defaultParallelism
+    out = asof_join(q, t, value_cols=["ts", "turn_idx"])
+    assert not _is_sliced(out)
+    plan = _final_plan(out)
+    exchanges = re.findall(r"rangepartitioning\(.*?, (\d+)\), (REPARTITION_BY_\w+)", plan)
+    assert len(exchanges) == 1, plan
+    n, origin = exchanges[0]
+    assert int(n) > default and origin == "REPARTITION_BY_NUM", plan
+
+    got = out.toPandas().sort_values("query_id").reset_index(drop=True)
+    ref = pd.merge_asof(
+        qpdf.sort_values("query_ts", kind="mergesort"),
+        tiny_pdf[["conv_id", "ts", "turn_idx"]].sort_values(
+            ["ts", "turn_idx"], kind="mergesort"),
+        left_on="query_ts", right_on="ts", by="conv_id",
+    ).sort_values("query_id").reset_index(drop=True)
+    assert got["query_id"].tolist() == ref["query_id"].tolist()
+    for c in ("ts", "turn_idx"):
+        a, b = got[c].to_numpy(), ref[c].to_numpy()
+        assert bool(((pd.isna(a) & pd.isna(b)) | (a == b)).all()), c
 
 
 def test_partitions_for_size_rule():
@@ -274,21 +292,6 @@ def test_coerce_fails_loudly_on_uncoercible_column():
         _coerce(bad, fields)
 
 
-def test_asof_num_partitions_rejects_bad_string(spark, tiny_pdf):
-    import pytest as _pytest
-
-    from tgist_features_spark.sources.corpus import (
-        generate_queries_pdf,
-        queries_df,
-        transcripts_df,
-    )
-
-    t = transcripts_df(spark, tiny_pdf)
-    q = queries_df(spark, generate_queries_pdf(tiny_pdf, n_queries=5))
-    with _pytest.raises(ValueError, match="auto"):
-        asof_join(q, t, value_cols=["ts"], num_partitions="Auto")
-
-
 @pytest.mark.parametrize("direction", ["nearest"])
 def test_nearest(spark, feats, oracle_feats, queries_pdf, direction):
     """J-family completeness: direction='nearest' (closest row on either
@@ -313,11 +316,10 @@ def test_nearest_supported_by_salted(spark, feats, queries_pdf, hot20):
     q = queries_df(spark, queries_pdf)
     kw = dict(by="conv_id", left_on="query_ts", right_on="ts",
               direction="nearest", value_cols=["ts", "turn_idx"])
-    plain = (
-        asof_join(q, feats.select("conv_id", "ts", "turn_idx"), **kw)
-        .toPandas().sort_values("query_id").reset_index(drop=True)
-    )
-    auto = asof_join_auto(q, hot20(feats.select("conv_id", "ts", "turn_idx")), **kw)
+    plain = asof_join(q, feats.select("conv_id", "ts", "turn_idx"), **kw)
+    assert not _is_sliced(plain)
+    plain = plain.toPandas().sort_values("query_id").reset_index(drop=True)
+    auto = asof_join(q, hot20(feats.select("conv_id", "ts", "turn_idx")), **kw)
     assert _is_sliced(auto)
     salted = auto.toPandas().sort_values("query_id").reset_index(drop=True)
     for c in ["ts", "turn_idx"]:
@@ -355,14 +357,16 @@ def test_salted_probe_only_slice_gets_carry(spark, hot_above):
         by="conv_id", left_on="query_ts", right_on="ts",
         direction="backward", value_cols=["ts", "turn_idx"],
     )
+    plain = asof_join(probe, build, **kw)
+    assert not _is_sliced(plain)
+    plain = plain.toPandas()
     hot_above(build, 1)
     hot = asof_ops._hot_slices(build, ["conv_id"], "ts")
     b_slices = {r["__slice"] for r in
                 asof_ops._tag_slices(build, hot, ["conv_id"], "ts").collect()}
     p_slice = asof_ops._tag_slices(probe, hot, ["conv_id"], "query_ts").first()["__slice"]
     assert p_slice > max(b_slices), (p_slice, b_slices)
-    plain = asof_join(probe, build, **kw).toPandas()
-    auto = asof_join_auto(probe, build, **kw)
+    auto = asof_join(probe, build, **kw)
     assert _is_sliced(auto)
     salted = auto.toPandas()
     assert salted["turn_idx"].tolist() == plain["turn_idx"].tolist() == [2]
@@ -404,6 +408,15 @@ def test_salted_nearest_matches_plain_with_ties_and_slices(spark, hot_above):
     build = pd.DataFrame(rows, columns=["conv_id", "ts", "turn_idx"])
     b = spark.createDataFrame(build, schema="conv_id string, ts timestamp, turn_idx int")
     p = spark.createDataFrame(probe, schema="conv_id string, query_ts timestamp, query_id long")
+    kws = {tol: dict(by="conv_id", left_on="query_ts", right_on="ts",
+                     direction="nearest", tolerance=tol,
+                     value_cols=["ts", "turn_idx"])
+           for tol in [None, 60.0]}
+    plains = {}
+    for tol, kw in kws.items():
+        plain = asof_join(p, b, **kw)
+        assert not _is_sliced(plain)
+        plains[tol] = plain.toPandas().sort_values("query_id").reset_index(drop=True)
     # every entity with 2+ rows is hot; slices are ~span/n wide
     hot_above(b, 1)
 
@@ -421,15 +434,9 @@ def test_salted_nearest_matches_plain_with_ties_and_slices(spark, hot_above):
         s = p_sl.loc[p_sl["query_id"] == qid, "__slice"].iloc[0]
         assert s not in e3 and min(e3) < s < max(e3), (qid, s, e3)
 
-    for tol in [None, 60.0]:
-        kw = dict(by="conv_id", left_on="query_ts", right_on="ts",
-                  direction="nearest", tolerance=tol,
-                  value_cols=["ts", "turn_idx"])
-        plain = (
-            asof_join(p, b, **kw)
-            .toPandas().sort_values("query_id").reset_index(drop=True)
-        )
-        auto = asof_join_auto(p, b, **kw)
+    for tol, kw in kws.items():
+        plain = plains[tol]
+        auto = asof_join(p, b, **kw)
         assert _is_sliced(auto)
         salted = auto.toPandas().sort_values("query_id").reset_index(drop=True)
         for c in ["ts", "turn_idx"]:
@@ -496,7 +503,7 @@ def parquet_sides(spark, small_pdf, queries_pdf, tmp_path_factory):
 @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
 def test_auto_plan_is_one_exchange_one_merge(parquet_sides, hot20, direction):
     p, b = parquet_sides
-    out = asof_join_auto(p, hot20(b), direction=direction, value_cols=["ts", "turn_idx"])
+    out = asof_join(p, hot20(b), direction=direction, value_cols=["ts", "turn_idx"])
     assert _is_sliced(out)
     plan = _final_plan(out)
     assert plan.count("MapInPandas") == 1, plan
@@ -514,7 +521,7 @@ def test_auto_nearest_job_budget(spark, parquet_sides, hot20):
         group = f"asof-auto-{direction}"
         sc.setJobGroup(group, group)
         try:
-            asof_join_auto(p, b, direction=direction, value_cols=["ts", "turn_idx"]) \
+            asof_join(p, b, direction=direction, value_cols=["ts", "turn_idx"]) \
                 .write.mode("overwrite").format("noop").save()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
@@ -525,14 +532,14 @@ def test_auto_nearest_job_budget(spark, parquet_sides, hot20):
 
 def test_auto_routes_small_build_to_plain(parquet_sides, monkeypatch):
     """A build whose size estimate fits one task cannot hold a hot entity,
-    so ``asof_join_auto`` is then the plain merge-scan (no hot-set job);
-    with the budget below the estimate it takes the sliced path."""
+    so ``asof_join`` then runs the plain merge-scan (no hot-set job); with
+    the budget below the estimate it takes the sliced route."""
     p, b = parquet_sides
     est = asof_ops._size_estimate(b)
     assert 0 < est <= asof_ops.ASOF_TASK_BYTES
-    assert not _is_sliced(asof_join_auto(p, b, value_cols=["ts", "turn_idx"]))
+    assert not _is_sliced(asof_join(p, b, value_cols=["ts", "turn_idx"]))
     monkeypatch.setattr(asof_ops, "ASOF_TASK_BYTES", est - 1)
-    assert _is_sliced(asof_join_auto(p, b, value_cols=["ts", "turn_idx"]))
+    assert _is_sliced(asof_join(p, b, value_cols=["ts", "turn_idx"]))
 
 
 def test_row_bytes_measures_payload(spark):

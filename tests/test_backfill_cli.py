@@ -3,7 +3,7 @@
 leakage.
 
 The corpus is tiny, so the feature table fits one merge-scan task and
-``asof_join_auto`` takes its plain route here; the time-sliced route is
+``asof_join`` takes its plain route here; the time-sliced route is
 covered in-process (tests/test_asof.py, tests/test_property_asof.py)."""
 
 from __future__ import annotations

@@ -41,6 +41,8 @@ def test_asof_is_single_range_exchange_mergescan(spark, frames):
     assert len(re.findall(r"rangepartitioning", p)) == 1, (
         "exactly one range exchange feeds the merge"
     )
+    # a small input keeps the session-default exchange, which AQE may coalesce
+    assert re.search(r"rangepartitioning\([^)]*\), REPARTITION_BY_COL", p), p
 
 
 def test_turn_features_single_layout_shuffle(spark, frames):

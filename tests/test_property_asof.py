@@ -1,5 +1,5 @@
 """Hypothesis property tests: engine as-of == pandas.merge_asof on random
-skewed frames, plain and skew-safe (one hot entity); sessionize
+skewed frames, plain and time-sliced (one hot entity); sessionize
 invariants."""
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ import pandas as pd
 from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
 
-from tgist_features_spark.operators.asof import asof_join, asof_join_auto
+from tgist_features_spark.operators.asof import asof_join
 from tgist_features_spark.operators.sessionize import sessionize
 
 SPARK = None  # filled by fixture-wrapped tests below
@@ -67,11 +67,10 @@ def _oracle(build, probe, direction):
     direction=st.sampled_from(["backward", "forward", "nearest"]),
     salted=st.booleans(),
 )
-def test_asof_matches_merge_asof(spark, hot_above, seed, direction, salted):
+def test_asof_matches_merge_asof(spark, hot_above, monkeypatch, seed, direction, salted):
     build, probe = _rand_frames(seed, n_entities=5, n_build=60, n_probe=40)
     b = spark.createDataFrame(build, schema="conv_id string, ts timestamp, turn_idx int, v double")
     p = spark.createDataFrame(probe, schema="conv_id string, query_ts timestamp, query_id long")
-    fn = asof_join_auto if salted else asof_join
     if salted:
         # entity e0 (half the rows) is hot and time-sliced; the others stay
         # cold in slice 0 of the same exchange
@@ -79,10 +78,12 @@ def test_asof_matches_merge_asof(spark, hot_above, seed, direction, salted):
         cold_max = int(sizes.drop("e0", errors="ignore").max())
         assume(sizes.get("e0", 0) > cold_max)
         hot_above(b, cold_max)
-    out = fn(p, b, by="conv_id", left_on="query_ts", right_on="ts",
-             direction=direction, value_cols=["ts", "turn_idx", "v"])
-    if salted:
-        assert "__slice" in out._jdf.queryExecution().analyzed().toString()
+    else:
+        # examples share one monkeypatch: drop an earlier example's budget
+        monkeypatch.undo()
+    out = asof_join(p, b, by="conv_id", left_on="query_ts", right_on="ts",
+                    direction=direction, value_cols=["ts", "turn_idx", "v"])
+    assert ("__slice" in out._jdf.queryExecution().analyzed().toString()) == salted
     got = out.toPandas().sort_values("query_id").reset_index(drop=True)
     ref = _oracle(build, probe, direction)
     mt, ot = got["ts"].to_numpy(), ref["ts"].to_numpy()

@@ -18,17 +18,22 @@ against the pure pandas oracle and DuckDB's ASOF JOIN):
 * probes with no eligible build row keep null feature columns (left join);
 * null query_ts or unseen entity -> null match.
 
+Sizing: Catalyst's size estimates of both sides (no job) say how many
+merge-scan tasks of ``ASOF_TARGET_PARTITION_BYTES`` the input needs. Above
+``spark.sql.shuffle.partitions`` the range exchange gets that many;
+otherwise, or with an estimate missing, it keeps the session default,
+which AQE may coalesce.
+
 Skew: a hot conversation funnels its entire probe+build volume through one
-merge-scan task. ``asof_join_auto`` is the skew-safe form of the same
-merge-scan. When Catalyst's size estimate of the build fits one task's
-budget (``ASOF_TASK_BYTES``) no entity can be hot, and it runs the plain
-``asof_join`` with no extra job. Otherwise an entity whose build rows hold
-more than ``ASOF_TASK_BYTES`` of payload is cut into time slices sized from
-its own bytes and time span, cold entities stay in slice 0, and each hot
-probe slice receives the carry-in rows (the latest build row of any earlier
+merge-scan task. When the build's estimate fits one task's budget
+(``ASOF_TASK_BYTES``) no entity can be hot and the merge-scan runs as is,
+with no extra job. Otherwise an entity whose build rows hold more than
+``ASOF_TASK_BYTES`` of payload is cut into time slices sized from its own
+bytes and time span, cold entities stay in slice 0, and each hot probe
+slice receives the carry-in rows (the latest build row of any earlier
 slice and/or the earliest of any later one) its merge needs. Hot and cold
-rows then share ONE range exchange and ONE ``mapInPandas`` keyed on
-``(entity, slice)``; results are identical to ``asof_join`` for every
+rows then share the same ONE range exchange and ONE ``mapInPandas``, keyed
+on ``(entity, slice)``; both routes return the same rows for every
 direction (tests/test_asof.py, tests/test_property_asof.py).
 """
 
@@ -52,13 +57,13 @@ _PANDAS_NULLABLE = {
 }
 
 
-# target bytes of unioned input per merge-scan task ("auto" partition
-# sizing): 64 MB of on-wire data keeps the per-task pandas buffer (roughly
-# 2-4x expansion) comfortably inside executor memory at any input scale
+# target bytes of probe + build input per merge-scan task (the exchange's
+# partition count): 64 MB of on-wire data keeps the per-task pandas buffer
+# (roughly 2-4x expansion) comfortably inside executor memory at any scale
 ASOF_TARGET_PARTITION_BYTES = 64 << 20
 
 # build-side payload bytes of ONE entity that one merge-scan task should
-# hold; an entity with more is hot and ``asof_join_auto`` time-slices it.
+# hold; an entity with more is hot and ``asof_join`` time-slices it.
 # Bytes are summed per row (``_row_bytes``), so the row count this allows
 # follows the build's own width: backfill_features' build (conv_id, ts,
 # turn_idx, 11-double feature_vec) is 109 B/row, hot above ~616k rows.
@@ -80,10 +85,12 @@ _WIDTHS = {
 
 
 def _partitions_for_size(size: int, floor: int) -> int:
-    """Pure sizing rule (unit-tested separately from the Py4J stats call)."""
+    """Tasks needed for ``size`` input bytes, never below ``floor`` (the
+    session's shuffle partitions). Pure, unit-tested apart from the Py4J
+    stats call."""
     if size <= 0 or size >= (1 << 60):
         # no statistics (or the unknown-size sentinel, Long.MaxValue-ish):
-        # fall back to the cluster default rather than a huge shuffle
+        # fall back to the session default rather than a huge shuffle
         return floor
     return max(floor, min(1 << 20, size // ASOF_TARGET_PARTITION_BYTES + 1))
 
@@ -96,14 +103,6 @@ def _size_estimate(df: DataFrame) -> int:
         return int(df._jdf.logicalPlan().stats().sizeInBytes())
     except Exception:
         return 0
-
-
-def _auto_num_partitions(u: DataFrame) -> int:
-    """Partition count from Catalyst's size estimate of the unioned input —
-    no extra jobs. Never below the cluster's default parallelism."""
-    return _partitions_for_size(
-        _size_estimate(u), u.sparkSession.sparkContext.defaultParallelism
-    )
 
 
 def _value_bytes(c: Column, dt: T.DataType) -> Column:
@@ -179,49 +178,32 @@ def _plan(probe: DataFrame, build: DataFrame, by, left_on, right_on, value_cols)
     return by, value_cols, rename, carried, out_schema
 
 
-def asof_join(
+def _merge_scan(
     probe: DataFrame,
     build: DataFrame,
-    by: str | list[str] = "conv_id",
-    left_on: str = "query_ts",
-    right_on: str = "ts",
-    direction: str = "backward",
-    tolerance: float | None = None,
-    allow_exact_matches: bool = True,
-    value_cols: list[str] | None = None,
-    tiebreak: tuple[str, ...] = ("turn_idx",),
-    num_partitions: int | str | None = None,
+    by_list: list[str],
+    left_on: str,
+    right_on: str,
+    direction: str,
+    tolerance: float | None,
+    allow_exact_matches: bool,
+    value_cols: list[str],
+    tb: list[str],
+    tasks: int | None,
 ) -> DataFrame:
-    """Point-in-time join: probe (entity, query_ts) x build (entity, ts).
-    ``direction``: 'backward' (latest row at or before), 'forward'
-    (earliest at or after), or 'nearest' (closest on either side).
-
-    Merge-scan physical plan (the north_star shape): tag both sides, union,
-    ONE ``repartitionByRange`` on the entity key (equal keys never split),
-    ``sortWithinPartitions`` by event time, then a single vectorized
+    """The merge-scan both routes of ``asof_join`` run: tag both sides,
+    union, ONE ``repartitionByRange`` on the entity key (``tasks``
+    partitions, or the session default when None), ``sortWithinPartitions``
+    by (event time, side, tiebreak ``tb``), then one vectorized
     ``pandas.merge_asof(by=entity)`` per partition via ``mapInPandas`` —
     thousands of entities per C-level merge call instead of one Python call
-    per entity. Returns probe.* plus the matched build value columns
-    (renamed with a ``_matched`` suffix on collision). Left-join semantics.
-
-    Memory: one partition is materialized per task (exactly like a sort-
-    merge join buffer); size partitions via ``num_partitions`` /
-    ``spark.sql.shuffle.partitions``, or pass ``num_partitions="auto"`` to
-    size them from Catalyst's size estimate of the unioned input
-    (~``ASOF_TARGET_PARTITION_BYTES`` per task — keeps the per-task pandas
-    buffer bounded as inputs grow, with zero extra jobs). A single entity
-    bigger than a healthy partition is the *skew* case: ``asof_join_auto``
-    runs this same merge-scan with hot entities time-sliced.
-    """
-    assert direction in ("backward", "forward", "nearest")
-    by_list = [by] if isinstance(by, str) else list(by)
+    per entity."""
     _, value_cols, rename, carried, out_schema = _plan(
         probe, build, by_list, left_on, right_on, value_cols
     )
     probe_cols = list(probe.columns)
     carried_names = [f.name for f in carried]
     build_fields = {f.name: f for f in build.schema.fields}
-    tb = [t for t in tiebreak if t in build.columns]
     tb_names = [f"__tb{i}" for i in range(len(tb))]
 
     # tagged union on a common wide schema: probe columns null on the build
@@ -247,17 +229,7 @@ def asof_join(
         *[F.col(t).alias(n) for t, n in zip(tb, tb_names)],
     )
     u = l.unionByName(r.select(*l.columns))
-    if isinstance(num_partitions, str):
-        if num_partitions != "auto":
-            raise ValueError(
-                f"num_partitions must be an int, None or 'auto' — got "
-                f"{num_partitions!r}"
-            )
-        num_partitions = _auto_num_partitions(u)
-    if num_partitions:
-        u = u.repartitionByRange(num_partitions, *by_list)
-    else:
-        u = u.repartitionByRange(*by_list)
+    u = u.repartitionByRange(tasks, *by_list) if tasks else u.repartitionByRange(*by_list)
     u = u.sortWithinPartitions("__key", "__side", *tb_names)
 
     tol = pd.Timedelta(seconds=tolerance) if tolerance is not None else None
@@ -327,7 +299,7 @@ def _tag_slices(df: DataFrame, hot: DataFrame, by: list[str], t_col: str) -> Dat
     )
 
 
-def asof_join_auto(
+def asof_join(
     probe: DataFrame,
     build: DataFrame,
     by: str | list[str] = "conv_id",
@@ -339,48 +311,56 @@ def asof_join_auto(
     value_cols: list[str] | None = None,
     tiebreak: tuple[str, ...] = ("turn_idx",),
 ) -> DataFrame:
-    """Skew-safe ``asof_join``: identical results, bounded per-task bytes.
+    """Point-in-time join: probe (entity, query_ts) x build (entity, ts).
+    ``direction``: 'backward' (latest row at or before), 'forward'
+    (earliest at or after), or 'nearest' (closest on either side). Returns
+    probe.* plus the matched build value columns (renamed with a
+    ``_matched`` suffix on collision). Left-join semantics.
 
-    When Catalyst's size estimate of the build (no job) is within
-    ``ASOF_TASK_BYTES``, no entity can be hot and this is the plain
-    ``asof_join``. The estimate sizes rows from type defaults (an array
-    counts one element), so wide rows can be under-counted — the same
-    estimate Spark uses to pick broadcast joins.
+    Sizing (no job): each ``_merge_scan`` task materializes one partition,
+    like a sort-merge join buffer. Catalyst's size estimates of the probe
+    and of the build's merged columns, over ``ASOF_TARGET_PARTITION_BYTES``,
+    give the tasks the input needs. When that is more than
+    ``spark.sql.shuffle.partitions`` the exchange gets that many
+    partitions; otherwise, or with an estimate missing, it keeps the
+    session default, which AQE may coalesce.
 
-    Otherwise one aggregation over the build side finds the hot entities
-    (more than ``ASOF_TASK_BYTES`` of row payload) and their slice widths;
-    the tiny hot set is broadcast and tags both sides with ``__slice``. For
-    every hot slice that holds probes, the carry-in rows come from one
-    aggregation per hot ``(entity, slice)`` (``max_by``/``min_by`` of the
-    slice's build rows, plus a "holds probes" flag) and one window over
-    those slice rows: the latest summary of any earlier slice (backward)
-    and/or the earliest of any later slice (forward). A probe-only slice
-    still gets its carry. Build rows and carries then go through ONE
-    ``asof_join`` keyed on ``(entity, __slice)``, its partition count sized
-    from the inputs' estimates (~``ASOF_TARGET_PARTITION_BYTES`` per task).
-    Within a slice, the slice's rows plus its carries hold both global
-    candidates, so ``nearest`` is the same single merge (pandas resolves
-    exact-distance ties backward, as in ``asof_join``).
+    Skew: when the build's estimate fits ``ASOF_TASK_BYTES`` no entity can
+    be hot and the merge-scan runs as is. The estimate sizes rows from type
+    defaults (an array counts one element), so wide rows can be
+    under-counted — the same estimate Spark uses to pick broadcast joins.
+    Otherwise (or with no estimate) one aggregation over the build finds
+    the hot entities (more than ``ASOF_TASK_BYTES`` of row payload) and
+    their slice widths; the tiny hot set is broadcast and tags both sides
+    with ``__slice``. For every hot slice that holds probes, the carry-in
+    rows come from one aggregation per hot ``(entity, slice)``
+    (``max_by``/``min_by`` of the slice's build rows, plus a "holds probes"
+    flag) and one window over those slice rows: the latest summary of any
+    earlier slice (backward) and/or the earliest of any later slice
+    (forward). A probe-only slice still gets its carry. Build rows and
+    carries then go through the same merge-scan keyed on
+    ``(entity, __slice)``. Within a slice, the slice's rows plus its
+    carries hold both global candidates, so ``nearest`` is the same single
+    merge (pandas resolves exact-distance ties backward).
     """
-    kw = dict(left_on=left_on, right_on=right_on, direction=direction,
-              tolerance=tolerance, allow_exact_matches=allow_exact_matches,
-              value_cols=value_cols, tiebreak=tiebreak)
-    build_bytes = _size_estimate(build)
-    if 0 < build_bytes <= ASOF_TASK_BYTES:
-        return asof_join(probe, build, by=by, **kw)
-
+    if direction not in ("backward", "forward", "nearest"):
+        raise ValueError(f"direction must be backward, forward or nearest: {direction!r}")
     by_list, value_cols, _, _, _ = _plan(
         probe, build, by, left_on, right_on, value_cols
     )
-    kw["value_cols"] = value_cols
     tb = [t for t in tiebreak if t in build.columns]
     # only the columns the merge reads travel with the build rows and carries
     cols = build.select(*dict.fromkeys([*by_list, right_on, *value_cols, *tb]))
-    sizes = (_size_estimate(probe), _size_estimate(cols))
-    num_partitions = _partitions_for_size(
-        sum(sizes) if min(sizes) > 0 else 0,
-        probe.sparkSession.sparkContext.defaultParallelism,
-    )
+    build_bytes = _size_estimate(cols)
+    sizes = (_size_estimate(probe), build_bytes)
+    default = int(probe.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    need = _partitions_for_size(sum(sizes) if min(sizes) > 0 else 0, default)
+    kw = dict(left_on=left_on, right_on=right_on, direction=direction,
+              tolerance=tolerance, allow_exact_matches=allow_exact_matches,
+              value_cols=value_cols, tb=tb,
+              tasks=need if need > default else None)
+    if 0 < build_bytes <= ASOF_TASK_BYTES:
+        return _merge_scan(probe, cols, by_list, **kw)
 
     b = cols.filter(F.col(right_on).isNotNull())
     hot = _hot_slices(b, by_list, right_on)
@@ -425,11 +405,7 @@ def asof_join_auto(
                          for c in cols.columns if c not in by_list])
     )
 
-    out = asof_join(
-        p.drop("__hot"),
-        b.drop("__hot").unionByName(carries),
-        by=keys,
-        num_partitions=num_partitions,
-        **kw,
+    out = _merge_scan(
+        p.drop("__hot"), b.drop("__hot").unionByName(carries), keys, **kw
     )
     return out.drop("__slice")

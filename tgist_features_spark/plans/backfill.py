@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tgist_features_spark.functions.text import with_ngram_features
-from tgist_features_spark.operators.asof import asof_join_auto
+from tgist_features_spark.operators.asof import asof_join
 from tgist_features_spark.operators.ordering import canonical_order
 
 # ordered numeric feature vector layout (allclose contract is per-position)
@@ -96,13 +96,33 @@ def backfill_features(features: DataFrame, queries: DataFrame) -> DataFrame:
     backward direction, exact matches allowed — a feature stamped at ts is
     valid AT ts).
 
-    The join is the skew-safe ``asof_join_auto``: a feature table that fits
-    one merge-scan task runs the plain merge-scan with no extra job; a
-    bigger one has its hot conversations time-sliced (same rows).
+    The join is ``asof_join``: a feature table that fits one merge-scan task
+    runs the merge-scan with no extra job; a bigger one has its hot
+    conversations time-sliced (same rows). ``features`` should be persisted
+    (or read from a table), because the as-of's range sampling and any hot
+    conversation aggregation each read it again; ``run_backfill`` does that.
     """
     value_cols = ["ts", "turn_idx", "feature_vec"]
     build = features.select("conv_id", *value_cols)
-    return asof_join_auto(
+    return asof_join(
         queries, build, by="conv_id", left_on="query_ts", right_on="ts",
         direction="backward", value_cols=value_cols,
     )
+
+
+def run_backfill(
+    transcripts: DataFrame, probes: DataFrame, output: str, gap_s: float = 1800.0
+) -> None:
+    """The backfill pass: ``turn_features`` of ``transcripts``, persisted
+    for the as-of's several reads, ``backfill_features`` of ``probes`` and
+    one parquet write to ``output`` (``"noop"``: Spark's noop sink, for
+    timing). The features are unpersisted even when the write fails."""
+    feats = turn_features(transcripts, gap_s=gap_s).persist()
+    try:
+        w = backfill_features(feats, probes).write.mode("overwrite")
+        if output == "noop":
+            w.format("noop").save()
+        else:
+            w.parquet(output)
+    finally:
+        feats.unpersist()

@@ -26,7 +26,7 @@ from tgist_features_spark.functions.text import (
     with_lang_id,
     with_quality_features,
 )
-from tgist_features_spark.operators.asof import asof_join, asof_join_auto
+from tgist_features_spark.operators.asof import asof_join
 from tgist_features_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
@@ -389,7 +389,7 @@ FROM j
 
 def q_asof_salted(spark, sf):
     probe, build = _asof_sides(spark, sf)
-    j = asof_join_auto(
+    j = asof_join(
         probe, build, by="user_id", left_on="query_ts", right_on="ts",
         direction="backward", value_cols=["ts", "value"], tiebreak=(),
     )
