@@ -542,6 +542,13 @@ def test_auto_routes_small_build_to_plain(parquet_sides, monkeypatch):
     assert _is_sliced(asof_join(p, b, value_cols=["ts", "turn_idx"]))
 
 
+def test_size_estimate_raises_python_side_errors():
+    """Only a JVM-side failure means "no statistics" (estimate 0); a
+    Python-side error such as a missing ``_jdf`` must surface."""
+    with pytest.raises(AttributeError):
+        asof_ops._size_estimate(object())
+
+
 def test_row_bytes_measures_payload(spark):
     """Hot detection sums per-row payload bytes: byte length for strings
     (UTF-8), elements for arrays (0 when null), fixed widths otherwise

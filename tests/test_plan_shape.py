@@ -9,7 +9,9 @@ import re
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.util import PythonEvalType
 
+from tgist_features_spark.functions.text import ngram_features
 from tgist_features_spark.operators.asof import asof_join
 from tgist_features_spark.plans.backfill import turn_features
 from tgist_features_spark.sources.corpus import (
@@ -52,6 +54,14 @@ def test_turn_features_single_layout_shuffle(spark, frames):
     # window pass and the text UDF reuse that layout shuffle-free
     assert len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 1, p[:1500]
     assert len(re.findall(r"rangepartitioning", p)) == 1
+    # the n-gram kernel is one Arrow UDF, executed as exactly one
+    # ArrowEvalPython node: perfbench's text.* metrics read that node name
+    assert ngram_features.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
+    feats = turn_features(t)
+    feats.collect()
+    final = _plan(feats).split("== Initial Plan ==")[0]
+    assert "== Final Plan ==" in final
+    assert len(re.findall(r"ArrowEvalPython \(\d+\)", final)) == 1, final
 
 
 def test_scan_pushdown_and_pruning(spark):

@@ -1,14 +1,23 @@
-"""Property tests for the vectorized text kernel: the sentinel-join fast
-path must agree with naive per-row Python on arbitrary whitespace/unicode."""
+"""Property tests for the vectorized text kernels: the Arrow tokenizer and
+the n-gram, MinHash and SimHash batches built on it must agree with naive
+per-row Python on arbitrary whitespace/unicode."""
 
 from __future__ import annotations
 
+import sys
+
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings
+import pyarrow as pa
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from tgist_features_spark.functions.text import _flat_tokens, ngram_stats_batch
+from tgist_features_spark.functions.text import (
+    NGRAM_STRUCT,
+    _tokens,
+    ngram_stats_batch,
+)
 
 texts = st.lists(
     st.text(
@@ -21,35 +30,64 @@ texts = st.lists(
     max_size=30,
 )
 
+# explicit batches every text-kernel property also runs on
+_ISSPACE = [chr(c) for c in range(sys.maxunicode + 1) if chr(c).isspace()]
+_EDGE_BATCHES = [
+    ["a\x01b c", "\x01", " \x01 x \x01 "],  # the old join sentinel
+    ["a" + c + "b" for c in _ISSPACE],  # every str.isspace() code point
+    ["  lead", "trail  ", " both ", "   ", "\t\n", ""],
+    [],  # empty batch
+    [None, None],  # all-null batch
+]
+
+
+def _with_edges(test):
+    for rows in _EDGE_BATCHES:
+        test = example(rows)(test)
+    return test
+
 
 @settings(max_examples=200, deadline=None)
 @given(texts)
+@_with_edges
 def test_flat_tokens_matches_str_split(rows):
-    s = pd.Series(rows, dtype=object).fillna("")
-    flat, row_id, lens = _flat_tokens(s)
-    ref = s.str.split()
-    ref_lens = ref.str.len().to_numpy() if len(s) else np.zeros(0)
-    assert (lens == ref_lens).all()
-    ref_flat = [t for toks in ref for t in toks]
-    assert list(flat) == ref_flat
-    ref_rows = [i for i, toks in enumerate(ref) for _ in toks]
-    assert list(row_id) == ref_rows
+    uniq, codes, row_id, lens = _tokens(pa.array(rows, type=pa.string()))
+    ref = [(r or "").split() for r in rows]
+    assert lens.tolist() == [len(t) for t in ref]
+    assert uniq[codes].tolist() == [t for toks in ref for t in toks]
+    assert row_id.tolist() == [i for i, toks in enumerate(ref) for _ in toks]
+    assert len(set(uniq.tolist())) == len(uniq)
 
 
 @settings(max_examples=100, deadline=None)
 @given(texts)
+@_with_edges
+def test_space_tokens_matches_str_split_space(rows):
+    uniq, codes, row_id, lens = _tokens(pa.array(rows, type=pa.string()), sep=" ")
+    ref = [(r or "").split(" ") for r in rows]
+    assert lens.tolist() == [len(t) for t in ref]
+    assert uniq[codes].tolist() == [t for toks in ref for t in toks]
+    assert row_id.tolist() == [i for i, toks in enumerate(ref) for _ in toks]
+    assert len(set(uniq.tolist())) == len(uniq)
+
+
+@settings(max_examples=100, deadline=None)
+@given(texts)
+@_with_edges
 def test_ngram_stats_match_naive_sets(rows):
-    s = pd.Series(rows, dtype=object)
-    got = ngram_stats_batch(s)
-    toks = s.fillna("").str.split()
-    assert got["plen"].tolist() == [len(t) for t in toks]
-    assert got["n_distinct"].tolist() == [len(set(t)) for t in toks]
-    assert got["bigram_distinct"].tolist() == [
+    got = ngram_stats_batch(pa.array(rows, type=pa.string()))
+    assert got.type == pa.struct(list(to_arrow_schema(NGRAM_STRUCT)))
+    toks = [(r or "").split() for r in rows]
+    assert got.field("plen").to_pylist() == [len(t) for t in toks]
+    assert got.field("n_distinct").to_pylist() == [len(set(t)) for t in toks]
+    assert got.field("bigram_distinct").to_pylist() == [
         len({(a, b) for a, b in zip(t, t[1:])}) for t in toks
     ]
-    assert got["trigram_distinct"].tolist() == [
+    assert got.field("trigram_distinct").to_pylist() == [
         len({(a, b, c) for a, b, c in zip(t, t[1:], t[2:])}) for t in toks
     ]
+    sig = pd.util.hash_array(np.array([r or "" for r in rows], dtype=object))
+    assert got.field("ngram_sig").to_pylist() == sig.astype(np.int64).tolist()
 
 
 # ---------------------------------------------------------------- MinHash
@@ -98,6 +136,7 @@ _doc = st.lists(_token, min_size=0, max_size=12).map(" ".join)
 
 @settings(max_examples=60, deadline=None)
 @given(st.lists(_doc, min_size=1, max_size=12))
+@_with_edges
 def test_minhash_segmented_matches_naive(docs):
     """The segmented reduceat vectorization must agree with a naive per-doc
     loop on every doc — including empty docs, sub-shingle docs, and batch
@@ -129,25 +168,26 @@ def _simhash_naive(text: str) -> int:
 
 @settings(max_examples=100, deadline=None)
 @given(texts)
+@_with_edges
 def test_simhash_batch_matches_naive(rows):
     from tgist_features_spark.operators.dedup import _simhash_batch
 
-    s = pd.Series(rows, dtype=object).fillna("")
-    got = _simhash_batch(s)
-    ref = np.array([_simhash_naive(t) for t in s], dtype=np.int64)
+    got = _simhash_batch(pd.Series(rows, dtype=object))
+    ref = np.array([_simhash_naive(t or "") for t in rows], dtype=np.int64)
     assert (got == ref).all(), (got, ref)
 
 
-@settings(max_examples=100, deadline=None)
-@given(texts)
-def test_space_tokens_matches_str_split_space(rows):
-    from tgist_features_spark.operators.dedup import _space_tokens
+def test_simhash_signature_of_null_is_that_of_empty(spark):
+    """A null text signs as "" — never null, so the non-nullability
+    coalesce in ``simhash_signatures`` never fires."""
+    from tgist_features_spark.operators.dedup import simhash_signatures
 
-    s = pd.Series(rows, dtype=object).fillna("")
-    flat, lens = _space_tokens(s)
-    ref = [v.split(" ") for v in s]
-    assert lens.tolist() == [len(r) for r in ref]
-    assert flat.tolist() == [t for r in ref for t in r]
+    df = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "a b")], "doc_id long, text string"
+    )
+    got = {r.id: r.simhash for r in simhash_signatures(df).collect()}
+    assert got[1] == got[2] == _simhash_naive("")
+    assert got[3] == _simhash_naive("a b")
 
 
 def test_simhash_batch_chunking_invariant():

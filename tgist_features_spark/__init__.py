@@ -8,11 +8,12 @@ tables of multi-turn agent transcripts:
 
 * input:  (conv_id string, turn_idx int32, role string, text string,
            tool string, ts timestamp[us])
-* engine: pyspark.sql DataFrame API + vectorized Arrow pandas UDFs only
+* engine: pyspark.sql DataFrame API + vectorized Arrow (pandas) UDFs only
   (no RDDs, no per-row Python UDFs)
 * core:   as-of (backward/forward) merge-scan join, lag/lead turn features,
   timestamp-gap sessionize, rolling per-role/tool counts, n-gram/chunk
-  text features, salted skew handling, per-partition lineage manifest.
+  text features, time-sliced hot conversations in the as-of,
+  per-partition lineage manifest.
 
 The reference checkout was empty during the survey session (SURVEY.md §0),
 so reference parity is defined by BASELINE.json's north_rule and verified

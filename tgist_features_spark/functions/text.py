@@ -4,19 +4,22 @@ stages of the reference, re-expressed as columnar ops.
 The reference ran a per-line Python loop over POS-tagged text to emit chunk
 features (first_word, last_word, plen, suffix3/4/5, prev/next context).
 Here the cheap features are pure Catalyst expressions (whole-stage codegen,
-zero Python) and the n-gram/signature features are ONE vectorized Arrow
-pandas UDF over token arrays — no per-row Python UDFs anywhere
-(BASELINE.json:15 input_hint).
+zero Python) and the n-gram/signature features are ONE vectorized Arrow UDF
+(`arrow_udf`: Arrow batches in and out, tokens split by Arrow compute) — no
+per-row Python UDFs anywhere (BASELINE.json:15 input_hint).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # ---------------------------------------------------------------- F1 tokenize
 
@@ -261,74 +264,69 @@ def _distinct_per_row(row_id: np.ndarray, h: np.ndarray, n_rows: int) -> np.ndar
     return np.bincount(rr[new], minlength=n_rows).astype(np.int64)
 
 
-def _flat_tokens(text: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(flat_tokens, row_id, lens) without per-row Python list objects:
-    join all rows with a sentinel token and split ONCE (one C call), then
-    recover row boundaries from sentinel positions."""
-    n = len(text)
-    vals = text.to_numpy(dtype=object)
-    if n and not text.str.contains("\x01").any():
-        big = " \x01 ".join(vals).split()
-        arr = np.array(big, dtype=object)
-        sent = arr == "\x01"
-        row_id = np.cumsum(sent)
-        keep = ~sent
-        flat, row_id = arr[keep], row_id[keep].astype(np.int64)
-        lens = np.bincount(row_id, minlength=n).astype(np.int64)
-        return flat, row_id, lens
-    # slow path (sentinel collision or empty batch)
-    tok_lists = text.str.split()
-    lens = tok_lists.str.len().to_numpy(dtype=np.int64) if n else np.zeros(0, np.int64)
-    flat = np.array([t for toks in tok_lists for t in toks], dtype=object)
-    row_id = np.repeat(np.arange(n, dtype=np.int64), lens)
-    return flat, row_id, lens
+def _tokens(
+    text: pa.Array, sep: str | None = None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Split a batch of texts in Arrow and dictionary-encode the tokens:
+    ``(uniq, codes, row_id, lens)``, where ``uniq[codes]`` is the flat
+    token sequence, ``row_id`` its source row and ``lens`` the per-row
+    token counts. Callers hash ``uniq`` once and gather with ``codes``.
+
+    ``sep=None`` is ``str.split()`` (runs of Unicode whitespace, no empty
+    tokens); ``sep=" "`` is ``str.split(" ")``, i.e. SQL
+    ``string_split(text, ' ')`` (empty tokens kept). A null text
+    tokenizes as ``""``."""
+    text = pc.fill_null(text, "")
+    lists = (pc.utf8_split_whitespace(text) if sep is None
+             else pc.split_pattern(text, sep))
+    flat, row_id = pc.list_flatten(lists), pc.list_parent_indices(lists)
+    if sep is None:  # Arrow emits "" at leading/trailing whitespace and for ""
+        keep = pc.not_equal(flat, "")
+        flat, row_id = flat.filter(keep), row_id.filter(keep)
+    row_id = row_id.to_numpy().astype(np.int64)
+    lens = np.bincount(row_id, minlength=len(text)).astype(np.int64)
+    enc = pc.dictionary_encode(flat)
+    uniq = enc.dictionary.to_numpy(zero_copy_only=False)
+    return uniq, enc.indices.to_numpy(), row_id, lens
 
 
-def ngram_stats_batch(text: pd.Series) -> pd.DataFrame:
+_NGRAM_ARROW = to_arrow_schema(NGRAM_STRUCT)
+
+
+def ngram_stats_batch(text: pa.Array) -> pa.StructArray:
     """Vectorized n-gram stats for one Arrow batch: token/bigram/trigram
     distinct counts via hashed tokens + lexsort boundary counting, document
     signature via pandas' stable 64-bit string hash. No per-row Python loop
-    anywhere — one global split + one hash call per batch."""
-    text = text.fillna("")
+    anywhere — one Arrow split + one hash of the distinct tokens per batch."""
     n = len(text)
-    flat, row_id, lens = _flat_tokens(text)
-    h = pd.util.hash_array(flat) if len(flat) else np.empty(0, dtype=np.uint64)
+    uniq, codes, row_id, lens = _tokens(text)
+    h = pd.util.hash_array(uniq, categorize=False)[codes]
 
     n_distinct = _distinct_per_row(row_id, h, n)
 
-    same2 = row_id[1:] == row_id[:-1] if len(row_id) > 1 else np.empty(0, bool)
+    # short batches need no guard: the shifted slices are just empty
+    same2 = row_id[1:] == row_id[:-1]
+    same3 = same2[1:] & same2[:-1]
     with np.errstate(over="ignore"):
-        h2 = (h[:-1] * _MIX1 + h[1:]) if len(h) > 1 else np.empty(0, np.uint64)
+        h2 = h[:-1] * _MIX1 + h[1:]
         bi = _distinct_per_row(row_id[1:][same2], h2[same2], n)
-        same3 = same2[1:] & same2[:-1] if len(row_id) > 2 else np.empty(0, bool)
-        h3 = (
-            (h[:-2] * _MIX2 + h[1:-1]) * _MIX1 + h[2:]
-            if len(h) > 2
-            else np.empty(0, np.uint64)
-        )
+        h3 = (h[:-2] * _MIX2 + h[1:-1]) * _MIX1 + h[2:]
         tri = _distinct_per_row(row_id[2:][same3], h3[same3], n)
 
-    sig = pd.util.hash_array(text.to_numpy(dtype=object)).astype(np.int64)
+    texts = pc.fill_null(text, "").to_numpy(zero_copy_only=False)
+    sig = pd.util.hash_array(texts).astype(np.int64)
     lens_f = lens.astype(np.float64)
-    return pd.DataFrame(
-        {
-            "plen": lens.astype(np.int64),
-            "n_distinct": n_distinct,
-            "bigram_distinct": bi,
-            "trigram_distinct": tri,
-            "ngram_sig": sig,
-            "distinct_ratio": np.where(
-                lens_f > 0, n_distinct / np.maximum(lens_f, 1.0), 0.0
-            ),
-        }
-    )
+    ratio = np.where(lens_f > 0, n_distinct / np.maximum(lens_f, 1.0), 0.0)
+    cols = [lens, n_distinct, bi, tri, sig, ratio]
+    return pa.StructArray.from_arrays(cols, fields=list(_NGRAM_ARROW))
 
 
-@pandas_udf(NGRAM_STRUCT)
-def ngram_features(text: pd.Series) -> pd.DataFrame:
+@arrow_udf(NGRAM_STRUCT)
+def ngram_features(text: pa.Array) -> pa.Array:
     """Arrow-batched n-gram/signature features (the reference's chunker
-    feature pass as one columnar op). Executed once per Arrow batch —
-    vectorized numpy inside, no Spark-row-level Python."""
+    feature pass as one columnar op). Executed once per Arrow batch, Arrow
+    in and Arrow out — vectorized Arrow compute and numpy inside, no
+    Spark-row-level Python."""
     return ngram_stats_batch(text)
 
 

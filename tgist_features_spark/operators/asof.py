@@ -40,6 +40,7 @@ direction (tests/test_asof.py, tests/test_property_asof.py).
 from __future__ import annotations
 
 import pandas as pd
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -98,10 +99,10 @@ def _partitions_for_size(size: int, floor: int) -> int:
 def _size_estimate(df: DataFrame) -> int:
     """Catalyst's size estimate of ``df``'s analyzed plan in bytes — no job
     (statistics come from file sizes / plan estimation) and no optimizer
-    pass; 0 when it is unavailable."""
+    pass; 0 when the JVM cannot provide it. Python-side errors raise."""
     try:
         return int(df._jdf.logicalPlan().stats().sizeInBytes())
-    except Exception:
+    except Py4JError:
         return 0
 
 

@@ -34,12 +34,13 @@ import logging
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from tgist_features_spark.functions.text import _flat_tokens
+from tgist_features_spark.functions.text import _tokens
 
 logger = logging.getLogger(__name__)
 
@@ -105,20 +106,16 @@ _MIXA = np.uint64(0x9E3779B97F4A7C15)
 def _shingle_hashes(texts: pd.Series, shingle: int) -> tuple[np.ndarray, np.ndarray]:
     """Flatten a batch of texts into (shingle_hash_values, per_doc_counts).
 
-    One C-level split + one hash call for the whole batch; word-k-shingle
-    hashes come from a vectorized rolling mix over consecutive token hashes.
-    Docs shorter than ``shingle`` tokens contribute one whole-doc shingle.
+    One Arrow split + one hash of the distinct tokens for the whole batch;
+    word-k-shingle hashes come from a vectorized rolling mix over
+    consecutive token hashes. Docs shorter than ``shingle`` tokens
+    contribute one whole-doc shingle.
     MinHash is invariant to duplicate shingles (min over a multiset equals
     min over its set), so no per-doc dedup is needed.
     """
-    texts = texts.fillna("")
     n = len(texts)
-    flat, row_id, lens = _flat_tokens(texts)
-    h = (
-        pd.util.hash_array(flat).astype(np.uint64)
-        if len(flat)
-        else np.empty(0, dtype=np.uint64)
-    )
+    uniq, codes, row_id, lens = _tokens(pa.array(texts, type=pa.string()))
+    h = pd.util.hash_array(uniq, categorize=False)[codes]
     k = shingle
     with np.errstate(over="ignore"):
         if len(h) >= k:
@@ -404,44 +401,16 @@ def _md5_token_hashes(uniq: np.ndarray) -> np.ndarray:
     return out
 
 
-def _space_tokens(texts: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """(flat_tokens, per-doc lens) splitting on the LITERAL single space —
-    the exact semantics of SQL ``string_split(text, ' ')`` (empty text
-    yields one '' token; runs of spaces yield '' tokens), so signatures
-    derived from these tokens are engine-reproducible. One C-level split
-    for the whole batch via a sentinel join; per-row fallback only on
-    sentinel collision."""
-    texts = texts.fillna("")
-    n = len(texts)
-    if n == 0:
-        return np.empty(0, dtype=object), np.empty(0, dtype=np.int64)
-    vals = texts.to_numpy(dtype=object)
-    if not texts.str.contains("\x01").any():
-        arr = np.array(" \x01 ".join(vals).split(" "), dtype=object)
-        sent = arr == "\x01"
-        row_id = np.cumsum(sent)
-        flat = arr[~sent]
-        lens = np.bincount(row_id[~sent], minlength=n).astype(np.int64)
-        return flat, lens
-    toks = [v.split(" ") for v in vals]  # slow path: sentinel collision
-    lens = np.array([len(t) for t in toks], dtype=np.int64)
-    return np.array([x for t in toks for x in t], dtype=object), lens
-
-
 def _simhash_batch(texts: pd.Series, chunk_tokens: int = 1 << 16) -> np.ndarray:
-    """Vectorized SimHash for one Arrow batch: flat single-space tokens ->
+    """Vectorized SimHash for one Arrow batch: single-space tokens
+    (``string_split(text, ' ')`` semantics, see ``_tokens``) ->
     memoized md5 hashes -> (tokens x 64) ±1 bit matrix -> per-doc segment
     sums via ``np.add.reduceat`` -> sign pack. No per-document Python loop;
     chunked over docs so the bit matrix stays ~``chunk_tokens`` x 64."""
-    texts = texts.fillna("")
     n = len(texts)
-    flat, lens = _space_tokens(texts)
+    uniq, codes, _, lens = _tokens(pa.array(texts, type=pa.string()), sep=" ")
     starts = np.concatenate(([0], np.cumsum(lens)))
-    if len(flat):
-        uniq, inv = np.unique(flat, return_inverse=True)
-        fh = _md5_token_hashes(uniq)[inv]
-    else:
-        fh = np.empty(0, dtype=np.uint64)
+    fh = _md5_token_hashes(uniq)[codes]
     shifts = np.arange(64, dtype=np.uint64)
     weights = np.uint64(1) << shifts
     sig = np.zeros(n, dtype=np.uint64)
@@ -486,14 +455,16 @@ def simhash_signatures(
     def sh(texts: pd.Series) -> pd.Series:
         return pd.Series(_simhash_batch(texts))
 
-    # coalesce makes the column STATICALLY non-nullable (the UDF never
-    # returns null — nulls are fillna('')-signed — but Catalyst only sees
-    # the declared nullability). Without it, every downstream equi-join
-    # key derived from the signature gets an inferred isnotnull filter
-    # pushed BELOW the fan-out exchange, re-evaluating the UDF once per
-    # row per side (guide §4.4); the non-nullable output kills the
-    # inference at the source while keeping the expression deterministic,
-    # so AQE's cross-side stage reuse stays intact.
+    # The UDF never returns null: a null text tokenizes as "" and gets the
+    # signature of "". 0 is a legal SimHash, so the coalesce is no
+    # out-of-domain sentinel; it exists only to make the column STATICALLY
+    # non-nullable (Catalyst only sees the declared nullability). Without
+    # it, every downstream equi-join key derived from the signature gets
+    # an inferred isnotnull filter pushed BELOW the fan-out exchange,
+    # re-evaluating the UDF once per row per side (guide §4.4); the
+    # non-nullable output kills the inference at the source while keeping
+    # the expression deterministic, so AQE's cross-side stage reuse stays
+    # intact.
     return df.select(
         F.col(id_col).alias("id"),
         F.coalesce(sh(F.col(text_col)), F.lit(0)).alias("simhash"),

@@ -13,8 +13,9 @@ inputs and "per-turn text equality under stable (conv_id, turn_idx) ordering"
 is checkable exactly.
 
 Skew is built in: per-conversation turn counts are Zipf(a=1.5) clipped to
-[2, 5000], so a few conversations are hot — the salted as-of path and the
-AQE skew configs have something real to chew on even at small scale.
+[2, 5000], so a few conversations are hot — the as-of's time slicing of hot
+conversations and the AQE skew configs have something real to chew on even
+at small scale.
 """
 
 from __future__ import annotations
