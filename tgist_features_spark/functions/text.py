@@ -314,7 +314,7 @@ def ngram_stats_batch(text: pa.Array) -> pa.StructArray:
         tri = _distinct_per_row(row_id[2:][same3], h3[same3], n)
 
     texts = pc.fill_null(text, "").to_numpy(zero_copy_only=False)
-    sig = pd.util.hash_array(texts).astype(np.int64)
+    sig = pd.util.hash_array(texts, categorize=False).astype(np.int64)
     lens_f = lens.astype(np.float64)
     ratio = np.where(lens_f > 0, n_distinct / np.maximum(lens_f, 1.0), 0.0)
     cols = [lens, n_distinct, bi, tri, sig, ratio]

@@ -3,9 +3,10 @@
 Pipeline (engine lifecycle, SURVEY.md §3.2):
 
     scan -> derive -> canonical order (ONE range shuffle, reused by every
-    window pass) -> W1-W6 window features -> F6 text features (one Arrow
-    pandas UDF) -> per-(entity, ts) feature vector -> J1 as-of merge against
-    the probe/label side -> sink + lineage.
+    window pass) -> W1-W6 window features -> F6 text features (one
+    ``arrow_udf``, Arrow batches in and out) -> per-(entity, ts) feature
+    vector -> J1 as-of merge against the probe/label side (one
+    ``mapInPandas`` merge-scan) -> sink + lineage.
 
 Every feature is strictly backward-looking (frames end at -1, or at 0 only
 where the current turn's own content is legitimately visible at its own
