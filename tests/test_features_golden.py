@@ -68,6 +68,36 @@ def test_ngram_sig_exact(engine_vs_oracle):
     assert (out["ngram_sig"].to_numpy() == ref["ngram_sig"].to_numpy()).all()
 
 
+@pytest.mark.parametrize("gap_s", [0.0, 60, 1800.0, float("inf")])
+def test_gap_s_reaches_plan(spark, small_pdf, gap_s):
+    """``gap_s`` (a float, an int or inf) sets the session boundaries
+    exactly as the oracle's: every feature column matches."""
+    out = (
+        turn_features(transcripts_df(spark, small_pdf), gap_s=gap_s)
+        .toPandas()
+        .sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort")
+        .reset_index(drop=True)
+    )
+    ref = oracle_turn_features(small_pdf, gap_s=gap_s)
+    for c in FEATURE_COLS:
+        np.testing.assert_allclose(
+            out[c].astype("float64").to_numpy(),
+            ref[c].astype("float64").to_numpy(),
+            equal_nan=True,
+            err_msg=c,
+        )
+
+
+def test_gap_s_values_differ(small_pdf):
+    """The data behind ``test_gap_s_reaches_plan`` tells its gap values
+    apart: each gives a different number of sessions."""
+    sessions = [
+        oracle_turn_features(small_pdf, gap_s=g)["session_id"].sum()
+        for g in (0.0, 60, 1800.0, float("inf"))
+    ]
+    assert len(set(sessions)) == 4, sessions
+
+
 def test_parallelism_invariance(spark, tiny_pdf):
     """Same result regardless of partitioning (float-order discipline)."""
     df = transcripts_df(spark, tiny_pdf)

@@ -59,6 +59,23 @@ def test_flat_tokens_matches_str_split(rows):
     assert len(set(uniq.tolist())) == len(uniq)
 
 
+def test_flat_tokens_ignore_bytes_after_last_text():
+    """The bytes after a batch's last text (buffer padding, not guaranteed
+    zero) must not change its tokens, for every whitespace it can end in."""
+    for last in [*["a" + c for c in _ISSPACE], *["a" + c + "b " for c in _ISSPACE]]:
+        for tail in (b"\x00", b"\x80", b"\xc2", b"\xff"):
+            batch = ["q r", last]
+            data = "".join(batch).encode()
+            offsets = pa.array([0, len(batch[0].encode()), len(data)], pa.int32())
+            arr = pa.StringArray.from_buffers(
+                2, offsets.buffers()[1], pa.py_buffer(data + tail)
+            )
+            uniq, codes, row_id, lens = _tokens(arr)
+            ref = [r.split() for r in batch]
+            assert uniq[codes].tolist() == [t for toks in ref for t in toks], (last, tail)
+            assert lens.tolist() == [len(t) for t in ref]
+
+
 @settings(max_examples=100, deadline=None)
 @given(texts)
 @_with_edges

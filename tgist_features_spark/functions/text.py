@@ -21,6 +21,8 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from tgist_features_spark.functions.sqltext import ident
+
 # ---------------------------------------------------------------- F1 tokenize
 
 _TOKEN_RE = r"[A-Za-z0-9_]+|[^A-Za-z0-9_\s]"
@@ -248,20 +250,22 @@ NGRAM_STRUCT = T.StructType(
     ]
 )
 
-_MIX1 = np.uint64(0x9E3779B97F4A7C15)
-_MIX2 = np.uint64(0xC2B2AE3D27D4EB4F)
-
-
-def _distinct_per_row(row_id: np.ndarray, h: np.ndarray, n_rows: int) -> np.ndarray:
-    """Count distinct hash values per row_id — sort + boundary scan, O(n log n)."""
+def _distinct_per_row(row_id: np.ndarray, key: np.ndarray, m: int, n_rows: int) -> np.ndarray:
+    """Count distinct ``key`` values (ints in ``[0, m)``) per row_id: one
+    sort of the packed ``row_id * m + key`` and a boundary scan."""
     if len(row_id) == 0:
         return np.zeros(n_rows, dtype=np.int64)
-    order = np.lexsort((h, row_id))
-    rr, hh = row_id[order], h[order]
-    new = np.empty(len(rr), dtype=bool)
+    packed = np.sort(row_id * m + key)
+    new = np.empty(len(packed), dtype=bool)
     new[0] = True
-    new[1:] = (rr[1:] != rr[:-1]) | (hh[1:] != hh[:-1])
-    return np.bincount(rr[new], minlength=n_rows).astype(np.int64)
+    np.not_equal(packed[1:], packed[:-1], out=new[1:])
+    return np.bincount(packed[new] // m, minlength=n_rows).astype(np.int64)
+
+
+def _dense(key: np.ndarray) -> tuple[np.ndarray, int]:
+    """Dense ids of ``key``'s distinct values, and how many there are."""
+    uniq, inv = np.unique(key, return_inverse=True)
+    return inv.reshape(-1), len(uniq)
 
 
 def _tokens(
@@ -277,10 +281,14 @@ def _tokens(
     ``string_split(text, ' ')`` (empty tokens kept). A null text
     tokenizes as ``""``."""
     text = pc.fill_null(text, "")
-    lists = (pc.utf8_split_whitespace(text) if sep is None
+    # trimmed first: when the bytes after the batch's last text are not
+    # ASCII (buffer padding is not guaranteed zero), Arrow 16's
+    # utf8_split_whitespace keeps that text's trailing whitespace in its
+    # last token
+    lists = (pc.utf8_split_whitespace(pc.utf8_trim_whitespace(text)) if sep is None
              else pc.split_pattern(text, sep))
     flat, row_id = pc.list_flatten(lists), pc.list_parent_indices(lists)
-    if sep is None:  # Arrow emits "" at leading/trailing whitespace and for ""
+    if sep is None:  # Arrow emits "" for an empty (or all-whitespace) text
         keep = pc.not_equal(flat, "")
         flat, row_id = flat.filter(keep), row_id.filter(keep)
     row_id = row_id.to_numpy().astype(np.int64)
@@ -294,24 +302,27 @@ _NGRAM_ARROW = to_arrow_schema(NGRAM_STRUCT)
 
 
 def ngram_stats_batch(text: pa.Array) -> pa.StructArray:
-    """Vectorized n-gram stats for one Arrow batch: token/bigram/trigram
-    distinct counts via hashed tokens + lexsort boundary counting, document
-    signature via pandas' stable 64-bit string hash. No per-row Python loop
-    anywhere — one Arrow split + one hash of the distinct tokens per batch."""
+    """Vectorized n-gram stats for one Arrow batch. Token, bigram and
+    trigram distinct counts are exact: they count distinct dictionary
+    codes of the tokens, and of dense ids of adjacent code pairs and
+    triples (``_dense``, so no packed key can overflow), with one sort per
+    n-gram order. The document signature is pandas' stable 64-bit string
+    hash. No per-row Python loop anywhere — one Arrow split per batch."""
     n = len(text)
     uniq, codes, row_id, lens = _tokens(text)
-    h = pd.util.hash_array(uniq, categorize=False)[codes]
+    m = len(uniq)
+    c = codes.astype(np.int64)
 
-    n_distinct = _distinct_per_row(row_id, h, n)
+    n_distinct = _distinct_per_row(row_id, c, m, n)
 
-    # short batches need no guard: the shifted slices are just empty
+    # short batches need no guard: the shifted slices are just empty; a
+    # pair or triple that crosses rows gets an id too, but is never counted
     same2 = row_id[1:] == row_id[:-1]
     same3 = same2[1:] & same2[:-1]
-    with np.errstate(over="ignore"):
-        h2 = h[:-1] * _MIX1 + h[1:]
-        bi = _distinct_per_row(row_id[1:][same2], h2[same2], n)
-        h3 = (h[:-2] * _MIX2 + h[1:-1]) * _MIX1 + h[2:]
-        tri = _distinct_per_row(row_id[2:][same3], h3[same3], n)
+    d2, m2 = _dense(c[:-1] * m + c[1:])
+    bi = _distinct_per_row(row_id[1:][same2], d2[same2], m2, n)
+    d3, m3 = _dense(d2[:-1][same3] * m + c[2:][same3])
+    tri = _distinct_per_row(row_id[2:][same3], d3, m3, n)
 
     texts = pc.fill_null(text, "").to_numpy(zero_copy_only=False)
     sig = pd.util.hash_array(texts, categorize=False).astype(np.int64)
@@ -331,11 +342,14 @@ def ngram_features(text: pa.Array) -> pa.Array:
 
 
 def with_ngram_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    nf = ngram_features(F.col(text_col)).alias("__nf")
-    out = df.withColumn("__nf", nf)
-    for f in NGRAM_STRUCT.fields:
-        out = out.withColumn(f.name, F.col(f"__nf.{f.name}"))
-    return out.drop("__nf")
+    """``df`` plus the six ``NGRAM_STRUCT`` columns of ``text_col``, added
+    in one projection with ``withColumn``'s semantics: a column of ``df``
+    with the same name is replaced where it stands."""
+    fields = [f.name for f in NGRAM_STRUCT.fields]
+    cols = [f"__nf.{c} AS {c}" if c in fields else ident(c) for c in df.columns]
+    cols += [f"__nf.{c} AS {c}" for c in fields if c not in df.columns]
+    out = df.select("*", ngram_features(F.col(text_col)).alias("__nf"))
+    return out.selectExpr(*cols)
 
 
 # ----------------------------------------------------------- TF-IDF

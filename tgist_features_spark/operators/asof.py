@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tgist_features_spark.functions.sqltext import ident
 from tgist_features_spark.functions.timeu import us
 
 _PANDAS_NULLABLE = {
@@ -204,32 +205,24 @@ def _merge_scan(
     )
     probe_cols = list(probe.columns)
     carried_names = [f.name for f in carried]
-    build_fields = {f.name: f for f in build.schema.fields}
     tb_names = [f"__tb{i}" for i in range(len(tb))]
 
-    # tagged union on a common wide schema: probe columns null on the build
-    # side and vice versa; __key is the event-time merge key on both sides
-    l = probe.select(
-        F.lit(0).alias("__side"),
-        F.col(left_on).cast("timestamp_ntz").alias("__key"),
-        *[F.col(c) for c in probe_cols],
-        *[
-            F.lit(None).cast(build_fields[c].dataType).alias(rename[c])
-            for c in value_cols
-        ],
-        *[F.lit(None).cast(build_fields[t].dataType).alias(n)
-          for t, n in zip(tb, tb_names)],
+    # tagged union on a common wide schema: the JVM fills probe columns
+    # with nulls on the build side and vice versa; __key is the event-time
+    # merge key on both sides. Expressions are SQL text (functions/sqltext)
+    l = probe.selectExpr(
+        "0 AS __side",
+        f"CAST({ident(left_on)} AS TIMESTAMP_NTZ) AS __key",
+        *map(ident, probe_cols),
     )
-    r = build.filter(F.col(right_on).isNotNull()).select(
-        F.lit(1).alias("__side"),
-        F.col(right_on).cast("timestamp_ntz").alias("__key"),
-        *[F.col(b) for b in by_list],
-        *[F.lit(None).cast(f.dataType).alias(f.name)
-          for f in probe.schema.fields if f.name not in by_list],
-        *[F.col(c).alias(rename[c]) for c in value_cols],
-        *[F.col(t).alias(n) for t, n in zip(tb, tb_names)],
+    r = build.filter(f"{ident(right_on)} IS NOT NULL").selectExpr(
+        "1 AS __side",
+        f"CAST({ident(right_on)} AS TIMESTAMP_NTZ) AS __key",
+        *map(ident, by_list),
+        *[f"{ident(c)} AS {ident(rename[c])}" for c in value_cols],
+        *[f"{ident(t)} AS {n}" for t, n in zip(tb, tb_names)],
     )
-    u = l.unionByName(r.select(*l.columns))
+    u = l.unionByName(r, allowMissingColumns=True)
     u = u.repartitionByRange(tasks, *by_list) if tasks else u.repartitionByRange(*by_list)
     u = u.sortWithinPartitions("__key", "__side", *tb_names)
 

@@ -12,13 +12,23 @@ Every feature is strictly backward-looking (frames end at -1, or at 0 only
 where the current turn's own content is legitimately visible at its own
 timestamp) — the zero-temporal-leakage contract. ``next_role`` is emitted as
 an explicitly label-side column and excluded from the feature vector.
+
+The feature expressions are SQL text, one ``selectExpr`` per window pass.
+In classic PySpark a Column method or a function such as ``col`` or
+``when`` costs 11-14 Py4J round trips (``_with_origin`` looks up the
+active session, reads a conf and sets and clears the call-site origin),
+and each DataFrame operation re-analyses the plan; an expression string
+is one round trip however large (``functions/sqltext.py``). Built with Column
+calls, the plans of ``turn_features`` and ``backfill_features`` cost
+~1,800 round trips and ~0.5 s on the ``backfill`` benchmark input
+before the first job ran; as SQL text, ~320 and ~0.3 s.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from tgist_features_spark.functions.sqltext import double_lit, epoch_us
 from tgist_features_spark.functions.text import with_ngram_features
 from tgist_features_spark.operators.asof import asof_join
 from tgist_features_spark.operators.ordering import canonical_order
@@ -39,6 +49,14 @@ FEATURE_COLS = [
 ]
 
 
+# the window specs of the feature passes, as SQL text (plain strings: no
+# JVM objects, parsed once per expression by the JVM)
+_W = "PARTITION BY conv_id ORDER BY ts, turn_idx"
+_W_ALL = "PARTITION BY conv_id"
+_W_CUM = f"{_W} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+_W_ROLL = f"{_W} ROWS BETWEEN 5 PRECEDING AND 1 PRECEDING"
+
+
 def turn_features(df: DataFrame, gap_s: float = 1800.0) -> DataFrame:
     """transcripts -> one feature row per turn (entity x timestamp).
 
@@ -46,49 +64,46 @@ def turn_features(df: DataFrame, gap_s: float = 1800.0) -> DataFrame:
     semantics identical, oracle-gated): expressions sharing a frame share
     one Window node, so the whole feature pass is 4 window passes over the
     single canonical-order sort instead of 8.
+
+    Each pass is one ``selectExpr`` of SQL text (a few hundred Py4J calls
+    for the whole plan instead of over a thousand; module docstring).
+    ``gap_s`` enters the text as a checked DOUBLE literal, inf included
+    (``sqltext.double_lit``).
     """
-    from pyspark.sql import Window
-
-    from tgist_features_spark.functions.timeu import us
-
     out = canonical_order(df)
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-    w_all = Window.partitionBy("conv_id")
-    w_cum = w.rowsBetween(Window.unboundedPreceding, 0)
-    w_roll = w.rowsBetween(-5, -1)
-
     # pass 1 — plain offset/frame-free expressions (lag/lead family)
-    prev_ts = F.lag("ts").over(w)
-    out = out.select(
+    out = out.selectExpr(
         "*",
-        ((us(F.col("ts")) - us(prev_ts)) / F.lit(1_000_000.0)).alias("gap_s"),
-        F.lag("role").over(w).alias("prev_role"),
-        F.lead("role").over(w).alias("next_role"),
-        F.count(F.lit(1)).over(w_all).alias("turns_total"),
+        f"({epoch_us('ts')} - {epoch_us(f'lag(ts) OVER ({_W})')}) / 1000000.0D"
+        " AS gap_s",
+        f"lag(role) OVER ({_W}) AS prev_role",
+        f"lead(role) OVER ({_W}) AS next_role",
+        f"count(1) OVER ({_W_ALL}) AS turns_total",
     )
     # pass 2 — cumulative frame (row_number shares the running frame)
-    boundary = F.when(F.col("gap_s") > F.lit(gap_s), 1).otherwise(0)
-    out = out.select(
+    boundary = f"CASE WHEN gap_s > {double_lit(gap_s)} THEN 1 ELSE 0 END"
+    out = out.selectExpr(
         "*",
-        F.row_number().over(w).alias("turn_no"),
-        F.sum(boundary).over(w_cum).cast("long").alias("session_id"),
-        F.last("tool", ignorenulls=True).over(w_cum).alias("last_tool"),
-        F.sum(F.length("text")).over(w_cum).cast("long").alias("cum_chars"),
+        f"row_number() OVER ({_W}) AS turn_no",
+        f"CAST(sum({boundary}) OVER ({_W_CUM}) AS BIGINT) AS session_id",
+        f"last(tool, true) OVER ({_W_CUM}) AS last_tool",
+        f"CAST(sum(length(text)) OVER ({_W_CUM}) AS BIGINT) AS cum_chars",
     )
-    out = out.withColumn("turns_remaining", F.col("turns_total") - F.col("turn_no"))
-    # pass 3 — trailing row frame (-5..-1): leakage-safe rolling features
-    out = out.select(
+    # pass 3 — trailing row frame (-5..-1): leakage-safe rolling features;
+    # an empty frame on the first turn is null, and counts are 0 there
+    out = out.selectExpr(
         "*",
-        F.sum(F.when(F.col("role") == "user", 1).otherwise(0)).over(w_roll).alias("n_user_5"),
-        F.sum(F.when(F.col("role") == "tool", 1).otherwise(0)).over(w_roll).alias("n_tool_5"),
-        F.avg(F.length("text")).over(w_roll).alias("roll_chars_5"),
+        "turns_total - turn_no AS turns_remaining",
+        *[
+            f"CAST(coalesce(sum(CASE WHEN role = '{r}' THEN 1 ELSE 0 END)"
+            f" OVER ({_W_ROLL}), 0) AS BIGINT) AS n_{r}_5"
+            for r in ("user", "tool")
+        ],
+        f"avg(length(text)) OVER ({_W_ROLL}) AS roll_chars_5",
     )
-    # empty frame on the first turn -> null; counts are 0 by definition
-    out = out.withColumn("n_user_5", F.coalesce("n_user_5", F.lit(0)).cast("long"))
-    out = out.withColumn("n_tool_5", F.coalesce("n_tool_5", F.lit(0)).cast("long"))
     out = with_ngram_features(out)
-    vec = F.array(*[F.col(c).cast("double") for c in FEATURE_COLS])
-    return out.withColumn("feature_vec", vec)
+    vec = ", ".join(f"CAST({c} AS DOUBLE)" for c in FEATURE_COLS)
+    return out.selectExpr("*", f"array({vec}) AS feature_vec")
 
 
 def backfill_features(features: DataFrame, queries: DataFrame) -> DataFrame:
@@ -103,11 +118,9 @@ def backfill_features(features: DataFrame, queries: DataFrame) -> DataFrame:
     (or read from a table), because the as-of's range sampling and any hot
     conversation aggregation each read it again; ``run_backfill`` does that.
     """
-    value_cols = ["ts", "turn_idx", "feature_vec"]
-    build = features.select("conv_id", *value_cols)
     return asof_join(
-        queries, build, by="conv_id", left_on="query_ts", right_on="ts",
-        direction="backward", value_cols=value_cols,
+        queries, features, by="conv_id", left_on="query_ts", right_on="ts",
+        direction="backward", value_cols=["ts", "turn_idx", "feature_vec"],
     )
 
 

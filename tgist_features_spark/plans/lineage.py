@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from tgist_features_spark.functions.timeu import us
+from tgist_features_spark.functions.sqltext import epoch_us, ident
 from tgist_features_spark.plans.backfill import turn_features
 from tgist_features_spark.sources.table_io import TableIO
 
@@ -59,8 +59,12 @@ FEATURES_TABLE = "features"
 MANIFEST_TABLE = "manifest"
 
 
+def _bucket_sql(col: str, n_buckets: int) -> str:
+    return f"CAST(pmod(xxhash64({ident(col)}), {int(n_buckets)}) AS BIGINT)"
+
+
 def bucket_of(col: str, n_buckets: int):
-    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("long")
+    return F.expr(_bucket_sql(col, n_buckets))
 
 
 def done_buckets(io: TableIO, snapshot_id: str) -> list[int]:
@@ -80,13 +84,32 @@ def done_buckets(io: TableIO, snapshot_id: str) -> list[int]:
 
 
 def _bucket_metrics(pending: list[int]) -> list:
-    """Per pending bucket: its row count and max event time (epoch us)."""
+    """Per pending bucket: its row count and max event time (epoch us), as
+    SQL text (three Py4J calls per metric; the bucket ids are ints)."""
     metrics = []
-    for b in pending:
-        in_b = F.col("bucket") == F.lit(b)
-        metrics.append(F.count_if(in_b).alias(f"n_{b}"))
-        metrics.append(F.max(F.when(in_b, us("ts"))).alias(f"wm_{b}"))
+    for b in map(int, pending):
+        metrics.append(F.expr(f"count_if(bucket = {b}) AS n_{b}"))
+        metrics.append(
+            F.expr(f"max(CASE WHEN bucket = {b} THEN {epoch_us('ts')} END) AS wm_{b}")
+        )
     return metrics
+
+
+def _written_frame(
+    transcripts: DataFrame, pending: list[int], n_buckets: int, gap_s: float
+) -> tuple[DataFrame, Observation]:
+    """The features of the ``pending`` buckets with their ``bucket``
+    column, observed per bucket (``_bucket_metrics``) above the range
+    exchange of ``turn_features``."""
+    bucket = _bucket_sql("conv_id", n_buckets)
+    ids = ", ".join(str(int(b)) for b in pending)
+    obs = Observation()
+    feats = (
+        turn_features(transcripts.filter(f"{bucket} IN ({ids})"), gap_s=gap_s)
+        .selectExpr("*", f"{bucket} AS bucket")
+        .observe(obs, *_bucket_metrics(pending))
+    )
+    return feats, obs
 
 
 def run_incremental(
@@ -119,13 +142,7 @@ def run_incremental(
         return {"snapshot_id": snapshot_id, "buckets_done": sorted(done),
                 "buckets_run": [], "rows_out": 0}
 
-    todo = transcripts.filter(bucket_of("conv_id", n_buckets).isin(pending))
-    obs = Observation()
-    feats = (
-        turn_features(todo, gap_s=gap_s)
-        .withColumn("bucket", bucket_of("conv_id", n_buckets))
-        .observe(obs, *_bucket_metrics(pending))
-    )
+    feats, obs = _written_frame(transcripts, pending, n_buckets, gap_s)
     # overwrite exactly the pending bucket partitions (crash-safe rerun),
     # leaving completed buckets untouched; a per-write option, so other
     # writers on the session keep their own overwrite mode
