@@ -8,7 +8,7 @@ discipline as a tool.
 Per query it extracts the plan-shape facts the 100 TB argument rests on:
 parquet scans (with ReadSchema width and pushed filters), exchanges by
 kind (hash / range / single-partition / broadcast), window nodes, python
-UDF surfaces (MapInPandas etc.), and whole-stage-codegen span count.
+UDF surfaces (MapInArrow, MapInPandas etc.), and whole-stage-codegen span count.
 ``--full`` prints the formatted plan itself. Exit code is 0 always —
 this is a lens, not a gate (the gating assertions live in
 tests/test_plan_shape.py).
@@ -63,7 +63,7 @@ def audit(spark, name: str, sf: str, execute: bool = False) -> dict:
         "broadcasts": len(re.findall(r"BroadcastExchange", p)),
         "windows": len(re.findall(r"^\(\d+\) Window", p, re.M)),
         "python_stages": len(
-            re.findall(r"MapInPandas|ArrowEvalPython|FlatMapGroupsInPandas", p)
+            re.findall(r"MapInPandas|MapInArrow|ArrowEvalPython|FlatMapGroupsInPandas", p)
         ),
         # "*" node prefixes mark whole-stage-codegen participants; only the
         # executed final AQE tree carries them (None without --execute)

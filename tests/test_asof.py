@@ -5,7 +5,9 @@ route's plan shape, job budget and slice sizes."""
 
 from __future__ import annotations
 
+import datetime
 import re
+from decimal import Decimal
 
 import duckdb
 import numpy as np
@@ -210,6 +212,99 @@ def test_duplicate_ts_tiebreak(spark):
     assert set(fwd["v"]) == {12.0}
 
 
+_VALUES = ("sig long, far timestamp, dec decimal(38,18), d date, ntz timestamp_ntz, "
+           "bin binary, st struct<a:int,b:string>, m map<string,int>, arr array<string>")
+
+
+@pytest.mark.parametrize("route", ["plain", "sliced"])
+def test_values_keep_exact_type(spark, hot_above, tmp_path, route):
+    """Every value crosses the merge-scan unchanged in its own type: 64-bit
+    integers above 2^53 (a probe column and a carried one), timestamps past
+    2262, decimal(38,18), date, timestamp_ntz, binary, struct, map and
+    array<string>; a probe ``int`` entity against a build ``long`` one stays
+    ``int``. One probe matches, one has no earlier build row, and one has
+    a null entity, which matches nothing (not the null-entity build row)."""
+    big, day = 2**62, datetime.datetime(2024, 1, 1)
+
+    def values(k):
+        return (big + k, datetime.datetime(2500, 1, 1, 0, 0, k),
+                Decimal(f"12345678901234567890.{k:018d}"),
+                datetime.date(9999, 12, 31 - k), datetime.datetime(2600, 6, 1, 0, 0, k),
+                bytes([0, 255, k]), (k, f"s{k}"), {"k": k}, ["a", f"b{k}"])
+
+    # read from parquet, so the build has a size estimate and the plain
+    # route runs unless ``hot_above`` shrinks the task budget
+    spark.createDataFrame(
+        [(1, day - datetime.timedelta(days=31), 0, *values(1)),
+         (1, day, 1, *values(2)),
+         (2, day, 2, *values(3)),
+         (None, day, 3, *values(4))],
+        f"uid long, ts timestamp, turn_idx int, {_VALUES}",
+    ).write.parquet(str(tmp_path / "build"))
+    build = spark.read.parquet(str(tmp_path / "build"))
+    later = day + datetime.timedelta(days=1)
+    probe = spark.createDataFrame(
+        [(1, later, big + 1, datetime.datetime(2500, 2, 1)),
+         (2, day - datetime.timedelta(days=1), big + 2, datetime.datetime(2500, 2, 2)),
+         (None, later, big + 3, datetime.datetime(2500, 2, 3))],
+        "uid int, query_ts timestamp, query_id long, asked timestamp",
+    )
+    carried = [c for c in build.columns if c not in ("uid", "ts")]
+    if route == "sliced":
+        hot_above(build, 1)  # uid 1's two rows are hot
+    out = asof_join(probe, build, by="uid", value_cols=["ts", *carried])
+    assert _is_sliced(out) == (route == "sliced")
+    assert out.schema["uid"].dataType == probe.schema["uid"].dataType
+    for c in ["ts", *carried]:
+        assert out.schema[c].dataType == build.schema[c].dataType, c
+
+    got = {r["query_id"]: r.asDict() for r in out.collect()}
+    assert len(got) == 3
+    for p in probe.collect():
+        assert {c: got[p["query_id"]][c] for c in probe.columns} == p.asDict()
+    match = build.filter("turn_idx = 1").first().asDict()
+    assert {c: got[big + 1][c] for c in ["ts", *carried]} == {
+        c: match[c] for c in ["ts", *carried]}
+    for q in (big + 2, big + 3):
+        assert all(got[q][c] is None for c in ["ts", *carried]), q
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
+def test_null_entity_matches_nothing(spark, direction):
+    """A probe with a null entity matches no build row, not even one whose
+    entity is null too, as in DuckDB's ASOF LEFT JOIN (checked for
+    backward and forward; nearest must give null likewise)."""
+    base = pd.Timestamp("2024-01-01")
+    build = pd.DataFrame({
+        "conv_id": ["a", "a", None, None, "b"],
+        "ts": [base + pd.Timedelta(seconds=s) for s in (10, 20, 14, 30, 5)],
+        "turn_idx": [0, 1, 2, 3, 4],
+    })
+    probe = pd.DataFrame({
+        "conv_id": ["a", None, "b", None],
+        "query_ts": [base + pd.Timedelta(seconds=s) for s in (15, 15, 1, 40)],
+        "query_id": [0, 1, 2, 3],
+    })
+    got = asof_join(
+        spark.createDataFrame(probe, "conv_id string, query_ts timestamp, query_id long"),
+        spark.createDataFrame(build, "conv_id string, ts timestamp, turn_idx int"),
+        direction=direction, value_cols=["turn_idx"],
+    ).toPandas().set_index("query_id")["turn_idx"]
+    assert got.loc[[1, 3]].isna().all()
+    if direction == "nearest":
+        return
+    op = ">=" if direction == "backward" else "<="
+    con = duckdb.connect()
+    con.register("b", build)
+    con.register("p", probe)
+    ref = con.sql(f"""
+        SELECT p.query_id, b.turn_idx FROM p ASOF LEFT JOIN b
+          ON p.conv_id = b.conv_id AND p.query_ts {op} b.ts
+    """).df().set_index("query_id")["turn_idx"]
+    assert got.sort_index().astype("Int64").tolist() == \
+        ref.sort_index().astype("Int64").tolist()
+
+
 def test_auto_skew_split_equals_plain(spark, feats, oracle_feats, queries_pdf, hot20):
     """asof_join's sliced route: hot entities time-sliced, cold ones in
     slice 0, one exchange — same results as the oracle."""
@@ -276,20 +371,6 @@ def test_partitions_for_size_rule():
     gb64 = 64 * ASOF_TARGET_PARTITION_BYTES
     assert _partitions_for_size(gb64, floor) == 65           # linear scaling
     assert _partitions_for_size((1 << 59), floor) == 1 << 20  # hard cap
-
-
-def test_coerce_fails_loudly_on_uncoercible_column():
-    from pyspark.sql import types as T
-
-    from tgist_features_spark.operators.asof import _coerce
-
-    fields = [T.StructField("n", T.LongType()), T.StructField("x", T.DoubleType())]
-    ok = _coerce(pd.DataFrame({"n": [1.0, np.nan], "x": [1, 2]}), fields)
-    assert str(ok["n"].dtype) == "Int64" and ok["n"].isna().tolist() == [False, True]
-    assert str(ok["x"].dtype) == "float64"
-    bad = pd.DataFrame({"n": ["seven", "8"], "x": [1.0, 2.0]})
-    with pytest.raises(TypeError, match=r"'n'.*Int64"):
-        _coerce(bad, fields)
 
 
 @pytest.mark.parametrize("direction", ["nearest"])
@@ -506,7 +587,7 @@ def test_auto_plan_is_one_exchange_one_merge(parquet_sides, hot20, direction):
     out = asof_join(p, hot20(b), direction=direction, value_cols=["ts", "turn_idx"])
     assert _is_sliced(out)
     plan = _final_plan(out)
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan, plan
     assert len(re.findall(r"Exchange rangepartitioning", plan)) == 1, plan
     assert "ExistingRDD" not in plan, "no checkpointed (RDD-scanned) input"
 

@@ -38,7 +38,7 @@ def frames(spark, tiny_pdf):
 def test_asof_is_single_range_exchange_mergescan(spark, frames):
     t, q = frames
     p = _plan(asof_join(q, t, value_cols=["ts", "turn_idx", "role"]))
-    assert "MapInPandas" in p, "as-of must be the bulk merge-scan"
+    assert "MapInArrow" in p and "MapInPandas" not in p, "as-of must be the bulk merge-scan"
     assert "FlatMapCoGroupsInPandas" not in p, "no per-group Python calls"
     assert len(re.findall(r"rangepartitioning", p)) == 1, (
         "exactly one range exchange feeds the merge"

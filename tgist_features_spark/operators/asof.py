@@ -4,7 +4,12 @@ Spark 4.1 has no ASOF JOIN in Catalyst, so this is a custom merge-scan:
 both sides are tagged and unioned, range-partitioned by the entity key (one
 shuffle; equal keys never split), sorted by event time within each
 partition, and merged with one vectorized ``pandas.merge_asof(by=entity)``
-per partition via ``mapInPandas``. Semantics (pinned by property tests
+per partition via ``mapInArrow``. Pandas sees only the entity keys, the
+event time and build row positions; every value is taken from the
+partition's Arrow columns at the matched positions and keeps its type. (A
+pandas round trip of the union, where each side's columns are null on the
+other's rows, rounded 64-bit integers above 2^53 through float64 and
+failed on timestamps past 2262.) Semantics (pinned by property tests
 against the pure pandas oracle and DuckDB's ASOF JOIN):
 
 * backward: match the build row with the greatest ts <= query_ts
@@ -16,7 +21,9 @@ against the pure pandas oracle and DuckDB's ASOF JOIN):
 * ties on build ts resolve to the greatest tiebreak (backward) / smallest
   (forward) — deterministic under duplicate timestamps;
 * probes with no eligible build row keep null feature columns (left join);
-* null query_ts or unseen entity -> null match.
+* null query_ts, null entity or unseen entity -> null match (build rows
+  with a null ts or entity never match; pandas alone would match a null
+  entity to a null entity).
 
 Sizing: Catalyst's size estimates of both sides (no job) say how many
 merge-scan tasks of ``ASOF_TARGET_PARTITION_BYTES`` the input needs. Above
@@ -32,36 +39,29 @@ with no extra job. Otherwise an entity whose build rows hold more than
 bytes and time span, cold entities stay in slice 0, and each hot probe
 slice receives the carry-in rows (the latest build row of any earlier
 slice and/or the earliest of any later one) its merge needs. Hot and cold
-rows then share the same ONE range exchange and ONE ``mapInPandas``, keyed
+rows then share the same ONE range exchange and ONE ``mapInArrow``, keyed
 on ``(entity, slice)``; both routes return the same rows for every
 direction (tests/test_asof.py, tests/test_property_asof.py).
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from tgist_features_spark.functions.sqltext import ident
 from tgist_features_spark.functions.timeu import us
 
-_PANDAS_NULLABLE = {
-    T.ByteType: "Int8",
-    T.ShortType: "Int16",
-    T.IntegerType: "Int32",
-    T.LongType: "Int64",
-    T.FloatType: "float32",
-    T.DoubleType: "float64",
-    T.BooleanType: "boolean",
-}
-
-
 # target bytes of probe + build input per merge-scan task (the exchange's
-# partition count): 64 MB of on-wire data keeps the per-task pandas buffer
-# (roughly 2-4x expansion) comfortably inside executor memory at any scale
+# partition count). A task holds its whole partition as Arrow batches, plus
+# a pandas frame of the entity keys, event times and build row positions
+# and the output columns taken from the batches
 ASOF_TARGET_PARTITION_BYTES = 64 << 20
 
 # build-side payload bytes of ONE entity that one merge-scan task should
@@ -131,39 +131,6 @@ def _row_bytes(df: DataFrame) -> Column:
                F.lit(0))
 
 
-def _null_dtype(spark_type: T.DataType) -> object:
-    if isinstance(spark_type, T.TimestampType):
-        return "datetime64[us]"
-    return _PANDAS_NULLABLE.get(type(spark_type), object)
-
-
-def _coerce(pdf: pd.DataFrame, fields: list[T.StructField]) -> pd.DataFrame:
-    """Nullable-dtype coercion so Arrow accepts missing ints/bools/arrays."""
-    for f in fields:
-        dt = _null_dtype(f.dataType)
-        if f.name in pdf.columns:
-            if dt is object:
-                # vectorized NaN/NA -> None (no per-element Python calls in
-                # the merge-scan hot path); Series.notna treats list/ndarray
-                # cell values as non-null, so array columns pass through
-                s = pdf[f.name]
-                if s.dtype != object:
-                    s = s.astype(object)
-                pdf[f.name] = s.where(s.notna(), None)
-            elif str(pdf[f.name].dtype) != str(dt):
-                try:
-                    pdf[f.name] = pdf[f.name].astype(dt)
-                except (TypeError, ValueError) as e:
-                    raise TypeError(
-                        f"as-of output column {f.name!r} (dtype "
-                        f"{pdf[f.name].dtype}) cannot be coerced to {dt} "
-                        f"for Spark type {f.dataType.simpleString()}: {e}"
-                    ) from e
-        else:
-            pdf[f.name] = pd.Series([None] * len(pdf), dtype=dt)
-    return pdf[[f.name for f in fields]]
-
-
 def _plan(probe: DataFrame, build: DataFrame, by, left_on, right_on, value_cols):
     by = [by] if isinstance(by, str) else list(by)
     if value_cols is None:
@@ -197,9 +164,16 @@ def _merge_scan(
     union, ONE ``repartitionByRange`` on the entity key (``tasks``
     partitions, or the session default when None), ``sortWithinPartitions``
     by (event time, side, tiebreak ``tb``), then one vectorized
-    ``pandas.merge_asof(by=entity)`` per partition via ``mapInPandas`` —
+    ``pandas.merge_asof(by=entity)`` per partition via ``mapInArrow`` —
     thousands of entities per C-level merge call instead of one Python call
-    per entity."""
+    per entity.
+
+    Only the ``by`` columns, the event time (int64 microseconds) and build
+    row positions reach pandas; the output is ``take`` of the partition's
+    Arrow columns at each probe's matched position, so no value passes
+    through a pandas dtype (float64 rounded 2^62 + 1 to 2^62, and
+    nanosecond ``datetime64`` failed on years past 2262). A probe with a
+    null time or entity matches nothing."""
     _, value_cols, rename, carried, out_schema = _plan(
         probe, build, by_list, left_on, right_on, value_cols
     )
@@ -215,7 +189,8 @@ def _merge_scan(
         f"CAST({ident(left_on)} AS TIMESTAMP_NTZ) AS __key",
         *map(ident, probe_cols),
     )
-    r = build.filter(f"{ident(right_on)} IS NOT NULL").selectExpr(
+    not_null = " AND ".join(f"{ident(c)} IS NOT NULL" for c in [right_on, *by_list])
+    r = build.filter(not_null).selectExpr(
         "1 AS __side",
         f"CAST({ident(right_on)} AS TIMESTAMP_NTZ) AS __key",
         *map(ident, by_list),
@@ -226,41 +201,44 @@ def _merge_scan(
     u = u.repartitionByRange(tasks, *by_list) if tasks else u.repartitionByRange(*by_list)
     u = u.sortWithinPartitions("__key", "__side", *tb_names)
 
-    tol = pd.Timedelta(seconds=tolerance) if tolerance is not None else None
+    tol = None if tolerance is None else (
+        pd.Timedelta(seconds=tolerance) // pd.Timedelta(microseconds=1))
     by_key = by_list[0] if len(by_list) == 1 else by_list
-    lcols = list(probe_cols)
-    rcols = [*by_list, "__key", *carried_names]
+    # the union widens a ``by`` column whose type differs between the sides
+    # (probe int, build long -> long); the output keeps the probe's type
+    pfields, bfields = probe.schema, build.schema
+    narrow = {c: to_arrow_type(pfields[c].dataType) for c in by_list
+              if pfields[c].dataType != bfields[c].dataType}
 
     def scan(batches):
-        chunks = list(batches)  # one partition, sorted by (__key, __side, tb)
-        if not chunks:
+        batches = list(batches)  # one partition, sorted by (__key, __side, tb)
+        if not batches:
             return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        is_l = pdf["__side"].to_numpy() == 0
-        lp = pdf.loc[is_l, [*lcols, "__key"]]
-        rp = pdf.loc[~is_l, rcols]
-        ok = lp["__key"].notna()
-        l_null = lp.loc[~ok, lcols]
-        lp = lp[ok]
-        if len(rp) == 0 or len(lp) == 0:
-            merged = lp[lcols].copy()
-            for f in carried:
-                merged[f.name] = None
-        else:
-            merged = pd.merge_asof(
-                lp,
-                rp,
-                on="__key",
-                by=by_key,
-                direction=direction,
-                tolerance=tol,
-                allow_exact_matches=allow_exact_matches,
-            ).drop(columns="__key")
-        if len(l_null):
-            merged = pd.concat([merged, l_null], ignore_index=True)
-        yield _coerce(merged, out_schema.fields)
+        t = pa.Table.from_batches(batches)
+        keys = t.select(by_list).append_column("__key", t["__key"].cast(pa.int64()))
+        side = t["__side"].to_numpy()
+        probes, builds = np.flatnonzero(side == 0), np.flatnonzero(side == 1)
+        # probes with a null time or entity stay unmatched (position null)
+        live = np.logical_and.reduce(
+            [c.is_valid().to_numpy() for c in keys.take(probes).columns])
+        merged = pd.merge_asof(
+            keys.take(probes[live]).to_pandas(),
+            keys.take(builds).to_pandas().assign(__pos=builds),
+            on="__key",
+            by=by_key,
+            direction=direction,
+            tolerance=tol,
+            allow_exact_matches=allow_exact_matches,
+        )
+        pos = np.full(len(probes), -1)
+        pos[live] = merged["__pos"].fillna(-1).to_numpy()
+        matched = pa.array(pos, mask=pos < 0)
+        cols = [t[c].take(probes) for c in probe_cols]
+        cols = [c.cast(narrow[n]) if n in narrow else c for n, c in zip(probe_cols, cols)]
+        cols += [t[c].take(matched) for c in carried_names]
+        yield from pa.Table.from_arrays(cols, names=out_schema.names).to_batches()
 
-    return u.mapInPandas(scan, schema=out_schema)
+    return u.mapInArrow(scan, schema=out_schema)
 
 
 def _hot_slices(build: DataFrame, by: list[str], right_on: str) -> DataFrame:

@@ -6,7 +6,8 @@ Pipeline (engine lifecycle, SURVEY.md §3.2):
     window pass) -> W1-W6 window features -> F6 text features (one
     ``arrow_udf``, Arrow batches in and out) -> per-(entity, ts) feature
     vector -> J1 as-of merge against the probe/label side (one
-    ``mapInPandas`` merge-scan) -> sink + lineage.
+    ``mapInArrow`` merge-scan: pandas matches entity keys, event times and
+    row positions, and the values stay in Arrow) -> sink + lineage.
 
 Every feature is strictly backward-looking (frames end at -1, or at 0 only
 where the current turn's own content is legitimately visible at its own
