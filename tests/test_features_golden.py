@@ -88,6 +88,12 @@ def test_gap_s_reaches_plan(spark, small_pdf, gap_s):
         )
 
 
+def test_gap_s_must_be_a_number(spark, tiny_pdf):
+    """A ``gap_s`` that is not a number is refused when the plan is built."""
+    with pytest.raises(ValueError):
+        turn_features(transcripts_df(spark, tiny_pdf), gap_s="half an hour")
+
+
 def test_gap_s_values_differ(small_pdf):
     """The data behind ``test_gap_s_reaches_plan`` tells its gap values
     apart: each gives a different number of sessions."""

@@ -58,8 +58,9 @@ def sides(spark, tiny_pdf):
 
 
 def test_turn_features_build_budget(sides):
+    """Canonical order and one ``mapInArrow``: 94 calls on pyspark 4.1."""
     t, _ = sides
-    assert _py4j_calls(lambda: turn_features(t)) <= 500
+    assert _py4j_calls(lambda: turn_features(t)) <= 120
 
 
 def test_backfill_features_build_budget(sides):

@@ -50,18 +50,21 @@ def test_asof_is_single_range_exchange_mergescan(spark, frames):
 def test_turn_features_single_layout_shuffle(spark, frames):
     t, _ = frames
     p = _plan(turn_features(t))
-    # one planned exchange: the canonical-order range repartition; every
-    # window pass and the text UDF reuse that layout shuffle-free
+    # one planned exchange: the canonical-order range repartition, which
+    # the feature kernel consumes shuffle-free
     assert len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 1, p[:1500]
     assert len(re.findall(r"rangepartitioning", p)) == 1
-    # the n-gram kernel is one Arrow UDF, executed as exactly one
-    # ArrowEvalPython node: perfbench's text.* metrics read that node name
+    # the n-gram UDF stays an Arrow UDF for its other callers
+    # (doc_features, perfbench's text span)
     assert ngram_features.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
     feats = turn_features(t)
     feats.collect()
     final = _plan(feats).split("== Initial Plan ==")[0]
     assert "== Final Plan ==" in final
-    assert len(re.findall(r"ArrowEvalPython \(\d+\)", final)) == 1, final
+    # window and text features are one Arrow kernel: one MapInArrow node,
+    # no Catalyst Window and no separate ArrowEvalPython stage
+    assert len(re.findall(r"MapInArrow \(\d+\)", final)) == 1, final
+    assert "Window" not in final and "ArrowEvalPython" not in final, final
 
 
 def test_scan_pushdown_and_pruning(spark):

@@ -87,3 +87,19 @@ def test_guard_installs_in_workers_only(spark):
     assert {r.method for r in rows} == {"_invalidate_if_changed"}, rows
     assert zipimport.zipimporter.invalidate_caches is session._upstream_invalidate
     assert zipimport.zipimporter.invalidate_caches.__name__ == "invalidate_caches"
+
+
+def test_declared_parallelism():
+    """Shuffle partitions are sized from what the launcher declared, not
+    from the executors registered when the session starts."""
+    declared = session._declared_parallelism
+    assert declared("local-cluster[4,1,1024]", {}) == 4
+    assert declared("local-cluster[ 2 , 3 , 512 ]", {}) == 6
+    yarn = {"spark.executor.instances": "10", "spark.executor.cores": "4"}
+    assert declared("yarn", yarn) == 40
+    assert declared("local-cluster[4,1,1024]", {"spark.default.parallelism": "7"}) == 7
+    # nothing declared: get_spark reads the live defaultParallelism
+    assert declared("local[4]", {}) is None
+    assert declared(None, {}) is None
+    assert declared("yarn", {"spark.executor.instances": "10"}) is None
+    assert declared("spark://host:7077", {"spark.executor.cores": "4"}) is None

@@ -1,10 +1,15 @@
 """Direct unit coverage for the modular window operators (windows.py) —
-the fused plan in plans/backfill.py must stay equivalent to these."""
+the feature kernel of plans/backfill.py must stay equivalent to these."""
 
 from __future__ import annotations
 
+import datetime
+import random
+
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from tgist_features_spark.operators.ordering import canonical_order
 from tgist_features_spark.operators.sessionize import session_bounds, sessionize
@@ -17,8 +22,9 @@ from tgist_features_spark.operators.windows import (
     with_rolling_counts,
     with_rolling_time,
 )
+from tgist_features_spark.plans import backfill
 from tgist_features_spark.plans.backfill import turn_features
-from tgist_features_spark.sources.corpus import transcripts_df
+from tgist_features_spark.sources.corpus import TRANSCRIPT_SCHEMA, transcripts_df
 
 
 def _sorted(df):
@@ -29,11 +35,16 @@ def _sorted(df):
     )
 
 
-def test_modular_ops_equal_fused_plan(spark, tiny_pdf):
-    """Composing the modular operators reproduces the fused turn_features
-    feature columns exactly."""
-    df = canonical_order(transcripts_df(spark, tiny_pdf))
-    out = with_delta_ts(df)
+# the 12 window columns of turn_features
+_WINDOW_NUM = ["gap_s", "turn_no", "turns_total", "turns_remaining", "session_id",
+               "n_user_5", "n_tool_5", "roll_chars_5", "cum_chars"]
+_WINDOW_STR = ["prev_role", "next_role", "last_tool"]
+
+
+def _modular(df):
+    """The window columns of ``turn_features`` composed from the modular
+    Catalyst operators."""
+    out = with_delta_ts(canonical_order(df))
     out = with_position(out)
     out = sessionize(out)
     out = with_lag_lead(out, ["role"])
@@ -49,20 +60,145 @@ def test_modular_ops_equal_fused_plan(spark, tiny_pdf):
     )
     out = out.withColumn("n_user_5", F.coalesce("n_user_5", F.lit(0)))
     out = out.withColumn("n_tool_5", F.coalesce("n_tool_5", F.lit(0)))
-    out = with_cumulative(out, {"cum_chars": F.sum(F.length("text"))})
-    modular = _sorted(out)
-    fused = _sorted(turn_features(transcripts_df(spark, tiny_pdf)))
-    for col in ["gap_s", "turn_no", "turns_total", "turns_remaining",
-                "session_id", "n_user_5", "n_tool_5", "roll_chars_5",
-                "cum_chars"]:
-        np.testing.assert_allclose(
-            modular[col].astype(float).fillna(-1).to_numpy(),
-            fused[col].astype(float).fillna(-1).to_numpy(),
+    return with_cumulative(out, {"cum_chars": F.sum(F.length("text"))})
+
+
+def _assert_window_cols_equal(modular, kernel):
+    assert len(modular) == len(kernel)
+    for col in ["conv_id", "turn_idx", *_WINDOW_STR]:
+        a, b = modular[col], kernel[col]
+        assert ((a.isna() & b.isna()) | (a == b)).all(), col
+    for col in _WINDOW_NUM:
+        np.testing.assert_array_equal(
+            modular[col].astype(float).to_numpy(),
+            kernel[col].astype(float).to_numpy(),
             err_msg=col,
         )
-    for col in ["prev_role", "next_role", "last_tool"]:
-        a, b = modular[col], fused[col]
-        assert ((a.isna() & b.isna()) | (a == b)).all(), col
+
+
+def test_modular_ops_equal_fused_plan(spark, tiny_pdf):
+    """Composing the modular operators reproduces turn_features' window
+    columns exactly."""
+    df = transcripts_df(spark, tiny_pdf)
+    _assert_window_cols_equal(_sorted(_modular(df)), _sorted(turn_features(df)))
+
+
+_NULLABLE = T.StructType([T.StructField(f.name, f.dataType, True) for f in TRANSCRIPT_SCHEMA])
+_BATCH = 7  # Arrow batch rows in the boundary test
+_LONG = 60 * _BATCH  # turns of the conversation that spans 60 batches
+
+
+def _adversarial_rows() -> list[tuple]:
+    """Transcript rows for the batch-boundary test: one conversation of
+    ``_LONG`` turns; single-turn and short conversations; a conversation
+    with a null ``conv_id``; duplicate timestamps (ordered by
+    ``turn_idx``), gaps of exactly 1800 s (the default ``gap_s``, no new
+    session) and 1801 s (a new session); nulls in ``role``, ``text``,
+    ``tool`` and ``ts``. The rows are shuffled."""
+    roles = ["user", "assistant", "tool", None, "user"]
+    steps = [0, 1, 1800, 1801, 60, 0, 7200]  # seconds before each turn
+    t0 = datetime.datetime(2024, 1, 1)
+
+    def conv(cid, n, start):
+        out, t = [], t0 + datetime.timedelta(hours=start)
+        for k in range(n):
+            t += datetime.timedelta(seconds=steps[(k + start) % len(steps)])
+            text = None if k % 11 == 4 else " ".join(["a", "b", "a", "cd"][: k % 5])
+            out.append((cid, k, roles[(k + start) % len(roles)], text,
+                        "grep" if k % 6 == 2 else None, None if k % 29 == 7 else t))
+        return out
+
+    rows = conv("long", _LONG, 0) + conv(None, 9, 1)
+    for c in range(12):
+        rows += conv(f"c{c:02d}", [1, 1, 2, 6, 13][c % 5], c)
+    random.Random(5).shuffle(rows)
+    return rows
+
+
+def test_kernel_equals_modular_ops_across_batches(spark):
+    """The feature kernel sees Arrow batches of 7 rows, so every
+    conversation longer than that crosses batch boundaries, and the long
+    one spans 60 batches. Its 12 window columns equal the modular Catalyst
+    operators' value for value, on the whole input and on the long
+    conversation alone (a partition holding a single conversation)."""
+    rows = _adversarial_rows()
+    whole = spark.createDataFrame(rows, _NULLABLE)
+    alone = spark.createDataFrame([r for r in rows if r[0] == "long"], _NULLABLE)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(_BATCH))
+    try:
+        for df in (whole, alone):
+            _assert_window_cols_equal(_sorted(_modular(df)), _sorted(turn_features(df)))
+    finally:
+        spark.conf.set(key, before)
+
+
+def _batches(rows: list[tuple], size: int) -> list[pa.RecordBatch]:
+    """``rows`` in canonical order as Arrow batches of ``size`` rows."""
+    key = [(r[0] is not None, r[0] or "", r[5] is not None, r[5] or 0, r[1]) for r in rows]
+    ordered = [r for _, r in sorted(zip(key, rows), key=lambda kr: kr[0])]
+    cols = list(zip(*ordered))
+    table = pa.table({
+        "conv_id": pa.array(cols[0], pa.string()), "turn_idx": pa.array(cols[1], pa.int32()),
+        "role": pa.array(cols[2], pa.string()), "text": pa.array(cols[3], pa.string()),
+        "tool": pa.array(cols[4], pa.string()), "ts": pa.array(cols[5], pa.timestamp("us")),
+    })
+    return table.to_batches(max_chunksize=size)
+
+
+def test_kernel_sees_each_row_once(monkeypatch):
+    """Without Spark: the kernel's output does not depend on the batch
+    size, and each row is computed exactly once, however many batches its
+    conversation spans (cost linear in the batches, not quadratic)."""
+    rows = _adversarial_rows()
+    whole = pa.Table.from_batches(
+        backfill._turn_kernel(iter(_batches(rows, len(rows))), 1800.0))
+    seen = []
+    features = backfill._features
+
+    def counting(rows_, new, gap_s):
+        seen.append(rows_.num_rows)
+        return features(rows_, new, gap_s)
+
+    monkeypatch.setattr(backfill, "_features", counting)
+    for size in (1, 2, _BATCH, 64):
+        seen.clear()
+        got = pa.Table.from_batches(
+            backfill._turn_kernel(iter(_batches(rows, size)), 1800.0))
+        assert got.equals(whole), size
+        assert sum(seen) == len(rows), size
+
+
+# turn_features' output schema: (name, type, nullable) of the 25 columns,
+# for an input with TRANSCRIPT_SCHEMA
+_SCHEMA = [
+    ("conv_id", "string", False), ("turn_idx", "int", False),
+    ("role", "string", False), ("text", "string", False),
+    ("tool", "string", True), ("ts", "timestamp", False),
+    ("gap_s", "double", True), ("prev_role", "string", True),
+    ("next_role", "string", True), ("turns_total", "bigint", False),
+    ("turn_no", "int", False), ("session_id", "bigint", True),
+    ("last_tool", "string", True), ("cum_chars", "bigint", True),
+    ("turns_remaining", "bigint", False), ("n_user_5", "bigint", False),
+    ("n_tool_5", "bigint", False), ("roll_chars_5", "double", True),
+    ("plen", "bigint", True), ("n_distinct", "bigint", True),
+    ("bigram_distinct", "bigint", True), ("trigram_distinct", "bigint", True),
+    ("ngram_sig", "bigint", True), ("distinct_ratio", "double", True),
+    ("feature_vec", "array<double>", False),
+]
+
+
+def test_turn_features_schema(spark, tiny_pdf):
+    """The input's columns as they are, then the 19 feature columns with
+    fixed types and nullability (a nullable input changes only its own
+    columns); ``feature_vec`` is never null but holds nulls."""
+    got = turn_features(transcripts_df(spark, tiny_pdf)).schema
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in got] == _SCHEMA
+    assert got["feature_vec"].dataType.containsNull
+    nullable = turn_features(spark.createDataFrame([], _NULLABLE)).schema
+    assert [f.nullable for f in nullable][:6] == [True] * 6
+    assert nullable.fields[6:] == got.fields[6:]
 
 
 def test_rolling_time_frame(spark, tiny_pdf):

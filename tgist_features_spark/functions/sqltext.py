@@ -11,22 +11,10 @@ text; caller names and values enter that text only through these helpers.
 
 from __future__ import annotations
 
-import math
-
 
 def ident(name: str) -> str:
     """``name`` as a quoted SQL identifier (inner backticks doubled)."""
     return "`" + name.replace("`", "``") + "`"
-
-
-def double_lit(x: float) -> str:
-    """``x`` as a SQL DOUBLE literal. ``float`` refuses anything that is
-    not a number; infinities and NaN become a typed cast, which the
-    optimizer folds to the same literal."""
-    v = float(x)
-    if math.isfinite(v):
-        return f"{v!r}D"
-    return f"CAST('{v!r}' AS DOUBLE)"
 
 
 def epoch_us(expr: str) -> str:

@@ -2,35 +2,38 @@
 
 Pipeline (engine lifecycle, SURVEY.md §3.2):
 
-    scan -> derive -> canonical order (ONE range shuffle, reused by every
-    window pass) -> W1-W6 window features -> F6 text features (one
-    ``arrow_udf``, Arrow batches in and out) -> per-(entity, ts) feature
-    vector -> J1 as-of merge against the probe/label side (one
-    ``mapInArrow`` merge-scan: pandas matches entity keys, event times and
-    row positions, and the values stay in Arrow) -> sink + lineage.
+    scan -> canonical order (ONE range shuffle) -> one ``mapInArrow``
+    kernel over each range partition's Arrow batches: W1-W6 window
+    features (numpy over the sorted ``conv_id`` groups), F6 text features
+    (``ngram_stats_batch``) and the per-(entity, ts) feature vector -> J1
+    as-of merge against the probe/label side (one ``mapInArrow``
+    merge-scan: pandas matches entity keys, event times and row positions,
+    and the values stay in Arrow) -> sink + lineage.
 
 Every feature is strictly backward-looking (frames end at -1, or at 0 only
 where the current turn's own content is legitimately visible at its own
 timestamp) — the zero-temporal-leakage contract. ``next_role`` is emitted as
 an explicitly label-side column and excluded from the feature vector.
 
-The feature expressions are SQL text, one ``selectExpr`` per window pass.
-In classic PySpark a Column method or a function such as ``col`` or
-``when`` costs 11-14 Py4J round trips (``_with_origin`` looks up the
-active session, reads a conf and sets and clears the call-site origin),
-and each DataFrame operation re-analyses the plan; an expression string
-is one round trip however large (``functions/sqltext.py``). Built with Column
-calls, the plans of ``turn_features`` and ``backfill_features`` cost
-~1,800 round trips and ~0.5 s on the ``backfill`` benchmark input
-before the first job ran; as SQL text, ~320 and ~0.3 s.
+Window and text features share the kernel, so each row crosses the
+JVM/Python boundary once, with no Catalyst ``Window`` node and no separate
+Python UDF stage, and the plan is built in one DataFrame operation after
+the sort. The modular Catalyst operators (``operators/windows.py``,
+``operators/sessionize.py``) define the window semantics; the kernel is
+tested against them value for value (tests/test_windows_ops.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
 
-from tgist_features_spark.functions.sqltext import double_lit, epoch_us
-from tgist_features_spark.functions.text import with_ngram_features
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+
+from tgist_features_spark.functions.text import NGRAM_STRUCT, ngram_stats_batch
 from tgist_features_spark.operators.asof import asof_join
 from tgist_features_spark.operators.ordering import canonical_order
 
@@ -49,62 +52,179 @@ FEATURE_COLS = [
     "distinct_ratio",
 ]
 
+# the trailing row frame of the rolling features: turns -5..-1
+_ROLL = 5
 
-# the window specs of the feature passes, as SQL text (plain strings: no
-# JVM objects, parsed once per expression by the JVM)
-_W = "PARTITION BY conv_id ORDER BY ts, turn_idx"
-_W_ALL = "PARTITION BY conv_id"
-_W_CUM = f"{_W} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
-_W_ROLL = f"{_W} ROWS BETWEEN 5 PRECEDING AND 1 PRECEDING"
+
+def _feature_schema(schema: T.StructType) -> T.StructType:
+    """``schema`` plus the columns ``turn_features`` appends, in the
+    kernel's order, with the types and nullability the Catalyst window
+    plan gave them (count, row_number and the coalesced rolling counts are
+    never null)."""
+    role, tool = schema["role"].dataType, schema["tool"].dataType
+    return T.StructType([
+        *schema.fields,
+        T.StructField("gap_s", T.DoubleType()),
+        T.StructField("prev_role", role),
+        T.StructField("next_role", role),
+        T.StructField("turns_total", T.LongType(), False),
+        T.StructField("turn_no", T.IntegerType(), False),
+        T.StructField("session_id", T.LongType()),
+        T.StructField("last_tool", tool),
+        T.StructField("cum_chars", T.LongType()),
+        T.StructField("turns_remaining", T.LongType(), False),
+        T.StructField("n_user_5", T.LongType(), False),
+        T.StructField("n_tool_5", T.LongType(), False),
+        T.StructField("roll_chars_5", T.DoubleType()),
+        *NGRAM_STRUCT.fields,
+        T.StructField("feature_vec", T.ArrayType(T.DoubleType()), False),
+    ])
+
+
+def _conv_starts(conv: pa.Array, before: pa.Array | None) -> np.ndarray:
+    """True where a row starts a conversation: its ``conv_id`` differs from
+    the row before it, which for the first row is ``before`` (the previous
+    batch's last ``conv_id``; None at the start of the partition). Nulls
+    equal each other, as in a window's ``PARTITION BY``."""
+    both = conv if before is None else pa.concat_arrays([before, conv])
+    codes = pc.dictionary_encode(both, null_encoding="encode").indices.to_numpy()
+    new = np.diff(codes, prepend=-1) != 0
+    return new if before is None else new[1:]
+
+
+def _prefix(x: np.ndarray) -> np.ndarray:
+    """Exclusive prefix sums: ``p[k]`` is the sum of ``x[:k]``."""
+    return np.concatenate(([0], np.cumsum(x, dtype=np.int64)))
+
+
+def _features(rows: pa.RecordBatch, new: np.ndarray, gap_s: float) -> pa.RecordBatch:
+    """``rows`` (whole conversations in canonical order; ``new`` flags each
+    conversation's first turn) plus the feature columns. Each window
+    feature is numpy over the group starts: lags and leads are ``take``s
+    masked at the group edges, the cumulative and the -5..-1 frame sums are
+    differences of prefix sums, ``last_tool`` is a running maximum of the
+    positions holding a tool."""
+    n = rows.num_rows
+    i = np.arange(n)
+    starts = np.flatnonzero(new)
+    conv = np.cumsum(new) - 1
+    first = starts[conv]
+    turn_no = i - first + 1
+    total = np.diff(starts, append=n)[conv]
+    ends = np.append(new[1:], True)
+
+    ts, role, tool, text = (rows.column(c) for c in ("ts", "role", "tool", "text"))
+    # gap_s: the difference of the epoch microseconds, then / 1e6 as a double
+    us = pc.fill_null(ts.cast(pa.int64()), 0).to_numpy()
+    has_ts = ts.is_valid().to_numpy(zero_copy_only=False)
+    gap_ok = ~new & has_ts & np.append(False, has_ts[:-1])
+    gap = np.diff(us, prepend=us[:1]) / 1e6
+    sessions = np.cumsum(gap_ok & (gap > gap_s))
+    has_tool = tool.is_valid().to_numpy(zero_copy_only=False)
+    seen = np.maximum.accumulate(np.where(has_tool, i, -1))
+
+    chars = pc.utf8_length(text)
+    has_text = _prefix(chars.is_valid().to_numpy(zero_copy_only=False))
+    n_chars = _prefix(pc.fill_null(chars, 0).to_numpy())
+    lo = np.maximum(i - _ROLL, first)
+    rolled = has_text[i] - has_text[lo]
+    by_role = {
+        r: _prefix(pc.fill_null(pc.equal(role, r), False).to_numpy(zero_copy_only=False))
+        for r in ("user", "tool")
+    }
+
+    cols = {
+        "gap_s": pa.array(gap, mask=~gap_ok),
+        "prev_role": role.take(pa.array(i - 1, mask=new)),
+        "next_role": role.take(pa.array(i + 1, mask=ends)),
+        "turns_total": pa.array(total, pa.int64()),
+        "turn_no": pa.array(turn_no.astype(np.int32)),
+        "session_id": pa.array(sessions - sessions[first]),
+        "last_tool": tool.take(pa.array(seen, mask=seen < first)),
+        "cum_chars": pa.array(n_chars[i + 1] - n_chars[first],
+                              mask=has_text[i + 1] == has_text[first]),
+        "turns_remaining": pa.array(total - turn_no, pa.int64()),
+        **{f"n_{r}_5": pa.array(p[i] - p[lo]) for r, p in by_role.items()},
+        "roll_chars_5": pa.array((n_chars[i] - n_chars[lo]) / np.maximum(rolled, 1),
+                                 mask=rolled == 0),
+    }
+    text_stats = ngram_stats_batch(text)
+    for f, a in zip(NGRAM_STRUCT.fields, text_stats.flatten()):
+        cols[f.name] = a
+    vec = [cols[c].cast(pa.float64()) for c in FEATURE_COLS]
+    values = np.column_stack([pc.fill_null(v, 0.0).to_numpy() for v in vec]).ravel()
+    nulls = np.column_stack(
+        [v.is_null().to_numpy(zero_copy_only=False) for v in vec]).ravel()
+    offsets = pa.array(np.arange(0, len(values) + 1, len(vec), dtype=np.int32))
+    cols["feature_vec"] = pa.ListArray.from_arrays(
+        offsets, pa.array(values, mask=nulls), pa.list_(pa.field("element", pa.float64())))
+    return pa.RecordBatch.from_arrays(
+        [*rows.columns, *cols.values()], names=[*rows.schema.names, *cols])
+
+
+def _concat(batches: list[pa.RecordBatch]) -> pa.RecordBatch:
+    """One batch of ``batches``' rows (a plain slice when there is one)."""
+    if len(batches) == 1:
+        return batches[0]
+    return pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
+
+
+def _turn_kernel(batches, gap_s: float):
+    """``turn_features``' ``mapInArrow`` function: one range partition's
+    batches in canonical order in, the same rows with their features out.
+
+    Features are computed for whole conversations only. A batch's trailing
+    conversation may go on in the next batch, so it is held back (as
+    slices, with its start flags) until a later batch starts another
+    conversation or the partition ends. The cut is searched in each
+    incoming batch only, so a conversation over k batches costs k batches'
+    work, and a task holds at most one batch plus the held conversation."""
+    held, flags, before = [], [], None
+    for b in batches:
+        if b.num_rows == 0:
+            continue
+        conv = b.column("conv_id")
+        new = _conv_starts(conv, before)
+        before = conv.slice(b.num_rows - 1)
+        starts = np.flatnonzero(new)
+        if len(starts):
+            cut = int(starts[-1])
+            if held or cut:
+                yield _features(_concat([*held, b.slice(0, cut)]),
+                                np.concatenate([*flags, new[:cut]]), gap_s)
+            held, flags = [], []
+            b, new = b.slice(cut), new[cut:]
+        held.append(b)
+        flags.append(new)
+    if held:
+        yield _features(_concat(held), np.concatenate(flags), gap_s)
 
 
 def turn_features(df: DataFrame, gap_s: float = 1800.0) -> DataFrame:
     """transcripts -> one feature row per turn (entity x timestamp).
 
-    Fused form of the modular operators (windows.py / sessionize.py —
-    semantics identical, oracle-gated): expressions sharing a frame share
-    one Window node, so the whole feature pass is 4 window passes over the
-    single canonical-order sort instead of 8.
+    ``canonical_order`` (one range exchange and a sort) and then one
+    ``mapInArrow`` of ``_turn_kernel``: per range partition it computes
+    the 12 window columns, the six n-gram columns and ``feature_vec`` of
+    each whole conversation, in Arrow batches of
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows. A task holds one
+    batch plus the conversation that batch ends in, so its memory is
+    bounded by the batch size and the longest conversation, not by the
+    partition. The semantics are those of the modular window operators
+    (``operators/windows.py``, ``operators/sessionize.py``): a session
+    starts after a gap of more than ``gap_s`` seconds, and the rolling
+    features read turns -5..-1. The ``gap_s`` column is the difference of
+    the timestamps' own microseconds (for a TIMESTAMP_NTZ column, of the
+    wall clock's, which equals the operators' cast to TIMESTAMP in the
+    engine's UTC session).
 
-    Each pass is one ``selectExpr`` of SQL text (a few hundred Py4J calls
-    for the whole plan instead of over a thousand; module docstring).
-    ``gap_s`` enters the text as a checked DOUBLE literal, inf included
-    (``sqltext.double_lit``).
+    ``gap_s`` must be a number (``float`` refuses anything else, at build
+    time); inf means one session per conversation.
     """
+    gap = float(gap_s)
     out = canonical_order(df)
-    # pass 1 — plain offset/frame-free expressions (lag/lead family)
-    out = out.selectExpr(
-        "*",
-        f"({epoch_us('ts')} - {epoch_us(f'lag(ts) OVER ({_W})')}) / 1000000.0D"
-        " AS gap_s",
-        f"lag(role) OVER ({_W}) AS prev_role",
-        f"lead(role) OVER ({_W}) AS next_role",
-        f"count(1) OVER ({_W_ALL}) AS turns_total",
-    )
-    # pass 2 — cumulative frame (row_number shares the running frame)
-    boundary = f"CASE WHEN gap_s > {double_lit(gap_s)} THEN 1 ELSE 0 END"
-    out = out.selectExpr(
-        "*",
-        f"row_number() OVER ({_W}) AS turn_no",
-        f"CAST(sum({boundary}) OVER ({_W_CUM}) AS BIGINT) AS session_id",
-        f"last(tool, true) OVER ({_W_CUM}) AS last_tool",
-        f"CAST(sum(length(text)) OVER ({_W_CUM}) AS BIGINT) AS cum_chars",
-    )
-    # pass 3 — trailing row frame (-5..-1): leakage-safe rolling features;
-    # an empty frame on the first turn is null, and counts are 0 there
-    out = out.selectExpr(
-        "*",
-        "turns_total - turn_no AS turns_remaining",
-        *[
-            f"CAST(coalesce(sum(CASE WHEN role = '{r}' THEN 1 ELSE 0 END)"
-            f" OVER ({_W_ROLL}), 0) AS BIGINT) AS n_{r}_5"
-            for r in ("user", "tool")
-        ],
-        f"avg(length(text)) OVER ({_W_ROLL}) AS roll_chars_5",
-    )
-    out = with_ngram_features(out)
-    vec = ", ".join(f"CAST({c} AS DOUBLE)" for c in FEATURE_COLS)
-    return out.selectExpr("*", f"array({vec}) AS feature_vec")
+    kernel = functools.partial(_turn_kernel, gap_s=gap)
+    return out.mapInArrow(kernel, _feature_schema(out.schema))
 
 
 def backfill_features(features: DataFrame, queries: DataFrame) -> DataFrame:

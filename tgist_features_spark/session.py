@@ -2,8 +2,8 @@
 
 Every knob here exists for the 100 TB design point and is harmless locally:
 AQE (runtime re-planning + skew-join splitting), Arrow for every pandas UDF
-boundary, and shuffle partitions sized to the live cluster's parallelism
-rather than the 200 default.
+boundary, and shuffle partitions sized to the cluster's parallelism rather
+than the 200 default.
 
 Imported inside a Python worker (the package is first imported there while
 a task unpickles an engine UDF), the module also installs a zip-directory
@@ -23,6 +23,7 @@ every worker that imports the package.
 from __future__ import annotations
 
 import os
+import re
 import zipimport
 
 from pyspark import TaskContext
@@ -50,6 +51,24 @@ if TaskContext.get() is not None:
     zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
 
 
+def _declared_parallelism(master: str | None, conf: dict[str, str]) -> int | None:
+    """Task slots the launcher declared, known before any executor has
+    registered: ``spark.default.parallelism`` when set (what
+    ``defaultParallelism`` reads first), else N x C of a
+    ``local-cluster[N,C,MB]`` master, else ``spark.executor.instances`` x
+    ``spark.executor.cores`` when both are set; None when nothing is
+    declared."""
+    if "spark.default.parallelism" in conf:
+        return int(conf["spark.default.parallelism"])
+    m = re.fullmatch(r"local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,\s*\d+\s*\]", master or "")
+    if m:
+        return int(m[1]) * int(m[2])
+    n, c = conf.get("spark.executor.instances"), conf.get("spark.executor.cores")
+    if n and c:
+        return int(n) * int(c)
+    return None
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "tgist-features-spark",
@@ -62,7 +81,11 @@ def get_spark(
     ``--master`` wins, and a plain ``python`` run gets Spark's own default
     (``local[*]``). Shuffle partitions come from, in order: the caller's
     ``shuffle_partitions``, the launcher's ``spark.sql.shuffle.partitions``,
-    else ``max(4, 2 x defaultParallelism)`` of the session just started.
+    else ``max(4, 2 x n)``, where ``n`` is the parallelism the launcher
+    declared (``_declared_parallelism``) or, when it declared none, the
+    ``defaultParallelism`` of the session just started. On a cluster
+    master executors register asynchronously, so ``defaultParallelism``
+    read at start can count only those registered so far.
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -85,8 +108,9 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     if spark.conf.get(_SHUFFLE_PARTITIONS, None) is None:
-        n = spark.sparkContext.defaultParallelism
-        spark.conf.set(_SHUFFLE_PARTITIONS, str(max(4, 2 * n)))
+        sc = spark.sparkContext
+        n = _declared_parallelism(sc.master, dict(sc.getConf().getAll()))
+        spark.conf.set(_SHUFFLE_PARTITIONS, str(max(4, 2 * (n or sc.defaultParallelism))))
     return spark
 
 
