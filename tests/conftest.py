@@ -33,16 +33,11 @@ def queries_pdf(small_pdf):
 
 
 @pytest.fixture
-def hot_above(monkeypatch):
-    """``hot_above(build, rows)`` budgets one as-of merge-scan task at
-    ``rows`` rows of ``build`` (all of one payload width), so that entities
-    with more than ``rows`` build rows are hot in ``asof_join``."""
-    from tgist_features_spark.operators import asof
-
-    def apply(build, rows):
-        widths = build.select(asof._row_bytes(build).alias("w")).distinct().collect()
-        assert len(widths) == 1, widths
-        monkeypatch.setattr(asof, "ASOF_TASK_BYTES", rows * widths[0]["w"])
-        return build
-
-    return apply
+def arrow_batch_rows(spark):
+    """``arrow_batch_rows(n)`` sets ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    to ``n`` for the rest of the test; the session's value is restored
+    afterwards."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    yield lambda n: spark.conf.set(key, str(n))
+    spark.conf.set(key, before)

@@ -1,7 +1,6 @@
-"""As-of join: engine vs pandas.merge_asof oracle vs DuckDB ASOF JOIN,
-both routes of ``asof_join`` (plain and time-sliced), all
-directions/variants, edge cases, the exchange's sizing, and the sliced
-route's plan shape, job budget and slice sizes."""
+"""As-of join: engine vs pandas.merge_asof oracle vs DuckDB ASOF JOIN, all
+directions/variants, edge cases, exact value types, the plan shape and job
+budget, and the streaming kernel's memory bound (run without Spark)."""
 
 from __future__ import annotations
 
@@ -12,6 +11,8 @@ from decimal import Decimal
 import duckdb
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 
 import tgist_features_spark.operators.asof as asof_ops
@@ -19,7 +20,6 @@ from tgist_features_spark.operators.asof import asof_join
 from tgist_features_spark.oracle.pandas_oracle import oracle_backfill
 from tgist_features_spark.plans.backfill import backfill_features, turn_features
 from tgist_features_spark.sources.corpus import (
-    generate_queries_pdf,
     queries_df,
     transcripts_df,
 )
@@ -59,29 +59,6 @@ def test_backward(spark, feats, oracle_feats, queries_pdf):
     _check(backfill_features(feats, q).toPandas(), oracle_backfill(oracle_feats, queries_pdf))
 
 
-@pytest.fixture
-def hot20(hot_above, small_pdf):
-    """``hot20(build)``: conversations with more than 20 build rows are hot;
-    ``small_pdf`` holds both hot and cold ones, so they share one
-    exchange."""
-    sizes = small_pdf.groupby("conv_id").size()
-    assert (sizes > 20).any() and (sizes <= 20).any()
-    return lambda build: hot_above(build, 20)
-
-
-def _is_sliced(df) -> bool:
-    """Did ``asof_join`` take the time-sliced route (not plain)?"""
-    return "__slice" in df._jdf.queryExecution().analyzed().toString()
-
-
-def test_backward_salted_equals_plain(spark, feats, oracle_feats, queries_pdf, hot20):
-    q = queries_df(spark, queries_pdf)
-    hot20(feats.select("conv_id", "ts", "turn_idx", "feature_vec"))
-    out = backfill_features(feats, q)
-    assert _is_sliced(out)
-    _check(out.toPandas(), oracle_backfill(oracle_feats, queries_pdf))
-
-
 @pytest.mark.parametrize("direction", ["forward"])
 def test_forward(spark, feats, oracle_feats, queries_pdf, direction):
     q = queries_df(spark, queries_pdf)
@@ -95,21 +72,6 @@ def test_forward(spark, feats, oracle_feats, queries_pdf, direction):
         value_cols=["ts", "turn_idx", "feature_vec"],
     ).toPandas()
     _check(got, oracle_backfill(oracle_feats, queries_pdf, direction=direction))
-
-
-def test_forward_salted(spark, feats, oracle_feats, queries_pdf, hot20):
-    got = asof_join(
-        queries_df(spark, queries_pdf),
-        hot20(feats.select("conv_id", "ts", "turn_idx", "feature_vec")),
-        by="conv_id",
-        left_on="query_ts",
-        right_on="ts",
-        direction="forward",
-        value_cols=["ts", "turn_idx", "feature_vec"],
-    )
-    assert _is_sliced(got)
-    _check(got.toPandas(),
-           oracle_backfill(oracle_feats, queries_pdf, direction="forward"))
 
 
 @pytest.mark.parametrize("tol", [60.0, 3600.0])
@@ -212,12 +174,20 @@ def test_duplicate_ts_tiebreak(spark):
     assert set(fwd["v"]) == {12.0}
 
 
+def test_rejects_bad_direction_and_negative_tolerance():
+    """Refused before any plan is built, as ``pandas.merge_asof`` refuses a
+    negative tolerance."""
+    with pytest.raises(ValueError, match="direction"):
+        asof_join(None, None, direction="sideways")
+    with pytest.raises(ValueError, match="tolerance"):
+        asof_join(None, None, tolerance=-1.0)
+
+
 _VALUES = ("sig long, far timestamp, dec decimal(38,18), d date, ntz timestamp_ntz, "
            "bin binary, st struct<a:int,b:string>, m map<string,int>, arr array<string>")
 
 
-@pytest.mark.parametrize("route", ["plain", "sliced"])
-def test_values_keep_exact_type(spark, hot_above, tmp_path, route):
+def test_values_keep_exact_type(spark, tmp_path):
     """Every value crosses the merge-scan unchanged in its own type: 64-bit
     integers above 2^53 (a probe column and a carried one), timestamps past
     2262, decimal(38,18), date, timestamp_ntz, binary, struct, map and
@@ -232,8 +202,6 @@ def test_values_keep_exact_type(spark, hot_above, tmp_path, route):
                 datetime.date(9999, 12, 31 - k), datetime.datetime(2600, 6, 1, 0, 0, k),
                 bytes([0, 255, k]), (k, f"s{k}"), {"k": k}, ["a", f"b{k}"])
 
-    # read from parquet, so the build has a size estimate and the plain
-    # route runs unless ``hot_above`` shrinks the task budget
     spark.createDataFrame(
         [(1, day - datetime.timedelta(days=31), 0, *values(1)),
          (1, day, 1, *values(2)),
@@ -250,10 +218,7 @@ def test_values_keep_exact_type(spark, hot_above, tmp_path, route):
         "uid int, query_ts timestamp, query_id long, asked timestamp",
     )
     carried = [c for c in build.columns if c not in ("uid", "ts")]
-    if route == "sliced":
-        hot_above(build, 1)  # uid 1's two rows are hot
     out = asof_join(probe, build, by="uid", value_cols=["ts", *carried])
-    assert _is_sliced(out) == (route == "sliced")
     assert out.schema["uid"].dataType == probe.schema["uid"].dataType
     for c in ["ts", *carried]:
         assert out.schema[c].dataType == build.schema[c].dataType, c
@@ -305,74 +270,6 @@ def test_null_entity_matches_nothing(spark, direction):
         ref.sort_index().astype("Int64").tolist()
 
 
-def test_auto_skew_split_equals_plain(spark, feats, oracle_feats, queries_pdf, hot20):
-    """asof_join's sliced route: hot entities time-sliced, cold ones in
-    slice 0, one exchange — same results as the oracle."""
-    got = asof_join(
-        queries_df(spark, queries_pdf),
-        hot20(feats.select("conv_id", "ts", "turn_idx", "feature_vec")),
-        by="conv_id",
-        left_on="query_ts",
-        right_on="ts",
-        value_cols=["ts", "turn_idx", "feature_vec"],
-    )
-    assert _is_sliced(got)
-    _check(got.toPandas(), oracle_backfill(oracle_feats, queries_pdf))
-
-
-def test_probe_side_sizes_the_exchange(spark, tiny_pdf, monkeypatch):
-    """The probe side sizes the exchange too. With the per-task target
-    lowered so that the probe estimate alone needs more tasks than
-    ``spark.sql.shuffle.partitions`` (and the build alone would not), the
-    range exchange gets that many partitions as a fixed count; the build
-    still fits one task's budget, so nothing is sliced."""
-    t = transcripts_df(spark, tiny_pdf).select("conv_id", "ts", "turn_idx")
-    qpdf = generate_queries_pdf(tiny_pdf, n_queries=2000)
-    q = queries_df(spark, qpdf)
-    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    probe_est, build_est = asof_ops._size_estimate(q), asof_ops._size_estimate(t)
-    target = probe_est // (2 * default)
-    assert 0 < build_est <= asof_ops.ASOF_TASK_BYTES
-    assert build_est // target + 1 <= default < probe_est // target + 1
-    monkeypatch.setattr(asof_ops, "ASOF_TARGET_PARTITION_BYTES", target)
-
-    out = asof_join(q, t, value_cols=["ts", "turn_idx"])
-    assert not _is_sliced(out)
-    plan = _final_plan(out)
-    exchanges = re.findall(r"rangepartitioning\(.*?, (\d+)\), (REPARTITION_BY_\w+)", plan)
-    assert len(exchanges) == 1, plan
-    n, origin = exchanges[0]
-    assert int(n) > default and origin == "REPARTITION_BY_NUM", plan
-
-    got = out.toPandas().sort_values("query_id").reset_index(drop=True)
-    ref = pd.merge_asof(
-        qpdf.sort_values("query_ts", kind="mergesort"),
-        tiny_pdf[["conv_id", "ts", "turn_idx"]].sort_values(
-            ["ts", "turn_idx"], kind="mergesort"),
-        left_on="query_ts", right_on="ts", by="conv_id",
-    ).sort_values("query_id").reset_index(drop=True)
-    assert got["query_id"].tolist() == ref["query_id"].tolist()
-    for c in ("ts", "turn_idx"):
-        a, b = got[c].to_numpy(), ref[c].to_numpy()
-        assert bool(((pd.isna(a) & pd.isna(b)) | (a == b)).all()), c
-
-
-def test_partitions_for_size_rule():
-    from tgist_features_spark.operators.asof import (
-        ASOF_TARGET_PARTITION_BYTES,
-        _partitions_for_size,
-    )
-
-    floor = 8
-    assert _partitions_for_size(0, floor) == floor          # no stats
-    assert _partitions_for_size(-1, floor) == floor
-    assert _partitions_for_size(1 << 62, floor) == floor     # unknown sentinel
-    assert _partitions_for_size(1, floor) == floor           # tiny -> floor
-    gb64 = 64 * ASOF_TARGET_PARTITION_BYTES
-    assert _partitions_for_size(gb64, floor) == 65           # linear scaling
-    assert _partitions_for_size((1 << 59), floor) == 1 << 20  # hard cap
-
-
 @pytest.mark.parametrize("direction", ["nearest"])
 def test_nearest(spark, feats, oracle_feats, queries_pdf, direction):
     """J-family completeness: direction='nearest' (closest row on either
@@ -390,82 +287,19 @@ def test_nearest(spark, feats, oracle_feats, queries_pdf, direction):
     _check(got, oracle_backfill(oracle_feats, queries_pdf, direction=direction))
 
 
-def test_nearest_supported_by_salted(spark, feats, queries_pdf, hot20):
-    """'nearest' through the skew-safe path (one merge over each slice plus
-    both of its carries) must equal the plain merge-scan on the golden
-    corpus (the dedicated tie/slice test exercises the hard cases)."""
-    q = queries_df(spark, queries_pdf)
-    kw = dict(by="conv_id", left_on="query_ts", right_on="ts",
-              direction="nearest", value_cols=["ts", "turn_idx"])
-    plain = asof_join(q, feats.select("conv_id", "ts", "turn_idx"), **kw)
-    assert not _is_sliced(plain)
-    plain = plain.toPandas().sort_values("query_id").reset_index(drop=True)
-    auto = asof_join(q, hot20(feats.select("conv_id", "ts", "turn_idx")), **kw)
-    assert _is_sliced(auto)
-    salted = auto.toPandas().sort_values("query_id").reset_index(drop=True)
-    for c in ["ts", "turn_idx"]:
-        a, b = plain[c].to_numpy(), salted[c].to_numpy()
-        assert ((pd.isna(a) & pd.isna(b)) | (a == b)).all(), c
-
-
-def test_salted_probe_only_slice_gets_carry(spark, hot_above):
-    """A probe whose time slice contains NO build rows must still match
-    the last build row from an earlier slice. This is exactly what the
-    probe tag in the fused carry aggregation buys: a build-only
-    aggregation would never emit a row for the probe's slice, so no carry
-    would exist and the probe would wrongly return null (the faster
-    tag-free variant measured in round 4 fails this case)."""
-    build = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "conv_id": ["c"] * 3,
-                "ts": pd.to_datetime([1000, 2000, 3000], unit="s"),
-                "turn_idx": [0, 1, 2],
-            }
-        )
-    )
-    # probe sits 5 hours later: with ~667 s slices, its slice (and the 22
-    # before it) hold no build rows at all
-    probe = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "conv_id": ["c"],
-                "query_ts": pd.to_datetime([5 * 3600 + 100], unit="s"),
-            }
-        )
-    )
-    kw = dict(
-        by="conv_id", left_on="query_ts", right_on="ts",
-        direction="backward", value_cols=["ts", "turn_idx"],
-    )
-    plain = asof_join(probe, build, **kw)
-    assert not _is_sliced(plain)
-    plain = plain.toPandas()
-    hot_above(build, 1)
-    hot = asof_ops._hot_slices(build, ["conv_id"], "ts")
-    b_slices = {r["__slice"] for r in
-                asof_ops._tag_slices(build, hot, ["conv_id"], "ts").collect()}
-    p_slice = asof_ops._tag_slices(probe, hot, ["conv_id"], "query_ts").first()["__slice"]
-    assert p_slice > max(b_slices), (p_slice, b_slices)
-    auto = asof_join(probe, build, **kw)
-    assert _is_sliced(auto)
-    salted = auto.toPandas()
-    assert salted["turn_idx"].tolist() == plain["turn_idx"].tolist() == [2]
-
-
-def test_salted_nearest_matches_plain_with_ties_and_slices(spark, hot_above):
-    """Skew-safe 'nearest' must equal the plain merge-scan on a frame
-    engineered to exercise everything the carries can get wrong:
-    exact-distance ties (backward must win), matches that live in
-    NEIGHBORING slices on either side, probe-only slices, tolerance
-    rejection, and null probe timestamps."""
+def test_salted_nearest_matches_plain_with_ties_and_slices(spark, arrow_batch_rows):
+    """'nearest' equals ``pandas.merge_asof`` on a frame engineered to
+    exercise everything the kernel's carry can get wrong, read in 3-row
+    Arrow batches so that batch boundaries fall inside every entity:
+    exact-distance ties (backward must win), matches several batches away
+    on either side, probes in long gaps between build rows, tolerance
+    rejection, an unseen entity and null probe timestamps."""
     base = pd.Timestamp("2024-01-01")
     rows = []
     # entity e0: build events every 100s; probes sit exactly between two
     # events (tie: |50| both sides), exactly on events, and far away
     for i in range(40):
         rows.append(("e0", base + pd.Timedelta(seconds=100 * i), i))
-    build = pd.DataFrame(rows, columns=["conv_id", "ts", "turn_idx"])
     probes = []
     for i, off in enumerate([50, 150, 0, 3950, 12, 88, None]):
         probes.append(
@@ -476,10 +310,9 @@ def test_salted_nearest_matches_plain_with_ties_and_slices(spark, hot_above):
     probes.append(("e1", base, 100))
     rows.append(("e2", base, 999))
     probes.append(("e2", base + pd.Timedelta(seconds=5000), 101))
-    # e3: two bursts 10000 s apart (~500 s slices); probes in the gap sit in
-    # probe-only slices and match a carry from either side — backward
-    # nearer (200), an exact tie between the two carries (201), forward
-    # nearer (202)
+    # e3: two bursts 10000 s apart; probes in the gap match a row on either
+    # side — backward nearer (200), an exact tie between the two (201),
+    # forward nearer (202)
     for i in range(10):
         rows.append(("e3", base + pd.Timedelta(seconds=i), i))
         rows.append(("e3", base + pd.Timedelta(seconds=10_000 + i), 10 + i))
@@ -489,79 +322,27 @@ def test_salted_nearest_matches_plain_with_ties_and_slices(spark, hot_above):
     build = pd.DataFrame(rows, columns=["conv_id", "ts", "turn_idx"])
     b = spark.createDataFrame(build, schema="conv_id string, ts timestamp, turn_idx int")
     p = spark.createDataFrame(probe, schema="conv_id string, query_ts timestamp, query_id long")
-    kws = {tol: dict(by="conv_id", left_on="query_ts", right_on="ts",
-                     direction="nearest", tolerance=tol,
-                     value_cols=["ts", "turn_idx"])
-           for tol in [None, 60.0]}
-    plains = {}
-    for tol, kw in kws.items():
-        plain = asof_join(p, b, **kw)
-        assert not _is_sliced(plain)
-        plains[tol] = plain.toPandas().sort_values("query_id").reset_index(drop=True)
-    # every entity with 2+ rows is hot; slices are ~span/n wide
-    hot_above(b, 1)
-
-    # the slicing really forces neighbour-slice carries: query 0's forward
-    # match (100 s) lies in the next slice, and each e3 gap probe's slice
-    # holds no build row, with build slices on both sides
-    hot = asof_ops._hot_slices(b, ["conv_id"], "ts")
-    b_sl = asof_ops._tag_slices(b, hot, ["conv_id"], "ts").toPandas()
-    p_sl = asof_ops._tag_slices(p, hot, ["conv_id"], "query_ts").toPandas()
-    slice_of = dict(zip(zip(b_sl["conv_id"], b_sl["turn_idx"]), b_sl["__slice"]))
-    q0 = p_sl.loc[p_sl["query_id"] == 0, "__slice"].iloc[0]
-    assert slice_of[("e0", 0)] == q0 < slice_of[("e0", 1)]
-    e3 = set(b_sl.loc[b_sl["conv_id"] == "e3", "__slice"])
-    for qid in (200, 201, 202):
-        s = p_sl.loc[p_sl["query_id"] == qid, "__slice"].iloc[0]
-        assert s not in e3 and min(e3) < s < max(e3), (qid, s, e3)
-
-    for tol, kw in kws.items():
-        plain = plains[tol]
-        auto = asof_join(p, b, **kw)
-        assert _is_sliced(auto)
-        salted = auto.toPandas().sort_values("query_id").reset_index(drop=True)
+    arrow_batch_rows(3)
+    for tol in [None, 60.0]:
+        got = asof_join(p, b, by="conv_id", left_on="query_ts", right_on="ts",
+                        direction="nearest", tolerance=tol,
+                        value_cols=["ts", "turn_idx"])
+        got = got.toPandas().sort_values("query_id").reset_index(drop=True)
+        live = probe.dropna(subset=["query_ts"]).sort_values("query_ts")
+        ref = pd.merge_asof(
+            live, build.sort_values(["ts", "turn_idx"], kind="mergesort"),
+            left_on="query_ts", right_on="ts", by="conv_id", direction="nearest",
+            tolerance=None if tol is None else pd.Timedelta(seconds=tol))
+        ref = probe[["query_id"]].merge(ref, how="left", on="query_id")
+        ref = ref.sort_values("query_id").reset_index(drop=True)
         for c in ["ts", "turn_idx"]:
-            a, bb = plain[c].to_numpy(), salted[c].to_numpy()
+            a, bb = got[c].to_numpy(), ref[c].to_numpy()
             assert ((pd.isna(a) & pd.isna(bb)) | (a == bb)).all(), (tol, c)
         # tie at +-50s resolves BACKWARD (pandas nearest semantics)
-        tie = plain[plain["query_id"] == 0]["turn_idx"].iloc[0]
-        assert tie == 0
+        got = got.set_index("query_id")["turn_idx"]
+        assert got[0] == 0 and pd.isna(got[6]) and pd.isna(got[100])
         if tol is None:
-            gap = plain.set_index("query_id")["turn_idx"]
-            assert (gap[200], gap[201], gap[202]) == (9, 9, 10)
-
-
-def test_derived_slice_width_bounds_rows_per_slice(spark, hot_above):
-    """With evenly spaced, equally wide build rows and a task budget of B
-    rows, no hot (entity, slice) holds more than B + 1 rows, whatever the
-    spacing; an entity with exactly B rows is cold and keeps slice 0."""
-    B = 50
-    base = pd.Timestamp("2024-01-01")
-    # equal-length ids, so every row has the same payload width
-    spacing_us = {"h7s": 7_000_000, "h3u": 3, "h1u": 1, "cld": 60_000_000}
-    n_rows = {"h7s": 1000, "h3u": 997, "h1u": 700, "cld": B}
-    pdf = pd.concat([
-        pd.DataFrame({
-            "conv_id": e,
-            "ts": base + pd.to_timedelta(np.arange(n_rows[e]) * d, unit="us"),
-        })
-        for e, d in spacing_us.items()
-    ])
-    build = hot_above(
-        spark.createDataFrame(pdf, schema="conv_id string, ts timestamp"), B)
-    hot = asof_ops._hot_slices(build, ["conv_id"], "ts")
-    per_slice = (
-        asof_ops._tag_slices(build, hot, ["conv_id"], "ts")
-        .groupBy("conv_id", "__slice", "__hot").count().toPandas()
-    )
-    for e, n in n_rows.items():
-        g = per_slice[per_slice["conv_id"] == e]
-        if e == "cld":
-            assert g["__slice"].tolist() == [0] and not g["__hot"].any()
-            continue
-        assert g["__hot"].all(), e
-        assert g["count"].max() <= B + 1, (e, g["count"].max())
-        assert len(g) >= -(-n // (B + 1)), e
+            assert (got[200], got[201], got[202]) == (9, 9, 10)
 
 
 def _final_plan(df) -> str:
@@ -582,20 +363,22 @@ def parquet_sides(spark, small_pdf, queries_pdf, tmp_path_factory):
 
 
 @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
-def test_auto_plan_is_one_exchange_one_merge(parquet_sides, hot20, direction):
+def test_auto_plan_is_one_exchange_one_merge(parquet_sides, direction):
+    """Every direction is one range exchange on the session's partition
+    count (``REPARTITION_BY_COL``, which AQE may coalesce) and one
+    ``mapInArrow``."""
     p, b = parquet_sides
-    out = asof_join(p, hot20(b), direction=direction, value_cols=["ts", "turn_idx"])
-    assert _is_sliced(out)
+    out = asof_join(p, b, direction=direction, value_cols=["ts", "turn_idx"])
     plan = _final_plan(out)
     assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan, plan
     assert len(re.findall(r"Exchange rangepartitioning", plan)) == 1, plan
+    assert re.search(r"rangepartitioning\([^)]*\), REPARTITION_BY_COL", plan), plan
     assert "ExistingRDD" not in plan, "no checkpointed (RDD-scanned) input"
 
 
-def test_auto_nearest_job_budget(spark, parquet_sides, hot20):
+def test_auto_nearest_job_budget(spark, parquet_sides):
     """'nearest' is the same single pass as 'backward': no extra jobs."""
     p, b = parquet_sides
-    hot20(b)
     sc = spark.sparkContext
     jobs = {}
     for direction in ("backward", "nearest"):
@@ -611,33 +394,84 @@ def test_auto_nearest_job_budget(spark, parquet_sides, hot20):
     assert 0 < jobs["nearest"] <= jobs["backward"], jobs
 
 
-def test_auto_routes_small_build_to_plain(parquet_sides, monkeypatch):
-    """A build whose size estimate fits one task cannot hold a hot entity,
-    so ``asof_join`` then runs the plain merge-scan (no hot-set job); with
-    the budget below the estimate it takes the sliced route."""
-    p, b = parquet_sides
-    est = asof_ops._size_estimate(b)
-    assert 0 < est <= asof_ops.ASOF_TASK_BYTES
-    assert not _is_sliced(asof_join(p, b, value_cols=["ts", "turn_idx"]))
-    monkeypatch.setattr(asof_ops, "ASOF_TASK_BYTES", est - 1)
-    assert _is_sliced(asof_join(p, b, value_cols=["ts", "turn_idx"]))
+def _hot_stream(seed: int, n_build: int = 20_000, n_probe: int = 2_000):
+    """The merge input of one entity, sorted as ``asof_join`` sorts it:
+    ``n_build`` build rows (duplicate times included) and ``n_probe``
+    probes, in 100-row Arrow batches. About five rows share each time, so
+    runs of equal times often cross a batch boundary. Returns the batches
+    and, per probe's ``query_id``, the index of the batch holding it."""
+    rng = np.random.default_rng(seed)
+    key = rng.integers(0, (n_build + n_probe) // 5, n_build + n_probe)
+    side = np.repeat(np.int32([0, 1]), [n_build, n_probe])
+    tb = np.r_[rng.integers(0, 50, n_build), np.zeros(n_probe, dtype=int)]
+    order = np.lexsort((tb, side, key))
+    key, side, tb = key[order], side[order], tb[order]
+    build = side == 0
+    qid = np.cumsum(~build) - 1
+    table = pa.table({
+        "conv_id": pa.array(["hot"] * len(key)),
+        "__key": pa.array(key),
+        "__side": pa.array(side),
+        "query_id": pa.array(qid, mask=build),
+        "ts": pa.array(key, mask=~build),
+        "turn_idx": pa.array(tb, mask=~build),
+    })
+    batches = table.to_batches(max_chunksize=100)
+    batch_of = (np.arange(len(key)) // 100)[~build]
+    return batches, batch_of
 
 
-def test_size_estimate_raises_python_side_errors():
-    """Only a JVM-side failure means "no statistics" (estimate 0); a
-    Python-side error such as a missing ``_jdf`` must surface."""
-    with pytest.raises(AttributeError):
-        asof_ops._size_estimate(object())
+@pytest.mark.parametrize("exact", [True, False])
+@pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
+def test_kernel_streams_with_bounded_carry(monkeypatch, direction, exact):
+    """The merge-scan kernel, called directly on 100-row batches of one hot
+    entity (20k build rows, 2k probes): it carries at most 3 build rows
+    between batches, plus (forward, nearest) the probes still waiting for
+    a later build row; for backward it carries nothing else and yields the
+    output of batch k before it pulls batch k + 2. The result equals
+    ``pandas.merge_asof``."""
+    batches, batch_of = _hot_stream(seed=11)
+    pulled, carries = [], []
 
+    def feed():
+        for k, b in enumerate(batches):
+            pulled.append(k)
+            yield b
 
-def test_row_bytes_measures_payload(spark):
-    """Hot detection sums per-row payload bytes: byte length for strings
-    (UTF-8), elements for arrays (0 when null), fixed widths otherwise
-    (null or not)."""
-    df = spark.createDataFrame(
-        [("abé", [1.0, 2.0], ["x", "yz"], 7, None),
-         ("", None, [], None, "q")],
-        "s string, a array<double>, sa array<string>, i int, n string",
-    )
-    got = [r[0] for r in df.select(asof_ops._row_bytes(df)).collect()]
-    assert got == [4 + 16 + 3 + 4 + 0, 0 + 0 + 0 + 4 + 1]
+    step = asof_ops._step
+
+    def spy(chunk, last, **spec):
+        out, carry = step(chunk, last, **spec)
+        if carry is not None:
+            carries.append(carry)
+        return out, carry
+
+    monkeypatch.setattr(asof_ops, "_step", spy)
+    outs = []
+    for out in asof_ops._scan(
+        feed(), by=["conv_id"], direction=direction, tol=None, exact=exact,
+        probe_cols=["conv_id", "query_id"], carried=["ts", "turn_idx"], narrow={},
+        names=["conv_id", "query_id", "ts", "turn_idx"],
+    ):
+        qids = out.column("query_id").to_numpy()
+        if direction == "backward":
+            assert len(pulled) <= batch_of[qids].min() + 2
+        outs.append(out)
+
+    assert carries
+    for carry in carries:
+        waiting = int(pc.sum(carry.column("__side")).as_py() or 0)
+        assert carry.num_rows - waiting <= 3
+        if direction == "backward":
+            assert waiting == 0
+
+    got = pa.Table.from_batches(outs).to_pandas().sort_values("query_id")
+    rows = pa.Table.from_batches(batches).to_pandas()
+    probe = rows[rows["__side"] == 1][["query_id", "__key"]]
+    build = rows[rows["__side"] == 0][["__key", "ts", "turn_idx"]]
+    ref = pd.merge_asof(probe, build, on="__key", direction=direction,
+                        allow_exact_matches=exact).sort_values("query_id")
+    assert got["query_id"].tolist() == list(range(len(probe)))
+    for c in ("ts", "turn_idx"):
+        a, b = got[c].to_numpy(), ref[c].to_numpy()
+        assert ((pd.isna(a) & pd.isna(b)) | (a == b)).all(), c

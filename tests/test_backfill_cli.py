@@ -2,9 +2,9 @@
 --master reaches the job, and the output equals the pandas oracle with zero
 leakage.
 
-The corpus is tiny, so the feature table fits one merge-scan task and
-``asof_join`` takes its plain route here; the time-sliced route is
-covered in-process (tests/test_asof.py, tests/test_property_asof.py)."""
+``asof_join`` has one route; its batch-boundary cases and hot-entity memory
+bound are covered in-process (tests/test_asof.py,
+tests/test_property_asof.py)."""
 
 from __future__ import annotations
 

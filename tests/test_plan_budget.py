@@ -13,7 +13,6 @@ import threading
 import pytest
 from py4j.clientserver import ClientServerConnection
 
-from tgist_features_spark.operators import asof
 from tgist_features_spark.plans.backfill import backfill_features, turn_features
 from tgist_features_spark.plans.lineage import _written_frame
 from tgist_features_spark.sources.corpus import (
@@ -64,11 +63,9 @@ def test_turn_features_build_budget(sides):
 
 
 def test_backfill_features_build_budget(sides):
+    """The as-of's one plan: 138 calls on pyspark 4.1."""
     t, q = sides
     feats = turn_features(t)
-    build = feats.select("conv_id", "ts", "turn_idx", "feature_vec")
-    # the plain merge-scan route: the build fits one task's budget
-    assert 0 < asof._size_estimate(build) <= asof.ASOF_TASK_BYTES
     assert _py4j_calls(lambda: backfill_features(feats, q)) <= 350
 
 

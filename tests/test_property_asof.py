@@ -1,12 +1,13 @@
 """Hypothesis property tests: engine as-of == pandas.merge_asof on random
-skewed frames, plain and time-sliced (one hot entity); sessionize
+skewed frames (every direction, exact or strict, with and without a
+tolerance, in Arrow batches small enough to split an entity); sessionize
 invariants."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from hypothesis import HealthCheck, assume, given, settings
+from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from tgist_features_spark.operators.asof import asof_join
@@ -44,48 +45,57 @@ def _rand_frames(seed: int, n_entities: int, n_build: int, n_probe: int):
             "query_id": np.arange(n_probe, dtype="int64"),
         }
     )
+    # probes on build times (exact matches), a null time, a null entity
+    # and an entity with no build rows
+    probe.loc[:4, ["conv_id", "query_ts"]] = build.loc[:4, ["conv_id", "ts"]].to_numpy()
+    probe.loc[5, "query_ts"] = pd.NaT
+    probe.loc[6, "conv_id"] = None
+    probe.loc[7, "conv_id"] = "unseen"
     build["ts"] = build["ts"].astype("datetime64[us]")
     probe["query_ts"] = probe["query_ts"].astype("datetime64[us]")
     return build, probe
 
 
-def _oracle(build, probe, direction):
+def _oracle(build, probe, direction, allow_exact_matches, tolerance):
+    """``pandas.merge_asof`` of the probes with a time and an entity; the
+    others match nothing."""
     b = build.sort_values(["ts", "turn_idx"], kind="mergesort")
-    q = probe.sort_values("query_ts", kind="mergesort")
+    q = probe.dropna(subset=["conv_id", "query_ts"]).sort_values("query_ts", kind="mergesort")
+    ref = pd.merge_asof(
+        q, b, left_on="query_ts", right_on="ts", by="conv_id", direction=direction,
+        allow_exact_matches=allow_exact_matches,
+        tolerance=None if tolerance is None else pd.Timedelta(seconds=tolerance),
+    )
     return (
-        pd.merge_asof(
-            q, b, left_on="query_ts", right_on="ts", by="conv_id", direction=direction
-        )
+        probe[["query_id"]].merge(ref[["query_id", "ts", "v"]], how="left", on="query_id")
         .sort_values("query_id")
         .reset_index(drop=True)
     )
 
 
-@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@settings(max_examples=20, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     seed=st.integers(0, 2**31 - 1),
     direction=st.sampled_from(["backward", "forward", "nearest"]),
-    salted=st.booleans(),
+    allow_exact_matches=st.booleans(),
+    tolerance=st.sampled_from([None, 30.0]),
+    batch_rows=st.sampled_from([3, 7, 10000]),
 )
-def test_asof_matches_merge_asof(spark, hot_above, monkeypatch, seed, direction, salted):
+def test_asof_matches_merge_asof(spark, arrow_batch_rows, seed, direction,
+                                 allow_exact_matches, tolerance, batch_rows):
+    """Small Arrow batches put batch boundaries inside entities, where the
+    kernel's carry decides the match."""
     build, probe = _rand_frames(seed, n_entities=5, n_build=60, n_probe=40)
     b = spark.createDataFrame(build, schema="conv_id string, ts timestamp, turn_idx int, v double")
     p = spark.createDataFrame(probe, schema="conv_id string, query_ts timestamp, query_id long")
-    if salted:
-        # entity e0 (half the rows) is hot and time-sliced; the others stay
-        # cold in slice 0 of the same exchange
-        sizes = build["conv_id"].value_counts()
-        cold_max = int(sizes.drop("e0", errors="ignore").max())
-        assume(sizes.get("e0", 0) > cold_max)
-        hot_above(b, cold_max)
-    else:
-        # examples share one monkeypatch: drop an earlier example's budget
-        monkeypatch.undo()
+    arrow_batch_rows(batch_rows)
     out = asof_join(p, b, by="conv_id", left_on="query_ts", right_on="ts",
-                    direction=direction, value_cols=["ts", "turn_idx", "v"])
-    assert ("__slice" in out._jdf.queryExecution().analyzed().toString()) == salted
+                    direction=direction, tolerance=tolerance,
+                    allow_exact_matches=allow_exact_matches,
+                    value_cols=["ts", "turn_idx", "v"])
     got = out.toPandas().sort_values("query_id").reset_index(drop=True)
-    ref = _oracle(build, probe, direction)
+    ref = _oracle(build, probe, direction, allow_exact_matches, tolerance)
+    assert got["query_id"].tolist() == ref["query_id"].tolist()
     mt, ot = got["ts"].to_numpy(), ref["ts"].to_numpy()
     assert bool(((pd.isna(mt) & pd.isna(ot)) | (mt == ot)).all())
     gv, rv = got["v"].to_numpy(), ref["v"].to_numpy()

@@ -12,7 +12,8 @@ tables of multi-turn agent transcripts:
   (no RDDs, no per-row Python UDFs)
 * core:   as-of (backward/forward) merge-scan join, lag/lead turn features,
   timestamp-gap sessionize, rolling per-role/tool counts, n-gram/chunk
-  text features, time-sliced hot conversations in the as-of,
+  text features, a streaming as-of whose task memory a hot
+  conversation does not grow,
   per-partition lineage manifest.
 
 The reference checkout was empty during the survey session (SURVEY.md §0),

@@ -2,133 +2,58 @@
 
 Spark 4.1 has no ASOF JOIN in Catalyst, so this is a custom merge-scan:
 both sides are tagged and unioned, range-partitioned by the entity key (one
-shuffle; equal keys never split), sorted by event time within each
-partition, and merged with one vectorized ``pandas.merge_asof(by=entity)``
-per partition via ``mapInArrow``. Pandas sees only the entity keys, the
-event time and build row positions; every value is taken from the
-partition's Arrow columns at the matched positions and keeps its type. (A
-pandas round trip of the union, where each side's columns are null on the
-other's rows, rounded 64-bit integers above 2^53 through float64 and
-failed on timestamps past 2262.) Semantics (pinned by property tests
-against the pure pandas oracle and DuckDB's ASOF JOIN):
+shuffle; equal keys never split), sorted within each partition by
+``(entity, event time, side, tiebreak)`` and merged by one streaming
+``mapInArrow`` kernel. Build rows are side 0, so at an equal time they sort
+before the probes. Semantics (pinned by property tests against
+``pandas.merge_asof`` and DuckDB's ASOF JOIN):
 
 * backward: match the build row with the greatest ts <= query_ts
   (``allow_exact_matches=False`` makes it strictly <) — the point-in-time /
   zero-leakage form;
-* forward: smallest ts >= query_ts;
+* forward: smallest ts >= query_ts (strictly > when not exact);
 * nearest: the closer of the two, backward winning exact-distance ties;
 * tolerance: reject matches further than a max staleness;
 * ties on build ts resolve to the greatest tiebreak (backward) / smallest
   (forward) — deterministic under duplicate timestamps;
 * probes with no eligible build row keep null feature columns (left join);
 * null query_ts, null entity or unseen entity -> null match (build rows
-  with a null ts or entity never match; pandas alone would match a null
-  entity to a null entity).
+  with a null ts or entity never match, and a null entity matches no null
+  entity).
 
-Sizing: Catalyst's size estimates of both sides (no job) say how many
-merge-scan tasks of ``ASOF_TARGET_PARTITION_BYTES`` the input needs. Above
-``spark.sql.shuffle.partitions`` the range exchange gets that many;
-otherwise, or with an estimate missing, it keeps the session default,
-which AQE may coalesce.
+Matching: a key run is a maximal run of equal ``(entity, time)``.
+Backward takes the last build row before the end of the probe's run (before
+its start when strict), forward the first build row at or after the run's
+start (after its end when strict); both are running max/min of build
+positions over the stream, with no pandas step. Every value is taken from
+the Arrow columns at the matched position and keeps its type (a pandas
+round trip rounded 64-bit integers above 2^53 and failed on timestamps past
+2262).
 
-Skew: a hot conversation funnels its entire probe+build volume through one
-merge-scan task. When the build's estimate fits one task's budget
-(``ASOF_TASK_BYTES``) no entity can be hot and the merge-scan runs as is,
-with no extra job. Otherwise an entity whose build rows hold more than
-``ASOF_TASK_BYTES`` of payload is cut into time slices sized from its own
-bytes and time span, cold entities stay in slice 0, and each hot probe
-slice receives the carry-in rows (the latest build row of any earlier
-slice and/or the earliest of any later one) its merge needs. Hot and cold
-rows then share the same ONE range exchange and ONE ``mapInArrow``, keyed
-on ``(entity, slice)``; both routes return the same rows for every
-direction (tests/test_asof.py, tests/test_property_asof.py).
+Memory: the kernel reads one Arrow batch at a time
+(``spark.sql.execution.arrow.maxRecordsPerBatch`` rows). In entity-major
+order only a batch's trailing entity can match rows of the next batch, so
+the kernel carries just that entity's last build row, the first build row of
+that row's key run and the last build row before that run, plus, for
+forward and nearest, its probes still waiting for a later build row. A task
+holds one batch and that carry (<= 3 rows for backward) whatever the size of
+its partition or of a hot conversation, so the exchange keeps the session's
+partition count, which AQE may coalesce.
 """
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from py4j.protocol import Py4JError
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
+from tgist_features_spark.functions.arrowu import concat, run_starts
 from tgist_features_spark.functions.sqltext import ident
-from tgist_features_spark.functions.timeu import us
-
-# target bytes of probe + build input per merge-scan task (the exchange's
-# partition count). A task holds its whole partition as Arrow batches, plus
-# a pandas frame of the entity keys, event times and build row positions
-# and the output columns taken from the batches
-ASOF_TARGET_PARTITION_BYTES = 64 << 20
-
-# build-side payload bytes of ONE entity that one merge-scan task should
-# hold; an entity with more is hot and ``asof_join`` time-slices it.
-# Bytes are summed per row (``_row_bytes``), so the row count this allows
-# follows the build's own width: backfill_features' build (conv_id, ts,
-# turn_idx, 11-double feature_vec) is 109 B/row, hot above ~616k rows.
-ASOF_TASK_BYTES = ASOF_TARGET_PARTITION_BYTES
-
-# on-wire widths of fixed-size types (see ``_value_bytes``)
-_WIDTHS = {
-    T.BooleanType: 1,
-    T.ByteType: 1,
-    T.ShortType: 2,
-    T.IntegerType: 4,
-    T.DateType: 4,
-    T.FloatType: 4,
-    T.LongType: 8,
-    T.DoubleType: 8,
-    T.TimestampType: 8,
-    T.TimestampNTZType: 8,
-}
-
-
-def _partitions_for_size(size: int, floor: int) -> int:
-    """Tasks needed for ``size`` input bytes, never below ``floor`` (the
-    session's shuffle partitions). Pure, unit-tested apart from the Py4J
-    stats call."""
-    if size <= 0 or size >= (1 << 60):
-        # no statistics (or the unknown-size sentinel, Long.MaxValue-ish):
-        # fall back to the session default rather than a huge shuffle
-        return floor
-    return max(floor, min(1 << 20, size // ASOF_TARGET_PARTITION_BYTES + 1))
-
-
-def _size_estimate(df: DataFrame) -> int:
-    """Catalyst's size estimate of ``df``'s analyzed plan in bytes — no job
-    (statistics come from file sizes / plan estimation) and no optimizer
-    pass; 0 when the JVM cannot provide it. Python-side errors raise."""
-    try:
-        return int(df._jdf.logicalPlan().stats().sizeInBytes())
-    except Py4JError:
-        return 0
-
-
-def _value_bytes(c: Column, dt: T.DataType) -> Column:
-    """Payload bytes of one value: strings and binary by byte length and
-    arrays by their elements (either 0 when null); other types by their
-    fixed width (16 bytes for any type not in ``_WIDTHS``, maps and
-    structs included)."""
-    if isinstance(dt, (T.StringType, T.BinaryType)):
-        n = F.octet_length(c)
-    elif isinstance(dt, T.ArrayType):
-        w = _WIDTHS.get(type(dt.elementType))
-        n = F.size(c) * w if w else F.aggregate(
-            c, F.lit(0).cast("long"),
-            lambda acc, x: acc + _value_bytes(x, dt.elementType),
-        )
-    else:
-        return F.lit(_WIDTHS.get(type(dt), 16))
-    return F.when(c.isNull(), 0).otherwise(n)
-
-
-def _row_bytes(df: DataFrame) -> Column:
-    """Payload bytes of one row of ``df`` (the sum of its values')."""
-    return sum((_value_bytes(F.col(f.name), f.dataType) for f in df.schema.fields),
-               F.lit(0))
 
 
 def _plan(probe: DataFrame, build: DataFrame, by, left_on, right_on, value_cols):
@@ -147,128 +72,94 @@ def _plan(probe: DataFrame, build: DataFrame, by, left_on, right_on, value_cols)
     return by, value_cols, rename, carried, out_schema
 
 
-def _merge_scan(
-    probe: DataFrame,
-    build: DataFrame,
-    by_list: list[str],
-    left_on: str,
-    right_on: str,
-    direction: str,
-    tolerance: float | None,
-    allow_exact_matches: bool,
-    value_cols: list[str],
-    tb: list[str],
-    tasks: int | None,
-) -> DataFrame:
-    """The merge-scan both routes of ``asof_join`` run: tag both sides,
-    union, ONE ``repartitionByRange`` on the entity key (``tasks``
-    partitions, or the session default when None), ``sortWithinPartitions``
-    by (event time, side, tiebreak ``tb``), then one vectorized
-    ``pandas.merge_asof(by=entity)`` per partition via ``mapInArrow`` —
-    thousands of entities per C-level merge call instead of one Python call
-    per entity.
-
-    Only the ``by`` columns, the event time (int64 microseconds) and build
-    row positions reach pandas; the output is ``take`` of the partition's
-    Arrow columns at each probe's matched position, so no value passes
-    through a pandas dtype (float64 rounded 2^62 + 1 to 2^62, and
-    nanosecond ``datetime64`` failed on years past 2262). A probe with a
-    null time or entity matches nothing."""
-    _, value_cols, rename, carried, out_schema = _plan(
-        probe, build, by_list, left_on, right_on, value_cols
-    )
-    probe_cols = list(probe.columns)
-    carried_names = [f.name for f in carried]
-    tb_names = [f"__tb{i}" for i in range(len(tb))]
-
-    # tagged union on a common wide schema: the JVM fills probe columns
-    # with nulls on the build side and vice versa; __key is the event-time
-    # merge key on both sides. Expressions are SQL text (functions/sqltext)
-    l = probe.selectExpr(
-        "0 AS __side",
-        f"CAST({ident(left_on)} AS TIMESTAMP_NTZ) AS __key",
-        *map(ident, probe_cols),
-    )
-    not_null = " AND ".join(f"{ident(c)} IS NOT NULL" for c in [right_on, *by_list])
-    r = build.filter(not_null).selectExpr(
-        "1 AS __side",
-        f"CAST({ident(right_on)} AS TIMESTAMP_NTZ) AS __key",
-        *map(ident, by_list),
-        *[f"{ident(c)} AS {ident(rename[c])}" for c in value_cols],
-        *[f"{ident(t)} AS {n}" for t, n in zip(tb, tb_names)],
-    )
-    u = l.unionByName(r, allowMissingColumns=True)
-    u = u.repartitionByRange(tasks, *by_list) if tasks else u.repartitionByRange(*by_list)
-    u = u.sortWithinPartitions("__key", "__side", *tb_names)
-
-    tol = None if tolerance is None else (
-        pd.Timedelta(seconds=tolerance) // pd.Timedelta(microseconds=1))
-    by_key = by_list[0] if len(by_list) == 1 else by_list
-    # the union widens a ``by`` column whose type differs between the sides
-    # (probe int, build long -> long); the output keeps the probe's type
-    pfields, bfields = probe.schema, build.schema
-    narrow = {c: to_arrow_type(pfields[c].dataType) for c in by_list
-              if pfields[c].dataType != bfields[c].dataType}
-
-    def scan(batches):
-        batches = list(batches)  # one partition, sorted by (__key, __side, tb)
-        if not batches:
-            return
-        t = pa.Table.from_batches(batches)
-        keys = t.select(by_list).append_column("__key", t["__key"].cast(pa.int64()))
-        side = t["__side"].to_numpy()
-        probes, builds = np.flatnonzero(side == 0), np.flatnonzero(side == 1)
-        # probes with a null time or entity stay unmatched (position null)
-        live = np.logical_and.reduce(
-            [c.is_valid().to_numpy() for c in keys.take(probes).columns])
-        merged = pd.merge_asof(
-            keys.take(probes[live]).to_pandas(),
-            keys.take(builds).to_pandas().assign(__pos=builds),
-            on="__key",
-            by=by_key,
-            direction=direction,
-            tolerance=tol,
-            allow_exact_matches=allow_exact_matches,
-        )
-        pos = np.full(len(probes), -1)
-        pos[live] = merged["__pos"].fillna(-1).to_numpy()
-        matched = pa.array(pos, mask=pos < 0)
-        cols = [t[c].take(probes) for c in probe_cols]
-        cols = [c.cast(narrow[n]) if n in narrow else c for n, c in zip(probe_cols, cols)]
-        cols += [t[c].take(matched) for c in carried_names]
-        yield from pa.Table.from_arrays(cols, names=out_schema.names).to_batches()
-
-    return u.mapInArrow(scan, schema=out_schema)
+def _last_upto(flags: np.ndarray) -> np.ndarray:
+    """Per row, the position of the last flagged row at or before it (-1
+    when none)."""
+    return np.maximum.accumulate(np.where(flags, np.arange(len(flags)), -1))
 
 
-def _hot_slices(build: DataFrame, by: list[str], right_on: str) -> DataFrame:
-    """``(*by, __lo, __w)`` for every entity whose build rows hold more than
-    ``ASOF_TASK_BYTES`` of payload: its first event time and a slice width
-    (both epoch us) that gives each slice ~``ASOF_TASK_BYTES`` when the
-    entity's bytes are spread evenly over its time span."""
-    t = us(F.col(right_on))
-    span = (F.col("__hi") - F.col("__lo") + 1).cast("double")
-    return (
-        build.groupBy(*by)
-        .agg(F.sum(_row_bytes(build)).alias("__bytes"), F.min(t).alias("__lo"),
-             F.max(t).alias("__hi"))
-        .filter(F.col("__bytes") > ASOF_TASK_BYTES)
-        .select(*by, "__lo",
-                F.ceil(span * ASOF_TASK_BYTES / F.col("__bytes")).alias("__w"))
-    )
+def _first_from(flags: np.ndarray) -> np.ndarray:
+    """Per row, and for the position one past the end, the position of the
+    first flagged row at or after it (``len(flags)`` when none)."""
+    n = len(flags)
+    pos = np.append(np.where(flags, np.arange(n), n), n)
+    return np.minimum.accumulate(pos[::-1])[::-1]
 
 
-def _tag_slices(df: DataFrame, hot: DataFrame, by: list[str], t_col: str) -> DataFrame:
-    """``df`` plus ``__slice`` (the hot entity's time slice of ``t_col``;
-    0 for cold entities and null times) and ``__hot``. Probe and build use
-    this one expression, so equal timestamps always share a slice, and the
-    slice is non-decreasing in time within an entity."""
-    slice_ = F.floor((us(F.col(t_col)) - F.col("__lo")) / F.col("__w"))
-    return df.join(F.broadcast(hot), on=by, how="left").select(
-        *df.columns,
-        F.coalesce(slice_, F.lit(0)).alias("__slice"),
-        F.col("__w").isNotNull().alias("__hot"),
-    )
+def _step(chunk: pa.RecordBatch, last: bool, *, by, direction, tol, exact,
+          probe_cols, carried, narrow, names):
+    """Match the probes of ``chunk`` (the carry plus one batch, in merge
+    order). Returns the probes' output rows (None when there are none) and
+    the carry for the next chunk (None when empty; nothing is carried when
+    ``last``, the partition's end). A probe of the trailing entity whose
+    forward match may still come is carried rather than output."""
+    n = chunk.num_rows
+    ents = [chunk.column(c) for c in by]
+    key = chunk.column("__key").cast(pa.int64())
+    ent_new = run_starts(ents)
+    run_new = ent_new | run_starts([key])
+    ent_ends, run_ends = np.append(ent_new[1:], True), np.append(run_new[1:], True)
+    ent_first, ent_last = _last_upto(ent_new), _first_from(ent_ends)[:n]
+    run_first, run_last = _last_upto(run_new), _first_from(run_ends)[:n]
+    build = chunk.column("__side").to_numpy() == 0
+    live = ~build & np.logical_and.reduce(
+        [c.is_valid().to_numpy(zero_copy_only=False) for c in [*ents, key]])
+    t = pc.fill_null(key, 0).to_numpy()
+
+    upto, after = _last_upto(build), _first_from(build)
+    back = upto if exact else np.where(run_first > 0, upto[run_first - 1], -1)
+    fwd = after[run_first] if exact else after[run_last + 1]
+    back_ok, fwd_ok = back >= ent_first, fwd <= ent_last
+    if direction == "backward":
+        m = np.where(back_ok, back, -1)
+    elif direction == "forward":
+        m = np.where(fwd_ok, fwd, -1)
+    else:
+        closer = t[np.minimum(fwd, n - 1)] - t < t - t[back]
+        m = np.where(fwd_ok & (~back_ok | closer), fwd, np.where(back_ok, back, -1))
+    if tol is not None:
+        m = np.where(np.abs(t[m] - t) <= tol, m, -1)
+    m = np.where(live, m, -1)
+
+    keep = []
+    if not last:
+        first = ent_first[n - 1]
+        lb = upto[n - 1]  # the trailing entity's last build row
+        if lb >= first:
+            f = run_first[lb]  # a build row: builds lead their key run
+            p = upto[f - 1] if f else -1
+            keep = sorted({x for x in (p, f, lb) if x >= first})
+        if direction != "backward":
+            keep += list(np.flatnonzero(live & ~fwd_ok & (ent_last == n - 1)))
+    wait = np.zeros(n, dtype=bool)
+    wait[keep] = True
+    emit = np.flatnonzero(~build & ~wait)
+
+    out = None
+    if len(emit):
+        cols = [chunk.column(c).take(emit) for c in probe_cols]
+        cols = [c.cast(narrow[nm]) if nm in narrow else c for nm, c in zip(probe_cols, cols)]
+        matched = pa.array(m[emit], mask=m[emit] < 0)
+        cols += [chunk.column(c).take(matched) for c in carried]
+        out = pa.RecordBatch.from_arrays(cols, names=names)
+    return out, (chunk.take(np.array(keep, dtype=np.int64)) if keep else None)
+
+
+def _scan(batches, **spec):
+    """The merge-scan's ``mapInArrow`` function: one range partition's
+    batches in merge order in, the matched probes out. Each chunk is the
+    carry plus one incoming batch; the carry left at the partition's end
+    is matched last, with no later build row to wait for."""
+    carry = None
+    for b in batches:
+        if b.num_rows:
+            out, carry = _step(b if carry is None else concat([carry, b]), False, **spec)
+            if out is not None:
+                yield out
+    if carry is not None:
+        out, _ = _step(carry, True, **spec)
+        if out is not None:
+            yield out
 
 
 def asof_join(
@@ -285,99 +176,60 @@ def asof_join(
 ) -> DataFrame:
     """Point-in-time join: probe (entity, query_ts) x build (entity, ts).
     ``direction``: 'backward' (latest row at or before), 'forward'
-    (earliest at or after), or 'nearest' (closest on either side). Returns
-    probe.* plus the matched build value columns (renamed with a
-    ``_matched`` suffix on collision). Left-join semantics.
+    (earliest at or after), or 'nearest' (closest on either side);
+    ``tolerance`` in seconds. Returns probe.* plus the matched build value
+    columns (renamed with a ``_matched`` suffix on collision). Left-join
+    semantics.
 
-    Sizing (no job): each ``_merge_scan`` task materializes one partition,
-    like a sort-merge join buffer. Catalyst's size estimates of the probe
-    and of the build's merged columns, over ``ASOF_TARGET_PARTITION_BYTES``,
-    give the tasks the input needs. When that is more than
-    ``spark.sql.shuffle.partitions`` the exchange gets that many
-    partitions; otherwise, or with an estimate missing, it keeps the
-    session default, which AQE may coalesce.
-
-    Skew: when the build's estimate fits ``ASOF_TASK_BYTES`` no entity can
-    be hot and the merge-scan runs as is. The estimate sizes rows from type
-    defaults (an array counts one element), so wide rows can be
-    under-counted — the same estimate Spark uses to pick broadcast joins.
-    Otherwise (or with no estimate) one aggregation over the build finds
-    the hot entities (more than ``ASOF_TASK_BYTES`` of row payload) and
-    their slice widths; the tiny hot set is broadcast and tags both sides
-    with ``__slice``. For every hot slice that holds probes, the carry-in
-    rows come from one aggregation per hot ``(entity, slice)``
-    (``max_by``/``min_by`` of the slice's build rows, plus a "holds probes"
-    flag) and one window over those slice rows: the latest summary of any
-    earlier slice (backward) and/or the earliest of any later slice
-    (forward). A probe-only slice still gets its carry. Build rows and
-    carries then go through the same merge-scan keyed on
-    ``(entity, __slice)``. Within a slice, the slice's rows plus its
-    carries hold both global candidates, so ``nearest`` is the same single
-    merge (pandas resolves exact-distance ties backward).
+    One plan: both sides are tagged (build 0, probe 1) and unioned with the
+    event time as ``__key``, ONE ``repartitionByRange`` on the entity key
+    (the session's partition count), ``sortWithinPartitions`` by
+    ``(*by, __key, __side, *tiebreak)``, and one ``mapInArrow`` of the
+    streaming kernel. Build rows with a null time or entity are dropped
+    before the union. The kernel holds one Arrow batch plus the carry of
+    its trailing entity: <= 3 build rows, and for forward and nearest also
+    that entity's probes waiting for a later build row. Task memory thus
+    does not depend on the partition's or any conversation's size.
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"direction must be backward, forward or nearest: {direction!r}")
-    by_list, value_cols, _, _, _ = _plan(
+    if tolerance is not None and tolerance < 0:
+        raise ValueError(f"tolerance must not be negative: {tolerance!r}")
+    by_list, value_cols, rename, carried, out_schema = _plan(
         probe, build, by, left_on, right_on, value_cols
     )
+    probe_cols = list(probe.columns)
     tb = [t for t in tiebreak if t in build.columns]
-    # only the columns the merge reads travel with the build rows and carries
-    cols = build.select(*dict.fromkeys([*by_list, right_on, *value_cols, *tb]))
-    build_bytes = _size_estimate(cols)
-    sizes = (_size_estimate(probe), build_bytes)
-    default = int(probe.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    need = _partitions_for_size(sum(sizes) if min(sizes) > 0 else 0, default)
-    kw = dict(left_on=left_on, right_on=right_on, direction=direction,
-              tolerance=tolerance, allow_exact_matches=allow_exact_matches,
-              value_cols=value_cols, tb=tb,
-              tasks=need if need > default else None)
-    if 0 < build_bytes <= ASOF_TASK_BYTES:
-        return _merge_scan(probe, cols, by_list, **kw)
+    tb_names = [f"__tb{i}" for i in range(len(tb))]
 
-    b = cols.filter(F.col(right_on).isNotNull())
-    hot = _hot_slices(b, by_list, right_on)
-    p = _tag_slices(probe, hot, by_list, left_on)
-    b = _tag_slices(b, hot, by_list, right_on)
-    keys = [*by_list, "__slice"]
-
-    # ONE aggregation over hot build rows and hot probe-slice markers;
-    # max_by/min_by skip null ordering keys, so a probe-only slice
-    # aggregates to a null summary but still exists as a slice row
-    order = F.struct(us(F.col(right_on)), *[F.col(t) for t in tb])
-    marks = b.filter("__hot").select(
-        *keys, F.struct(*cols.columns).alias("__row"), order.alias("__ok"),
-        F.lit(False).alias("__probe"),
-    ).unionByName(
-        p.filter("__hot").select(*keys, F.lit(True).alias("__probe")),
-        allowMissingColumns=True,
+    # tagged union on a common wide schema: the JVM fills probe columns
+    # with nulls on the build side and vice versa. Expressions are SQL text
+    # (functions/sqltext)
+    l = probe.selectExpr(
+        "1 AS __side",
+        f"CAST({ident(left_on)} AS TIMESTAMP_NTZ) AS __key",
+        *map(ident, probe_cols),
     )
-    summaries = []
-    if direction != "forward":
-        summaries.append(F.max_by("__row", "__ok").alias("__last"))
-    if direction != "backward":
-        summaries.append(F.min_by("__row", "__ok").alias("__first"))
-    slices = marks.groupBy(*keys).agg(*summaries, F.max("__probe").alias("__probe"))
-
-    # one window over the slice rows (tiny even for the hottest entity):
-    # excluding the current row excludes exactly the same-slice summary
-    w = Window.partitionBy(*by_list).orderBy("__slice")
-    carry = []
-    if direction != "forward":
-        before = w.rowsBetween(Window.unboundedPreceding, -1)
-        carry.append(F.last("__last", ignorenulls=True).over(before))
-    if direction != "backward":
-        after = w.rowsBetween(1, Window.unboundedFollowing)
-        carry.append(F.first("__first", ignorenulls=True).over(after))
-    carries = (
-        slices.select(*keys, "__probe", F.array(*carry).alias("__carry"))
-        .filter("__probe")
-        .select(*keys, F.explode("__carry").alias("__row"))
-        .filter(F.col("__row").isNotNull())
-        .select(*keys, *[F.col("__row").getField(c).alias(c)
-                         for c in cols.columns if c not in by_list])
+    not_null = " AND ".join(f"{ident(c)} IS NOT NULL" for c in [right_on, *by_list])
+    r = build.filter(not_null).selectExpr(
+        "0 AS __side",
+        f"CAST({ident(right_on)} AS TIMESTAMP_NTZ) AS __key",
+        *map(ident, by_list),
+        *[f"{ident(c)} AS {ident(rename[c])}" for c in value_cols],
+        *[f"{ident(t)} AS {n}" for t, n in zip(tb, tb_names)],
     )
+    u = (l.unionByName(r, allowMissingColumns=True)
+         .repartitionByRange(*by_list)
+         .sortWithinPartitions(*by_list, "__key", "__side", *tb_names))
 
-    out = _merge_scan(
-        p.drop("__hot"), b.drop("__hot").unionByName(carries), keys, **kw
-    )
-    return out.drop("__slice")
+    # the union widens a ``by`` column whose type differs between the sides
+    # (probe int, build long -> long); the output keeps the probe's type
+    pfields, bfields = probe.schema, build.schema
+    narrow = {c: to_arrow_type(pfields[c].dataType) for c in by_list
+              if pfields[c].dataType != bfields[c].dataType}
+    kernel = functools.partial(
+        _scan, by=by_list, direction=direction,
+        tol=None if tolerance is None else tolerance * 1e6,
+        exact=allow_exact_matches, probe_cols=probe_cols,
+        carried=[f.name for f in carried], narrow=narrow, names=out_schema.names)
+    return u.mapInArrow(kernel, schema=out_schema)

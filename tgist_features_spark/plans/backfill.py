@@ -6,9 +6,9 @@ Pipeline (engine lifecycle, SURVEY.md §3.2):
     kernel over each range partition's Arrow batches: W1-W6 window
     features (numpy over the sorted ``conv_id`` groups), F6 text features
     (``ngram_stats_batch``) and the per-(entity, ts) feature vector -> J1
-    as-of merge against the probe/label side (one ``mapInArrow``
-    merge-scan: pandas matches entity keys, event times and row positions,
-    and the values stay in Arrow) -> sink + lineage.
+    as-of merge against the probe/label side (one ``mapInArrow`` streaming
+    merge-scan over entity-major order; the values stay in Arrow) -> sink +
+    lineage.
 
 Every feature is strictly backward-looking (frames end at -1, or at 0 only
 where the current turn's own content is legitimately visible at its own
@@ -33,6 +33,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from tgist_features_spark.functions.arrowu import concat, run_starts
 from tgist_features_spark.functions.text import NGRAM_STRUCT, ngram_stats_batch
 from tgist_features_spark.operators.asof import asof_join
 from tgist_features_spark.operators.ordering import canonical_order
@@ -79,17 +80,6 @@ def _feature_schema(schema: T.StructType) -> T.StructType:
         *NGRAM_STRUCT.fields,
         T.StructField("feature_vec", T.ArrayType(T.DoubleType()), False),
     ])
-
-
-def _conv_starts(conv: pa.Array, before: pa.Array | None) -> np.ndarray:
-    """True where a row starts a conversation: its ``conv_id`` differs from
-    the row before it, which for the first row is ``before`` (the previous
-    batch's last ``conv_id``; None at the start of the partition). Nulls
-    equal each other, as in a window's ``PARTITION BY``."""
-    both = conv if before is None else pa.concat_arrays([before, conv])
-    codes = pc.dictionary_encode(both, null_encoding="encode").indices.to_numpy()
-    new = np.diff(codes, prepend=-1) != 0
-    return new if before is None else new[1:]
 
 
 def _prefix(x: np.ndarray) -> np.ndarray:
@@ -162,13 +152,6 @@ def _features(rows: pa.RecordBatch, new: np.ndarray, gap_s: float) -> pa.RecordB
         [*rows.columns, *cols.values()], names=[*rows.schema.names, *cols])
 
 
-def _concat(batches: list[pa.RecordBatch]) -> pa.RecordBatch:
-    """One batch of ``batches``' rows (a plain slice when there is one)."""
-    if len(batches) == 1:
-        return batches[0]
-    return pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
-
-
 def _turn_kernel(batches, gap_s: float):
     """``turn_features``' ``mapInArrow`` function: one range partition's
     batches in canonical order in, the same rows with their features out.
@@ -184,20 +167,20 @@ def _turn_kernel(batches, gap_s: float):
         if b.num_rows == 0:
             continue
         conv = b.column("conv_id")
-        new = _conv_starts(conv, before)
-        before = conv.slice(b.num_rows - 1)
+        new = run_starts([conv], before)
+        before = [conv.slice(b.num_rows - 1)]
         starts = np.flatnonzero(new)
         if len(starts):
             cut = int(starts[-1])
             if held or cut:
-                yield _features(_concat([*held, b.slice(0, cut)]),
+                yield _features(concat([*held, b.slice(0, cut)]),
                                 np.concatenate([*flags, new[:cut]]), gap_s)
             held, flags = [], []
             b, new = b.slice(cut), new[cut:]
         held.append(b)
         flags.append(new)
     if held:
-        yield _features(_concat(held), np.concatenate(flags), gap_s)
+        yield _features(concat(held), np.concatenate(flags), gap_s)
 
 
 def turn_features(df: DataFrame, gap_s: float = 1800.0) -> DataFrame:
@@ -233,11 +216,10 @@ def backfill_features(features: DataFrame, queries: DataFrame) -> DataFrame:
     backward direction, exact matches allowed — a feature stamped at ts is
     valid AT ts).
 
-    The join is ``asof_join``: a feature table that fits one merge-scan task
-    runs the merge-scan with no extra job; a bigger one has its hot
-    conversations time-sliced (same rows). ``features`` should be persisted
-    (or read from a table), because the as-of's range sampling and any hot
-    conversation aggregation each read it again; ``run_backfill`` does that.
+    The join is ``asof_join``: one range exchange and one streaming
+    merge-scan whose task memory does not grow with a hot conversation.
+    ``features`` should be persisted (or read from a table), because the
+    as-of's range sampling reads it again; ``run_backfill`` does that.
     """
     return asof_join(
         queries, features, by="conv_id", left_on="query_ts", right_on="ts",
@@ -249,7 +231,8 @@ def run_backfill(
     transcripts: DataFrame, probes: DataFrame, output: str, gap_s: float = 1800.0
 ) -> None:
     """The backfill pass: ``turn_features`` of ``transcripts``, persisted
-    for the as-of's several reads, ``backfill_features`` of ``probes`` and
+    for the as-of's two reads (range sampling and the exchange),
+    ``backfill_features`` of ``probes`` and
     one parquet write to ``output`` (``"noop"``: Spark's noop sink, for
     timing). The features are unpersisted even when the write fails."""
     feats = turn_features(transcripts, gap_s=gap_s).persist()
