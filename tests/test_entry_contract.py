@@ -91,7 +91,7 @@ def test_driver_window_composition():
     driver row yet — all 37 round-6 additions; (2) every key whose
     backing FUNCTION changed after the r05 driver run (ADVICE
     floor-div/validation fixes, components cost cut, cluster_sizes
-    cap, multimodal GIF fallback); (3) six session-4 keys — never-
+    cap, multimodal_bytes dispatch); (3) six session-4 keys — never-
     checked first outranks refreshing r04-green untouched keys.
     Guards against accidental reordering."""
     ks = list(entry_mod.queries())

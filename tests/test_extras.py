@@ -1,4 +1,5 @@
-"""Multimodal plumbing, dedup/similarity sanity, partition-pruned scans."""
+"""Dedup/similarity sanity, partition-pruned scans, the JSONL reader and
+TableIO (compaction, upsert, ORC, schema evolution)."""
 
 from __future__ import annotations
 
@@ -6,14 +7,8 @@ import io as _io
 import contextlib
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
-from tgist_features_spark.functions.multimodal import (
-    frame_sample_stub,
-    image_features,
-    synthesize_media,
-)
 from tgist_features_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
@@ -21,28 +16,6 @@ from tgist_features_spark.operators.dedup import (
 )
 from tgist_features_spark.operators.similarity import cosine_topk, queries_from_ids
 from tgist_features_spark.sources.table_io import TableIO
-
-
-def test_image_features_plumbing(spark):
-    media = synthesize_media(spark, n=30, seed=7)
-    out = image_features(media).toPandas()
-    assert len(out) == 30
-    assert out["n_bytes"].notna().all()
-    assert out["digest"].str.len().eq(16).all()
-    assert out["thumb"].map(len).eq(8).all()
-    # determinism: same payload -> same features
-    out2 = image_features(media).toPandas().sort_values("media_id")
-    out = out.sort_values("media_id")
-    assert (out["digest"].to_numpy() == out2["digest"].to_numpy()).all()
-
-
-def test_frame_sampling(spark):
-    media = synthesize_media(spark, n=30, seed=7)
-    frames = frame_sample_stub(media, every_s=1.0).toPandas()
-    vids = media.filter("modality = 'video'").toPandas()
-    expected = int(vids["meta_duration_s"].apply(lambda d: max(1, int(d // 1))).sum())
-    assert len(frames) == expected
-    assert (frames["frame_ts_s"] >= 0).all()
 
 
 def test_exact_dedup_finds_duplicates(spark):
@@ -182,136 +155,6 @@ def test_doc_features_fused_plan(spark):
     assert "Exchange" not in buf.getvalue()
 
 
-def test_audio_and_resize_plumbing(spark):
-    from tgist_features_spark.functions.multimodal import (
-        audio_features,
-        resize_images,
-        synthesize_media,
-    )
-
-    media = synthesize_media(spark, n=48)
-    n_audio = media.filter("modality = 'audio'").count()
-    n_image = media.filter("modality = 'image'").count()
-
-    au = audio_features(media).toPandas()
-    assert len(au) == n_audio
-    assert (au["rms"] >= 0).all() and au["n_bytes"].notna().all()
-    # deterministic across reruns (stub decode is content-derived)
-    au2 = audio_features(media).toPandas()
-    assert au.sort_values("media_id").reset_index(drop=True).equals(
-        au2.sort_values("media_id").reset_index(drop=True)
-    )
-
-    rz = resize_images(media, out_w=4, out_h=4).toPandas()
-    assert len(rz) == n_image
-    assert (rz["pixels"].str.len() == 16).all(), "fixed output tensor shape"
-    assert (rz["out_w"] == 4).all() and (rz["out_h"] == 4).all()
-
-
-def test_audio_null_payload_passes_metadata_through(spark):
-    import pandas as pd
-
-    from tgist_features_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
-        audio_features,
-    )
-
-    pdf = pd.DataFrame(
-        [(1, "audio", None, "audio/wav", None, None, 300.0)],
-        columns=[f.name for f in MEDIA_SCHEMA.fields],
-    )
-    out = audio_features(spark.createDataFrame(pdf, MEDIA_SCHEMA)).toPandas()
-    assert len(out) == 1
-    assert out["duration_s"].iloc[0] == 300.0, "metadata must pass through"
-    assert pd.isna(out["rms"].iloc[0]) and pd.isna(out["n_bytes"].iloc[0])
-
-
-def test_ppm_roundtrip_and_real_image_decode(spark):
-    """Images decode for REAL: dims come from the PPM header (must equal
-    the source metadata), mean_intensity is the actual pixel mean, and the
-    thumb is an area-average of actual pixels (constant image -> constant
-    thumb)."""
-    import numpy as np
-
-    from tgist_features_spark.functions.multimodal import (
-        decode_png,
-        decode_ppm,
-        encode_png,
-        encode_ppm,
-        synthesize_media,
-    )
-
-    rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, size=(17, 23, 3), dtype=np.uint8)
-    assert (decode_ppm(encode_ppm(img)) == img).all()
-    assert (decode_png(encode_png(img)) == img).all()
-    assert decode_ppm(b"nonsense bytes") is None
-    assert decode_png(b"nonsense bytes") is None
-
-    media = synthesize_media(spark, n=30, seed=7)
-    out = image_features(media.filter("modality = 'image'")).toPandas()
-    meta = media.filter("modality = 'image'").select(
-        "media_id", "meta_w", "meta_h", "payload"
-    ).toPandas()
-    m = out.merge(meta, on="media_id")
-    assert (m["width"] == m["meta_w"]).all()
-    assert (m["height"] == m["meta_h"]).all()
-    mimes = set(meta.merge(
-        media.filter("modality = 'image'").select("media_id", "mime").toPandas(),
-        on="media_id",
-    )["mime"])
-    assert mimes == {"image/x-portable-pixmap", "image/png", "image/jpeg"}, mimes
-    from tgist_features_spark.functions.jpegcodec import decode_jpeg
-
-    for r in m.itertuples():
-        raw = bytes(r.payload)
-        pix = decode_ppm(raw)
-        if pix is None:
-            pix = decode_png(raw)
-        if pix is None:
-            pix = decode_jpeg(raw)  # lossy codec, but the SAME decode the
-            # kernel ran — mean must still match ITS pixels exactly
-        assert abs(r.mean_intensity - pix.mean(axis=2).mean()) < 1e-9
-
-    # constant image -> constant resize output (area-average correctness)
-    from tgist_features_spark.functions.multimodal import _resize_gray
-
-    const = np.full((13, 9), 100.0)
-    assert np.allclose(_resize_gray(const, 4, 4), 100.0)
-    assert np.allclose(_resize_gray(const, 20, 20), 100.0)  # upsample path
-
-
-def test_wav_roundtrip_and_real_audio_decode(spark):
-    """Audio decodes for REAL: duration must equal n_samples/rate from the
-    RIFF header (not the source metadata), and rms reflects the actual
-    signal amplitude."""
-    import numpy as np
-
-    from tgist_features_spark.functions.multimodal import (
-        audio_features,
-        decode_wav_pcm16,
-        encode_wav_pcm16,
-        synthesize_media,
-    )
-
-    sig = (np.sin(np.linspace(0, 40, 1600)) * 16000).astype(np.int16)
-    rate, back = decode_wav_pcm16(encode_wav_pcm16(sig, 8000))
-    assert rate == 8000 and (back == sig).all()
-    assert decode_wav_pcm16(b"RIFFjunk") is None
-
-    media = synthesize_media(spark, n=30, seed=7)
-    out = audio_features(media).toPandas()
-    meta = media.filter("modality = 'audio'").select(
-        "media_id", "payload"
-    ).toPandas()
-    m = out.merge(meta, on="media_id")
-    for r in m.itertuples():
-        rate, pcm = decode_wav_pcm16(bytes(r.payload))
-        assert abs(r.duration_s - len(pcm) / rate) < 1e-9
-        # synthesized signal is a 0.5-amplitude sine + noise: rms ~0.35
-        assert 0.2 < r.rms < 0.6
-
-
 def test_read_jsonl_quarantines_corrupt_lines(spark, tmp_path):
     from pyspark.sql import types as T
 
@@ -373,90 +216,6 @@ def test_table_io_compact_preserves_data_and_layout(spark, tiny_pdf, tmp_path):
     assert (after["text"].to_numpy() == before["text"].to_numpy()).all()
 
 
-def test_read_csv_quarantines_corrupt_lines(spark, tmp_path):
-    """CSV sidecar discipline: declared schema, headers dropped, malformed
-    and type-violating lines quarantined (not silently nulled), and a
-    write_csv round-trip comes back clean."""
-    from pyspark.sql import types as T
-
-    from tgist_features_spark.sources.csvio import read_csv, write_csv
-
-    p = tmp_path / "meta"
-    p.mkdir()
-    (p / "a.csv").write_text(
-        "doc_id,label\n1,pos\n2,neg\nnot,a,valid,row,xx\nbadint,pos\n3,pos\n"
-    )
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("label", T.StringType())]
-    )
-    clean, corrupt = read_csv(spark, str(p), schema)
-    got = sorted(tuple(r) for r in clean.collect())
-    assert got == [(1, "pos"), (2, "neg"), (3, "pos")]
-    bad = sorted(r[0] for r in corrupt.collect())
-    assert bad == ["badint,pos", "not,a,valid,row,xx"]
-
-    out = tmp_path / "roundtrip"
-    write_csv(clean, str(out))
-    clean2, corrupt2 = read_csv(spark, str(out), schema)
-    assert sorted(tuple(r) for r in clean2.collect()) == got
-    assert corrupt2.count() == 0
-
-
-def test_read_csv_header_rules_by_schema_kind(spark, tmp_path):
-    """Header-drop scoping (review finding): with a non-string field the
-    header is removed from the QUARANTINE (it can never parse as data),
-    near-header data rows survive; with an all-string schema the
-    equality drop applies pre-parse (documented trade)."""
-    from pyspark.sql import types as T
-
-    from tgist_features_spark.sources.csvio import read_csv
-
-    p = tmp_path / "meta2"
-    p.mkdir()
-    # doc_id is LONG: the header line cannot be a data row
-    (p / "a.csv").write_text("doc_id,label\n1,label\n2,doc_id\n")
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("label", T.StringType())]
-    )
-    clean, corrupt = read_csv(spark, str(p), schema)
-    assert sorted(tuple(r) for r in clean.collect()) == [(1, "label"), (2, "doc_id")]
-    assert corrupt.count() == 0  # header neither data nor corrupt
-
-    q = tmp_path / "meta3"
-    q.mkdir()
-    # all-string schema: equality is the only header rule — the data row
-    # identical to the header rendering is dropped WITH the header
-    (q / "a.csv").write_text("k,v\nx,y\nk,v\nk,w\n")
-    s2 = T.StructType(
-        [T.StructField("k", T.StringType()), T.StructField("v", T.StringType())]
-    )
-    clean2, corrupt2 = read_csv(spark, str(q), s2)
-    assert sorted(tuple(r) for r in clean2.collect()) == [("k", "w"), ("x", "y")]
-    assert corrupt2.count() == 0
-
-
-def test_read_csv_type_parseable_header_names(spark, tmp_path):
-    """Review finding: a schema whose column NAMES parse as their declared
-    types (boolean column literally named 'true') makes the header line
-    indistinguishable from data — the plan-build probe must detect that
-    and fall back to the pre-parse equality drop, so the header never
-    leaks into the clean output."""
-    from pyspark.sql import types as T
-
-    from tgist_features_spark.sources.csvio import read_csv
-
-    p = tmp_path / "hdr"
-    p.mkdir()
-    (p / "a.csv").write_text("true,name\ntrue,alice\nfalse,bob\n")
-    schema = T.StructType(
-        [T.StructField("true", T.BooleanType()), T.StructField("name", T.StringType())]
-    )
-    clean, corrupt = read_csv(spark, str(p), schema)
-    got = sorted((bool(r[0]), r[1]) for r in clean.collect())
-    assert got == [(False, "bob"), (True, "alice")]  # header row NOT data
-    assert corrupt.count() == 0
-
-
 def test_table_io_upsert_rejects_null_keys(spark, tmp_path):
     """Review finding: NULL merge keys can never match the replace
     anti-join (old NULL rows would accumulate) and count_distinct would
@@ -507,94 +266,6 @@ def test_table_io_orc_roundtrip(spark, tmp_path):
     pd.testing.assert_frame_equal(after[sorted(after.columns)], b[sorted(b.columns)])
     with _pt.raises(ValueError):
         TableIO(spark, str(tmp_path), fmt="avro")
-
-
-def test_png_decode_all_filter_types_and_colortypes():
-    """The PNG decoder must invert all five scanline filters (a foreign
-    encoder picks per-row filters freely) and handle gray + RGBA inputs;
-    interlaced files return None (decode-or-fallback contract)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from tgist_features_spark.functions.multimodal import decode_png
-
-    def chunk(t, d):
-        body = t + d
-        return struct.pack(">I", len(d)) + body + struct.pack(
-            ">I", zlib.crc32(body) & 0xFFFFFFFF
-        )
-
-    def paeth(a, b, c):
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-
-    rng = np.random.default_rng(9)
-    h, w = 7, 5
-    img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-    flat = img.reshape(h, w * 3).astype(np.int32)
-    raw = b""
-    prev = np.zeros(w * 3, np.int32)
-    for y in range(h):
-        f = y % 5
-        cur = flat[y]
-        enc = cur.copy()
-        if f == 1:
-            for x in range(w * 3 - 1, 2, -1):
-                enc[x] = (cur[x] - cur[x - 3]) % 256
-        elif f == 2:
-            enc = (cur - prev) % 256
-        elif f == 3:
-            for x in range(w * 3):
-                left = cur[x - 3] if x >= 3 else 0
-                enc[x] = (cur[x] - ((left + prev[x]) >> 1)) % 256
-        elif f == 4:
-            for x in range(w * 3):
-                a = cur[x - 3] if x >= 3 else 0
-                b = prev[x]
-                c = prev[x - 3] if x >= 3 else 0
-                enc[x] = (cur[x] - paeth(a, b, c)) % 256
-        raw += bytes([f]) + bytes(enc.astype(np.uint8))
-        prev = cur
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    assert np.array_equal(decode_png(png), img)
-
-    g = rng.integers(0, 256, size=(4, 4), dtype=np.uint8)
-    raw = b"".join(b"\x00" + bytes(g[y]) for y in range(4))
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 4, 4, 8, 0, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    gg = decode_png(png)
-    assert gg.shape == (4, 4, 3) and np.array_equal(gg[:, :, 0], g)
-
-    rgba = rng.integers(0, 256, size=(3, 3, 4), dtype=np.uint8)
-    raw = b"".join(b"\x00" + bytes(rgba[y].ravel()) for y in range(3))
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 3, 3, 8, 6, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    assert np.array_equal(decode_png(png), rgba[:, :, :3])
-
-    # interlaced -> None
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 3, 3, 8, 2, 0, 0, 1))
-        + chunk(b"IDAT", zlib.compress(b"\x00" * 30))
-        + chunk(b"IEND", b"")
-    )
-    assert decode_png(png) is None
 
 
 def test_table_io_compact_heals_post_swap_crash(spark, tiny_pdf, tmp_path):
@@ -756,101 +427,6 @@ def test_bounded_range_join_rejects_zero_width_window(spark):
         bounded_range_join(df, df, "a", "a", "b", "b", 0.0, 2e-7)
 
 
-# ------------------------------------------------- baseline JPEG codec
-
-
-def test_jpeg_handcrafted_single_block_decodes_to_known_value():
-    """INDEPENDENT decoder check (no encoder pipeline involved): a
-    hand-assembled baseline JPEG — one 8x8 grayscale block, all-ones
-    quant table, standard Annex K Huffman tables, DC coefficient 80,
-    no AC — must decode to a uniform 128 + 80/8 = 138 image (orthonormal
-    IDCT of a DC-only block is flat)."""
-    import numpy as np
-
-    from tgist_features_spark.functions.jpegcodec import (
-        K_AC_LUMA,
-        K_DC_LUMA,
-        _BitWriter,
-        _encode_codes,
-        decode_jpeg,
-    )
-
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") + payload
-
-    b = bytearray(b"\xff\xd8")
-    b += seg(0xDB, bytes([0x00]) + bytes([1] * 64))  # quant: all ones
-    b += seg(0xC0, bytes([8]) + (8).to_bytes(2, "big") + (8).to_bytes(2, "big")
-             + bytes([1, 1, 0x11, 0]))  # 8x8, 1 component, 1x1 sampling
-    b += seg(0xC4, bytes([0x00]) + bytes(K_DC_LUMA[0]) + bytes(K_DC_LUMA[1]))
-    b += seg(0xC4, bytes([0x10]) + bytes(K_AC_LUMA[0]) + bytes(K_AC_LUMA[1]))
-    b += seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    bw = _BitWriter()
-    dc = _encode_codes(*K_DC_LUMA)
-    ac = _encode_codes(*K_AC_LUMA)
-    code, ln = dc[7]        # DC category 7 (value 80 needs 7 bits)
-    bw.put(code, ln)
-    bw.put(80, 7)           # positive magnitude is its own code
-    code, ln = ac[0x00]     # EOB
-    bw.put(code, ln)
-    bw.flush()
-    b += bw.out
-    b += b"\xff\xd9"
-    out = decode_jpeg(bytes(b))
-    assert out is not None and out.shape == (8, 8, 3)
-    assert (out == 138).all(), np.unique(out)
-
-
-def test_jpeg_roundtrip_all_modes():
-    """encode->decode across 4:4:4, 4:2:0 and restart-marker streams:
-    exact dims, high PSNR on a smooth image, and a flat image survives
-    EXACTLY (every DCT coefficient lands on a representable integer)."""
-    import numpy as np
-
-    from tgist_features_spark.functions.jpegcodec import decode_jpeg, encode_jpeg
-
-    yy, xx = np.mgrid[0:24, 0:40]
-    img = np.dstack([
-        np.minimum(xx * 5, 255), np.minimum(yy * 8, 255),
-        np.minimum((xx + yy) * 3, 255),
-    ]).astype(np.uint8)
-    for q, sub, ri in [(90, False, 0), (90, True, 0), (75, False, 2), (95, True, 3)]:
-        out = decode_jpeg(encode_jpeg(img, quality=q, subsample=sub,
-                                      restart_interval=ri))
-        assert out is not None and out.shape == img.shape, (q, sub, ri)
-        mse = ((out.astype(float) - img.astype(float)) ** 2).mean()
-        psnr = 10 * np.log10(255**2 / mse) if mse else 99.0
-        assert psnr > 30.0, (q, sub, ri, psnr)
-
-    flat = np.full((16, 16, 3), 200, dtype=np.uint8)
-    out = decode_jpeg(encode_jpeg(flat, quality=90))
-    assert out is not None and int(np.abs(out.astype(int) - 200).max()) <= 1
-
-    # odd (non-multiple-of-8, non-multiple-of-16) dims through 4:2:0
-    odd = np.dstack([np.minimum(np.mgrid[0:13, 0:21][1] * 9, 255)] * 3).astype(np.uint8)
-    out = decode_jpeg(encode_jpeg(odd, quality=90, subsample=True))
-    assert out is not None and out.shape == odd.shape
-
-
-def test_jpeg_decoder_rejects_non_baseline_and_garbage():
-    from tgist_features_spark.functions.jpegcodec import decode_jpeg, encode_jpeg
-    import numpy as np
-
-    assert decode_jpeg(b"not a jpeg at all") is None
-    assert decode_jpeg(b"\x89PNG\r\n\x1a\n") is None
-    good = encode_jpeg(np.zeros((8, 8, 3), dtype=np.uint8))
-    # flip SOF0 to SOF2 (progressive): must refuse, not mis-decode
-    prog = good.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    assert decode_jpeg(prog) is None
-    # truncated entropy data: the decoder either refuses (None) or pads
-    # the missing bits with zeros and still returns a WELL-FORMED image —
-    # never an exception, never a malformed value
-    out = decode_jpeg(good[: len(good) // 2])
-    assert out is None or (
-        out.dtype == np.uint8 and out.ndim == 3 and out.shape[2] == 3
-    )
-
-
 def test_table_io_zstd_compression_and_schema_evolution(spark, tmp_path):
     """Round-5 TableIO options: (a) compression='zstd' actually produces
     zstd files (file names carry the codec) that roundtrip bit-equal;
@@ -889,58 +465,3 @@ def test_table_io_zstd_compression_and_schema_evolution(spark, tmp_path):
     assert old_rows["quality"].isna().all()
     new_rows = merged[~merged["doc_id"].str.startswith("c")]
     assert sorted(new_rows["quality"]) == [0.5, 0.9]
-
-
-def test_gif_roundtrip_all_modes():
-    """GIF codec (round 6): encode->decode is pixel-exact across
-    palette sizes, odd shapes, interlace, and streams long enough to
-    force 12-bit LZW code growth and a table-overflow clear; extension
-    blocks are skipped; garbage is refused."""
-    import numpy as np
-
-    from tgist_features_spark.functions.gifcodec import decode_gif, encode_gif
-
-    rng = np.random.default_rng(31)
-    for n_colors in (2, 5, 16, 256):
-        for shape in ((1, 1), (7, 3), (33, 17)):
-            pal = rng.integers(0, 256, (n_colors, 3), dtype=np.uint8)
-            idx = rng.integers(0, n_colors, shape, dtype=np.uint8)
-            for il in (False, True):
-                got = decode_gif(encode_gif(idx, pal, interlace=il))
-                assert got is not None and np.array_equal(got, pal[idx]), (
-                    n_colors, shape, il)
-    # 12-bit growth + overflow clear (200x300 random of 256 colors
-    # exhausts the 4096-entry table several times)
-    pal = rng.integers(0, 256, (256, 3), dtype=np.uint8)
-    idx = rng.integers(0, 256, (200, 300), dtype=np.uint8)
-    assert np.array_equal(decode_gif(encode_gif(idx, pal)), pal[idx])
-    # a Graphic Control Extension before the image descriptor is skipped
-    b = encode_gif(idx[:8, :8], pal)
-    desc = 13 + 3 * 256  # image descriptor sits after header + 256-color GCT
-    with_ext = b[:desc] + b"\x21\xf9\x04\x00\x00\x00\x00\x00" + b[desc:]
-    assert np.array_equal(decode_gif(with_ext), pal[idx[:8, :8]])
-    # refusals
-    assert decode_gif(b"GIF89a" + b"\x00" * 5) is None
-    assert decode_gif(b"not a gif at all") is None
-    assert decode_gif(b[:20]) is None
-
-
-def test_gif_flows_through_image_features(spark):
-    """The image feature kernel decodes GIF payloads for REAL: width,
-    height and mean intensity come from the actual pixels."""
-    import numpy as np
-    import pandas as pd
-
-    from tgist_features_spark.functions.gifcodec import encode_gif
-    from tgist_features_spark.functions.multimodal import image_features
-
-    rng = np.random.default_rng(33)
-    pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
-    idx = rng.integers(0, 16, (24, 40), dtype=np.uint8)
-    payload = encode_gif(idx, pal)
-    df = spark.createDataFrame(
-        pd.DataFrame({"media_id": [1], "payload": [payload]}))
-    row = image_features(df).first()
-    assert (row["width"], row["height"]) == (40, 24)
-    want_mean = float(pal[idx].mean(axis=2).mean())
-    assert abs(row["mean_intensity"] - want_mean) < 1e-6

@@ -1,7 +1,7 @@
 """Driver-contract query registry (SURVEY.md §3.3).
 
 One entry per implemented operator from SURVEY.md §2 plus the training-data
-ops (dedup / similarity / text analysis / multimodal). Each Spark query has
+ops (dedup / similarity / text analysis). Each Spark query has
 a DuckDB oracle that computes the same result over the same parquet —
 except the genuinely non-SQL-expressible ones (MinHash/SimHash/LSH,
 approx_count_distinct), which ship without an oracle (rows-only check).
@@ -4466,7 +4466,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # first-time evidence beats refreshing already-green keys;
     # (2) the 7 keys whose backing functions changed since the r05
     # driver run (ADVICE floor-div/validation fixes, components cost
-    # cut, cluster_sizes cap, multimodal GIF fallback) — their r05
+    # cut, cluster_sizes cap, multimodal_bytes dispatch) — their r05
     # rows predate the code they now run;
     # (3) the oldest-evidence r04 keys that still fit.
     # Keys rotated out are r04/r05-green with backing functions

@@ -1,10 +1,10 @@
 """TableIO — the Iceberg seam (SURVEY.md §1.2).
 
 The design point is Iceberg tables (snapshot-pinned scans, bucket(conv_id) x
-day(ts) partition layout, metadata-level pruning). No iceberg-spark-runtime
-jar is installed in this sandbox, so the seam degrades to plain parquet with
-a content-derived snapshot surrogate. Engine logic above this layer is
-identical either way — only scan/commit differ.
+day(ts) partition layout, metadata-level pruning). This layer has no
+Iceberg path: it writes plain parquet (or ORC) with a content-derived
+snapshot surrogate. Engine logic above this layer would be identical on
+Iceberg — only scan/commit differ.
 
 At the 100 TB design point the layout is:
 
@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 
 class TableIO:
-    """Thin scan/commit layer: Iceberg when available, parquet fallback.
+    """Thin scan/commit layer over partitioned parquet (or ORC) directories.
 
     ``fmt`` selects the columnar file format ("parquet" default, "orc"
     supported — both JVM-native, predicate-pushdown + column-pruning
@@ -56,21 +56,12 @@ class TableIO:
         self.n_buckets = n_buckets
         self.fmt = fmt
         self.compression = compression
-        self.iceberg = self._iceberg_available(spark)
 
     def _w(self, writer):
         """Apply table-level write options (compression codec)."""
         if self.compression:
             writer = writer.option("compression", self.compression)
         return writer
-
-    @staticmethod
-    def _iceberg_available(spark: SparkSession) -> bool:
-        try:
-            spark._jvm.org.apache.iceberg.Schema  # noqa: SLF001
-            return True
-        except Exception:
-            return False
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -370,9 +361,8 @@ class TableIO:
 
     def snapshot_id(self, name: str) -> str:
         """Snapshot surrogate for lineage rows: a hash over the file
-        listing (relative path + size + mtime). With Iceberg installed this
-        would be the table's snapshot-id (self.iceberg gates that path once
-        a runtime jar exists); the surrogate is equivalent for resume
+        listing (relative path + size + mtime). On Iceberg this would be
+        the table's snapshot-id; the surrogate is equivalent for resume
         purposes as long as rewrites touch mtimes — which every parquet
         writer does."""
         p = self.path(name)
